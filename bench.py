@@ -20,8 +20,8 @@ warm-up absorbs first-call JIT/codegen/python-worker spin-up that the
 driver's cold 3-sample protocol otherwise reports as a monotone
 warm-in decay (r4 driver run: bm25_queries 44.4 -> 12.6 -> 4.6 s).
 This VM also shows hypervisor-steal waves that can 10x one sample
-(35% cumulative steal in /proc/stat; scripts/diag_steal.py
-demonstrates 2s work measuring 33s inside a wave), so a single sample
+(35% cumulative steal in /proc/stat; bench_runs/r4_steal_correlation.json
+records one fixed bm25 loop measuring 2.6-11.9 s), so a single sample
 — or a best-of-2 — is not evidence.
 
 Scaling evidence (N vs 4N cores) is produced by bench_scaling.py -> BENCH.md.

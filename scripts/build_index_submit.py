@@ -32,6 +32,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import re
 import sys
 import time
 
@@ -144,8 +145,12 @@ def main(argv: list[str] | None = None) -> None:
     fp_file = f"{args.output}/_fingerprint"
     if args.resume and fs_exists(spark, fp_file):
         saved = fs_read_text(spark, fp_file).strip()
-        # reuse only if the saved run covered the SAME input+analyzer
-        run_fp = saved if saved.startswith(fingerprint) else fingerprint
+        # reuse only if the saved run covered the SAME input+analyzer:
+        # the bare fingerprint or it plus a nonce, never a longer one
+        # (a plain fingerprint is a prefix of its analyzer variants)
+        run_fp = (saved if re.fullmatch(re.escape(fingerprint)
+                                        + r"(:\d+)?", saved)
+                  else fingerprint)
     elif args.resume:
         run_fp = fingerprint
     else:

@@ -231,6 +231,17 @@ def test_batched_bool_matches_per_query(idx):
     for q in queries:
         single = [r.doc_id for r in idx.search_bool(q).collect()]
         assert batched.get(q, []) == single, repr(q)
+    # int ids come back as bigint query_ids, not their string forms
+    texts = {0: "fox dog", 7: "qui* *ox"}
+    typed = idx.search_bool_many(texts)
+    assert dict(typed.dtypes)["query_id"] == "bigint"
+    by_id = {}
+    for r in typed.collect():
+        by_id.setdefault(r.query_id, []).append(r.doc_id)
+    assert set(by_id) <= set(texts) and by_id
+    for qid, q in texts.items():
+        single = [r.doc_id for r in idx.search_bool(q).collect()]
+        assert by_id.get(qid, []) == single, qid
 
 
 def test_prefetched_serving_launches_no_stats_job(spark, idx):

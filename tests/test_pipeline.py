@@ -1111,3 +1111,13 @@ def test_build_cli_resume_after_crashed_default_run(spark, tmp_path,
     summary = _json.loads(line)
     assert summary["stages_executed"] == []
     assert len(summary["stages_skipped"]) >= 3
+    # an analyzer run, then a plain --resume: the analyzer run's saved
+    # fingerprint EXTENDS the plain one, but its stemmed stages must
+    # not be reused by a run without the analyzer
+    cli.main(["--input", src, "--output", out, "--shards", "4",
+              "--skip-segments", "--stem", "light"])
+    capsys.readouterr()
+    cli.main(["--input", src, "--output", out, "--shards", "4",
+              "--skip-segments", "--resume"])
+    line = capsys.readouterr().out.strip().splitlines()[-1]
+    assert "docs" in _json.loads(line)["stages_executed"]

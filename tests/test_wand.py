@@ -338,6 +338,58 @@ def test_batched_wand_matches_per_query(seg):
     assert [(r.doc_id, round(r.score, 9)) for r in named] == [
         (r.doc_id, round(r.score, 9)) for r in
         seg.search_bm25("word1 word7", 5).collect()]
+    # int ids come back as bigint query_ids
+    texts = {0: "word1 word7", 7: "word2 word3 word11"}
+    typed = seg.search_bm25_many(texts, 5)
+    assert dict(typed.dtypes)["query_id"] == "bigint"
+    by_id = {}
+    for r in typed.collect():
+        by_id.setdefault(r.query_id, []).append((r.doc_id,
+                                                 round(r.score, 9)))
+    assert by_id == {qid: [(r.doc_id, round(r.score, 9)) for r in
+                           seg.search_bm25(q, 5).collect()]
+                     for qid, q in texts.items()}
+    # mixed ids are refused before any Spark job runs
+    def mixed():
+        with pytest.raises(TypeError, match="all int or all str"):
+            seg.search_bm25_many({0: "word1", "b": "word7"}, 5)
+
+    assert _jobs_run(seg.spark, mixed) == 0
+
+
+def _jobs_run(spark, action) -> int:
+    """Spark jobs launched while ``action()`` runs (job-group count)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_prepared_single_wand_query_is_one_job(seg):
+    """A prepared single WAND query is ONE Spark job: the per-shard
+    cogroup plus a TakeOrderedAndProject reduce — never the batched
+    path's window reduce, which costs extra jobs for a single query."""
+    import contextlib
+    import copy
+    import io
+
+    grouped = copy.copy(seg)
+    grouped.prepare_for_queries(query_groups=2)
+    q = "word2 word3 word11"
+    grouped.search_bm25(q, 10).collect()  # warm the df cache
+    assert _jobs_run(grouped.spark,
+                     lambda: grouped.search_bm25(q, 10).collect()) == 1
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        grouped.search_bm25(q, 10).explain("formatted")
+    assert "TakeOrderedAndProject" in buf.getvalue()
+    assert "Window" not in buf.getvalue()
 
 
 def test_query_group_coalescing_is_rank_identical(seg):

@@ -10,13 +10,15 @@ columnar: an Iceberg/parquet table
           meta STRUCT<width INT, height INT, n_frames INT,
                       sample_rate INT, codec STRING>)
 
-All Spark-side plumbing here is REAL and tested: schemas, Arrow batch
-shapes, mapInPandas signatures, partitioning. The pixel/sample DECODING is
-stubbed (this container ships no image/audio libs) behind a deterministic
-fake — ``payload`` carries a self-describing header written by
-``synthesize_media`` and each "decoder" parses it; swapping in Pillow/
-ffmpeg is a one-function change (`decode_rgb` / `decode_pcm`), the
-dataflow does not move.
+Decoding is real for the baseline formats, in pure Python with no
+image/audio library: 24-bit BMP, binary PPM, 8-bit PNG, baseline JPEG,
+GIF and uncompressed TIFF images (``decode_rgb``), 16-bit PCM WAV audio
+(``decode_pcm``); ``sample_frames`` splits MJPEG/DIB AVI and GIF
+video into frames those decoders read. Payloads written by
+``synthesize_media`` use a deterministic self-describing container
+(TIXM) that both decoders also read. Any other format goes to Pillow /
+soundfile when importable, else raises NotImplementedError; those two
+functions are the only decode seam, so the dataflow does not move.
 
 Design for scale: payloads never pass through a shuffle — every operator
 is a narrow mapInPandas/pandas_udf over the scan, so Tungsten only ever
@@ -1037,7 +1039,7 @@ def image_features(media: DataFrame) -> DataFrame:
     """(doc_id, feature ARRAY<FLOAT>) — decode + fixed-width feature
     vector (channel means/stds + 2x2 spatial means over the fake decode).
     The batch shape/UDF signature is exactly what a CLIP-style extractor
-    uses; only ``decode_rgb`` is a stub."""
+    uses; ``decode_rgb`` is the decode seam."""
     def feat(batches):
         import pandas as pd
 

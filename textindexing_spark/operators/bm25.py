@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, functions as F, types as T
 
 from textindexing_spark.config import IndexConfig
 from textindexing_spark.operators import codec
+from textindexing_spark.operators.query import query_set
 
 # per-block skip metadata: (max_tf, min_dl) give the query-time block
 # upper bound idf * partial(max_tf, min_dl) — BM25's tf-term is monotone
@@ -690,126 +691,42 @@ class SegmentIndex:
     def idf(self, df_t: int) -> float:
         return math.log(1.0 + (self.n_docs - df_t + 0.5) / (df_t + 0.5))
 
-    def search_bm25(self, query_text: str, k: int | None = None,
-                    prune: bool = True,
-                    after: tuple[float, int] | None = None) -> DataFrame:
-        """Block-max-WAND top-k: per-shard pruned evaluation + global
-        top-k reduce. Returns (doc_id, score) ordered score desc, doc_id.
-
-        ``after=(score, doc_id)``: keyset pagination — return the top-k
-        ranked strictly after the cursor (pass the previous page's last
-        row VERBATIM: raw double score, not a rounded display value).
-        Deep paging stays O(k) rows per page per shard — never the
-        offset-style k·page_number — because eligibility is enforced
-        inside the shard-local WAND heap."""
+    def _wand_per_shard(self, queries: dict, id_type: str, k: int,
+                        prune: bool, cursors: dict) -> DataFrame | None:
+        """The WAND kernel under ``search_bm25`` (a batch of one) and
+        ``search_bm25_many``: one cogroup pass where each task decodes
+        its shards' doc tables once and runs block-max WAND for every
+        query of ``queries`` ({query_id: text}) against them. Returns
+        the per-shard top-k (query_id, doc_id, score) rows for the
+        caller's global reduce, or None — before any job — when no
+        query has a term in the index. ``cursors``: {query_id:
+        (score, doc_id)} keyset cursors (see ``_wand_shard``)."""
         from textindexing_spark._pkg import ensure_shipped
         from textindexing_spark.functions.tokenize import tokenize_text
 
         ensure_shipped(self.spark)
-        k = k or self.cfg.default_k
-        after = _cursor(after)
-        terms = sorted(set(tokenize_text(query_text, self.cfg.tokenizer,
-                                         self.cfg.case_insensitive)))
-        out_schema = "doc_id bigint, score double"
-        if not terms:
-            return self.spark.createDataFrame([], out_schema)
-        stats = self._term_dfs(terms)
-        idfs = {t: self.idf(df_t) for t, df_t in stats.items()}
-        if not idfs:
-            return self.spark.createDataFrame([], out_schema)
-        k1, b, avgdl = self.cfg.bm25.k1, self.cfg.bm25.b, self.avgdl
-        token = self._serve_token
-
-        def group_topk(seg, docs):
-            import pandas as pd
-
-            ids_out: list[int] = []
-            scores_out: list[float] = []
-            if not seg.empty and not docs.empty:
-                # the task may hold SEVERAL shards (serving sessions
-                # coalesce tasks); WAND runs shard-locally within it
-                for s, sub in seg.groupby("shard"):
-                    drow = docs[docs["shard"] == s]
-                    if drow.empty:
-                        continue
-                    dl_ids, dl_vals = _decoded_doc_table(
-                        token, s, drow["doc_ids"].iloc[0],
-                        drow["doc_lens"].iloc[0])
-                    for d, sc in _wand_shard(sub, dl_ids, dl_vals, idfs,
-                                             k, k1, b, avgdl, prune,
-                                             after):
-                        ids_out.append(d)
-                        scores_out.append(sc)
-            return pd.DataFrame(
-                {"doc_id": pd.Series(ids_out, dtype="int64"),
-                 "score": pd.Series(scores_out, dtype="float64")})
-
-        seg_base, docs_base = self._serving_frames()
-        seg_q = seg_base.where(F.col("term").isin(list(idfs)))
-        # rebind the docs side with fresh expression ids (Alias) — both
-        # sides can derive from one fused frame, and cogrouping a frame
-        # with itself trips the ambiguous-self-join check
-        docs_side = docs_base.select(
-            *[F.col(c).alias(c) for c in docs_base.columns])
-        seg_q, docs_side = self._prune_shards(seg_q, docs_side,
-                                              list(idfs))
-        per_shard = (self._cogroup_by_query_key(seg_q, docs_side)
-                     .applyInPandas(group_topk, out_schema))
-        return (per_shard
-                .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-                .limit(k))
-
-    def search_bm25_many(self, queries, k: int | None = None,
-                         prune: bool = True,
-                         after: dict | None = None) -> DataFrame:
-        """Batched block-max WAND: evaluate a whole QUERY SET in ONE
-        Spark job. Per-query jobs pay the full shard-task scheduling
-        cost for a handful of result rows (the round-1 query-side
-        scaling bottleneck: qps efficiency 0.61 < 0.8); batching
-        amortizes it — one cogroup pass decodes each shard's doc table
-        once and runs WAND for every query against it, then a single
-        windowed top-k per query reduces <= |Q|*k*S rows.
-
-        ``queries``: list of query strings (each its own query_id) or a
-        {query_id: query_text} dict. Returns (query_id, doc_id, score)
-        ordered by query_id, score desc, doc_id — per query identical to
-        ``search_bm25``.
-
-        ``after``: optional {query_id: (score, doc_id)} keyset cursors —
-        per-query pagination inside the same single batched job (queries
-        without a cursor return page 1)."""
-        from pyspark.sql import Window as W
-
-        from textindexing_spark._pkg import ensure_shipped
-        from textindexing_spark.functions.tokenize import tokenize_text
-
-        ensure_shipped(self.spark)
-        k = k or self.cfg.default_k
-        if not isinstance(queries, dict):
-            queries = {q: q for q in queries}
         qterms = {qid: sorted(set(tokenize_text(
                       text, self.cfg.tokenizer, self.cfg.case_insensitive)))
                   for qid, text in queries.items()}
         all_terms = sorted({t for ts in qterms.values() for t in ts})
-        out_schema = "query_id string, doc_id bigint, score double"
-        if not all_terms:
-            return self.spark.createDataFrame([], out_schema)
         stats = self._term_dfs(all_terms)
         idfs_all = {t: self.idf(df_t) for t, df_t in stats.items()}
         per_query = {qid: {t: idfs_all[t] for t in ts if t in idfs_all}
                      for qid, ts in qterms.items()}
         per_query = {qid: d for qid, d in per_query.items() if d}
         if not per_query:
-            return self.spark.createDataFrame([], out_schema)
+            return None
         k1, b, avgdl = self.cfg.bm25.k1, self.cfg.bm25.b, self.avgdl
         token = self._serve_token
-        cursors = {qid: _cursor(c) for qid, c in (after or {}).items()}
+        id_dtype = "int64" if id_type == "bigint" else "object"
 
-        def group_topk_many(seg, docs):
+        def group_topk(seg, docs):
             import pandas as pd
 
             out = {"query_id": [], "doc_id": [], "score": []}
             if not seg.empty and not docs.empty:
+                # the task may hold SEVERAL shards (serving sessions
+                # coalesce tasks); WAND runs shard-locally within it
                 for s, sub_shard in seg.groupby("shard"):
                     drow = docs[docs["shard"] == s]
                     if drow.empty:
@@ -829,20 +746,79 @@ class SegmentIndex:
                             out["doc_id"].append(d)
                             out["score"].append(sc)
             return pd.DataFrame(
-                {"query_id": pd.Series(out["query_id"], dtype="object"),
+                {"query_id": pd.Series(out["query_id"], dtype=id_dtype),
                  "doc_id": pd.Series(out["doc_id"], dtype="int64"),
                  "score": pd.Series(out["score"], dtype="float64")})
 
         seg_base, docs_base = self._serving_frames()
-        seg_q = seg_base.where(F.col("term").isin(all_terms))
+        seg_q = seg_base.where(F.col("term").isin(list(idfs_all)))
+        # rebind the docs side with fresh expression ids (Alias) — both
+        # sides can derive from one fused frame, and cogrouping a frame
+        # with itself trips the ambiguous-self-join check
         docs_side = docs_base.select(
             *[F.col(c).alias(c) for c in docs_base.columns])
         # batch-level pruning: the union over EVERY query's terms (the
         # per-query term filter inside the task narrows further)
         seg_q, docs_side = self._prune_shards(seg_q, docs_side,
                                               list(idfs_all))
-        per_shard = (self._cogroup_by_query_key(seg_q, docs_side)
-                     .applyInPandas(group_topk_many, out_schema))
+        return (self._cogroup_by_query_key(seg_q, docs_side)
+                .applyInPandas(group_topk, f"query_id {id_type}, "
+                               "doc_id bigint, score double"))
+
+    def search_bm25(self, query_text: str, k: int | None = None,
+                    prune: bool = True,
+                    after: tuple[float, int] | None = None) -> DataFrame:
+        """Block-max-WAND top-k: per-shard pruned evaluation + global
+        top-k reduce. Returns (doc_id, score) ordered score desc, doc_id.
+
+        ``after=(score, doc_id)``: keyset pagination — return the top-k
+        ranked strictly after the cursor (pass the previous page's last
+        row VERBATIM: raw double score, not a rounded display value).
+        Deep paging stays O(k) rows per page per shard — never the
+        offset-style k·page_number — because eligibility is enforced
+        inside the shard-local WAND heap."""
+        k = k or self.cfg.default_k
+        per_shard = self._wand_per_shard({0: query_text}, "bigint", k,
+                                         prune, {0: _cursor(after)})
+        if per_shard is None:
+            return self.spark.createDataFrame(
+                [], "doc_id bigint, score double")
+        # a batch of one keeps the cheap global reduce: orderBy+limit
+        # plans as TakeOrderedAndProject in the same job (the batch
+        # window reduce would add jobs)
+        return (per_shard.select("doc_id", "score")
+                .orderBy(F.col("score").desc(), F.col("doc_id").asc())
+                .limit(k))
+
+    def search_bm25_many(self, queries, k: int | None = None,
+                         prune: bool = True,
+                         after: dict | None = None) -> DataFrame:
+        """Batched block-max WAND: evaluate a whole QUERY SET in ONE
+        Spark job. Per-query jobs pay the full shard-task scheduling
+        cost for a handful of result rows (the round-1 query-side
+        scaling bottleneck: qps efficiency 0.61 < 0.8); batching
+        amortizes it — one cogroup pass decodes each shard's doc table
+        once and runs WAND for every query against it, then a single
+        windowed top-k per query reduces <= |Q|*k*S rows.
+
+        ``queries``: list of query strings (each its own query_id) or a
+        {query_id: query_text} dict (``query_set``). Returns (query_id,
+        doc_id, score) ordered by query_id, score desc, doc_id — per
+        query identical to ``search_bm25``.
+
+        ``after``: optional {query_id: (score, doc_id)} keyset cursors —
+        per-query pagination inside the same single batched job (queries
+        without a cursor return page 1)."""
+        from pyspark.sql import Window as W
+
+        k = k or self.cfg.default_k
+        queries, id_type = query_set(queries)
+        cursors = {qid: _cursor(c) for qid, c in (after or {}).items()}
+        per_shard = self._wand_per_shard(queries, id_type, k, prune,
+                                         cursors)
+        if per_shard is None:
+            return self.spark.createDataFrame(
+                [], f"query_id {id_type}, doc_id bigint, score double")
         w = W.partitionBy("query_id").orderBy(
             F.col("score").desc(), F.col("doc_id").asc())
         return (per_shard.withColumn("_rn", F.row_number().over(w))

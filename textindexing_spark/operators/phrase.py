@@ -39,7 +39,7 @@ segments, shard-parallel evaluation) — equivalence is pytest-gated.
 
 from __future__ import annotations
 
-from functools import reduce
+from functools import partial, reduce
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -640,31 +640,52 @@ class PositionalSegmentIndex:
         return (self.segments.select("n_docs", "gaps_blob")
                 .mapInPandas(decode_ids, "doc_id bigint").distinct())
 
-    def search_phrase(self, phrase: str) -> DataFrame:
-        """doc_ids containing the phrase tokens consecutively; same
-        semantics as ``PositionalIndex.search_phrase`` (equivalence is
-        pytest-gated), evaluated shard-locally on compressed segments."""
-        toks = self._tokens(phrase)
-        empty = self.spark.createDataFrame([], "doc_id bigint")
-        if not toks:
-            return empty
+    def _search_specs(self, specs) -> DataFrame:
+        """The one shard evaluator under every phrase/proximity search:
+        ``specs`` is a list of ``(tokens, evaluate)`` queries, where
+        ``evaluate(by_term, tokens, np=np)`` returns one shard's hits
+        (``_eval_phrase``, or ``_eval_near`` bound to its window). Each
+        shard task decodes every referenced term ONCE and runs every
+        spec against the decoded dict. Returns (query_id, doc_id) with
+        query_id indexing ``specs``; no job when no spec has a token."""
+        all_terms = sorted({t for toks, _ in specs for t in toks})
+        out_schema = "query_id int, doc_id bigint"
+        if not all_terms:
+            return self.spark.createDataFrame([], out_schema)
 
         def eval_shard(pdf):
             import numpy as np
             import pandas as pd
 
+            qids: list[int] = []
             out_ids: list[int] = []
             if not pdf.empty:
                 for _, sub in pdf.groupby("shard", sort=False):
                     by_term = _decode_shard_terms(sub, np)
-                    out_ids.extend(_eval_phrase(by_term, toks, np))
+                    for qid, (toks, evaluate) in enumerate(specs):
+                        hits = evaluate(by_term, toks, np=np)
+                        qids.extend([qid] * len(hits))
+                        out_ids.extend(hits)
             return pd.DataFrame(
-                {"doc_id": pd.Series(out_ids, dtype="int64")})
+                {"query_id": pd.Series(qids, dtype="int32"),
+                 "doc_id": pd.Series(out_ids, dtype="int64")})
 
-        pruned = self.segments.where(F.col("term").isin(*set(toks)))
+        pruned = self.segments.where(F.col("term").isin(*all_terms))
         return (pruned.groupBy("shard")
-                .applyInPandas(lambda k, pdf: eval_shard(pdf),
-                               "doc_id bigint"))
+                .applyInPandas(lambda key, pdf: eval_shard(pdf),
+                               out_schema))
+
+    def _near_spec(self, query: str, k: int, ordered: bool) -> tuple:
+        toks = self._tokens(query)
+        if not ordered:
+            toks = list(dict.fromkeys(toks))
+        return toks, partial(_eval_near, k=int(k), ordered=bool(ordered))
+
+    def search_phrase(self, phrase: str) -> DataFrame:
+        """doc_ids containing the phrase tokens consecutively; same
+        semantics as ``PositionalIndex.search_phrase`` (equivalence is
+        pytest-gated), evaluated shard-locally on compressed segments."""
+        return self.search_phrase_many([phrase]).select("doc_id")
 
     def search_phrase_many(self, phrases) -> DataFrame:
         """Batched serving mode: evaluate a whole PHRASE SET in ONE job
@@ -674,33 +695,8 @@ class PositionalSegmentIndex:
         shard-task scheduling cost |Q| times; this pays it once.
         Returns (query_id, doc_id); query_id indexes ``phrases``;
         no-match (or empty/absent-term) queries contribute no rows."""
-        tok_sets = [self._tokens(p) for p in phrases]
-        all_terms = sorted({t for ts in tok_sets for t in ts})
-        out_schema = "query_id int, doc_id bigint"
-        if not all_terms:
-            return self.spark.createDataFrame([], out_schema)
-
-        def eval_shard(pdf):
-            import numpy as np
-            import pandas as pd
-
-            qids: list[int] = []
-            out_ids: list[int] = []
-            if not pdf.empty:
-                for _, sub in pdf.groupby("shard", sort=False):
-                    by_term = _decode_shard_terms(sub, np)
-                    for qid, toks in enumerate(tok_sets):
-                        hits = _eval_phrase(by_term, toks, np)
-                        qids.extend([qid] * len(hits))
-                        out_ids.extend(hits)
-            return pd.DataFrame(
-                {"query_id": pd.Series(qids, dtype="int32"),
-                 "doc_id": pd.Series(out_ids, dtype="int64")})
-
-        pruned = self.segments.where(F.col("term").isin(*all_terms))
-        return (pruned.groupBy("shard")
-                .applyInPandas(lambda k, pdf: eval_shard(pdf),
-                               out_schema))
+        return self._search_specs(
+            [(self._tokens(p), _eval_phrase) for p in phrases])
 
     def search_near_many(self, queries) -> DataFrame:
         """Batched proximity serving (≙ ``search_phrase_many``): evaluate
@@ -708,40 +704,9 @@ class PositionalSegmentIndex:
         referenced term once per shard task. ``queries``: list of
         (query_text, k) or (query_text, k, ordered) tuples. Returns
         (query_id, doc_id); query_id indexes ``queries``."""
-        specs = []
-        for q in queries:
-            text, k = q[0], int(q[1])
-            ordered = bool(q[2]) if len(q) > 2 else False
-            toks = self._tokens(text)
-            if not ordered:
-                toks = list(dict.fromkeys(toks))
-            specs.append((toks, k, ordered))
-        all_terms = sorted({t for toks, _, _ in specs for t in toks})
-        out_schema = "query_id int, doc_id bigint"
-        if not all_terms:
-            return self.spark.createDataFrame([], out_schema)
-
-        def eval_shard(pdf):
-            import numpy as np
-            import pandas as pd
-
-            qids: list[int] = []
-            out_ids: list[int] = []
-            if not pdf.empty:
-                for _, sub in pdf.groupby("shard", sort=False):
-                    by_term = _decode_shard_terms(sub, np)
-                    for qid, (toks, k, ordered) in enumerate(specs):
-                        hits = _eval_near(by_term, toks, k, ordered, np)
-                        qids.extend([qid] * len(hits))
-                        out_ids.extend(hits)
-            return pd.DataFrame(
-                {"query_id": pd.Series(qids, dtype="int32"),
-                 "doc_id": pd.Series(out_ids, dtype="int64")})
-
-        pruned = self.segments.where(F.col("term").isin(*all_terms))
-        return (pruned.groupBy("shard")
-                .applyInPandas(lambda key, pdf: eval_shard(pdf),
-                               out_schema))
+        return self._search_specs(
+            [self._near_spec(q[0], q[1], len(q) > 2 and q[2])
+             for q in queries])
 
     def search_near(self, query: str, k: int,
                     ordered: bool = False) -> DataFrame:
@@ -749,38 +714,20 @@ class PositionalSegmentIndex:
         ``PositionalIndex.search_near`` (cross-tier equivalence is
         pytest-gated), evaluated shard-locally: per-term pruned segment
         scan, decode once per shard task, numpy window sweep."""
-        toks = self._tokens(query)
-        if not ordered:
-            toks = list(dict.fromkeys(toks))
-        empty = self.spark.createDataFrame([], "doc_id bigint")
-        if not toks or k < 0:
-            return empty
-
-        def eval_shard(pdf):
-            import numpy as np
-            import pandas as pd
-
-            out_ids: list[int] = []
-            if not pdf.empty:
-                for _, sub in pdf.groupby("shard", sort=False):
-                    by_term = _decode_shard_terms(sub, np)
-                    out_ids.extend(
-                        _eval_near(by_term, toks, k, ordered, np))
-            return pd.DataFrame(
-                {"doc_id": pd.Series(out_ids, dtype="int64")})
-
-        pruned = self.segments.where(F.col("term").isin(*set(toks)))
-        return (pruned.groupBy("shard")
-                .applyInPandas(lambda key, pdf: eval_shard(pdf),
-                               "doc_id bigint"))
+        if k < 0:
+            return self.spark.createDataFrame([], "doc_id bigint")
+        return (self._search_specs([self._near_spec(query, k, ordered)])
+                .select("doc_id"))
 
 
-def _eval_phrase(by_term: dict, toks: list, np) -> list:
-    """Evaluate one tokenized phrase against one shard's decoded term
-    dict: rarest-first doc-id intersection, then per-candidate adjacency
-    verification on the absolute position arrays."""
+def _candidates(by_term: dict, toks: list, np):
+    """Rarest-first doc-id intersection of ``toks`` over one shard's
+    decoded term dict. Returns (uniq, cand, pos): the distinct tokens
+    rarest first, the candidate doc ids holding all of them, and
+    ``pos(t, j)`` — token t's positions in candidate j. None when a
+    token is absent or no doc holds them all."""
     if not toks or any(t not in by_term for t in toks):
-        return []
+        return None
     uniq = sorted(set(toks), key=lambda t: by_term[t][0].size)
     cand = by_term[uniq[0]][0]
     for t in uniq[1:]:
@@ -788,45 +735,7 @@ def _eval_phrase(by_term: dict, toks: list, np) -> list:
             break
         cand = cand[np.isin(cand, by_term[t][0], assume_unique=True)]
     if cand.size == 0:
-        return []
-    sliced = {}
-    for t in set(toks):
-        doc_ids, plens, starts, flat = by_term[t]
-        idx = np.searchsorted(doc_ids, cand)
-        sliced[t] = (starts[idx], plens[idx], flat)
-    out: list[int] = []
-    for j, d in enumerate(cand):
-        s0, l0, f0 = sliced[toks[0]]
-        p = f0[s0[j]:s0[j] + l0[j]]
-        for i in range(1, len(toks)):
-            si, li, fi = sliced[toks[i]]
-            nxt = fi[si[j]:si[j] + li[j]]
-            p = p[np.isin(p + i, nxt, assume_unique=True)]
-            if p.size == 0:
-                break
-        if p.size:
-            out.append(int(d))
-    return out
-
-
-def _eval_near(by_term: dict, toks: list, k: int, ordered: bool,
-               np) -> list:
-    """Evaluate one proximity query against one shard's decoded term
-    dict (same structure as ``_eval_phrase``): rarest-first doc-id
-    intersection, then per-candidate window verification. Unordered =
-    minimal-window sweep over the merged labeled position lists;
-    ordered = greedy chain per anchor (smallest admissible next
-    position is optimal for a fixed anchor)."""
-    if not toks or k < 0 or any(t not in by_term for t in toks):
-        return []
-    uniq = sorted(set(toks), key=lambda t: by_term[t][0].size)
-    cand = by_term[uniq[0]][0]
-    for t in uniq[1:]:
-        if cand.size == 0:
-            break
-        cand = cand[np.isin(cand, by_term[t][0], assume_unique=True)]
-    if cand.size == 0:
-        return []
+        return None
     sliced = {}
     for t in uniq:
         doc_ids, plens, starts, flat = by_term[t]
@@ -837,6 +746,40 @@ def _eval_near(by_term: dict, toks: list, k: int, ordered: bool,
         s, l, f = sliced[t]
         return f[s[j]:s[j] + l[j]]
 
+    return uniq, cand, pos
+
+
+def _eval_phrase(by_term: dict, toks: list, np) -> list:
+    """Evaluate one tokenized phrase against one shard's decoded term
+    dict: ``_candidates``, then per-candidate adjacency verification on
+    the absolute position arrays."""
+    found = _candidates(by_term, toks, np)
+    if found is None:
+        return []
+    _, cand, pos = found
+    out: list[int] = []
+    for j, d in enumerate(cand):
+        p = pos(toks[0], j)
+        for i in range(1, len(toks)):
+            p = p[np.isin(p + i, pos(toks[i], j), assume_unique=True)]
+            if p.size == 0:
+                break
+        if p.size:
+            out.append(int(d))
+    return out
+
+
+def _eval_near(by_term: dict, toks: list, k: int, ordered: bool,
+               np) -> list:
+    """Evaluate one proximity query against one shard's decoded term
+    dict: ``_candidates``, then per-candidate window verification.
+    Unordered = minimal-window sweep over the merged labeled position
+    lists; ordered = greedy chain per anchor (smallest admissible next
+    position is optimal for a fixed anchor)."""
+    found = None if k < 0 else _candidates(by_term, toks, np)
+    if found is None:
+        return []
+    uniq, cand, pos = found
     m = len(toks)
     out: list[int] = []
     for j, d in enumerate(cand):

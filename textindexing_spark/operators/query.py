@@ -244,6 +244,31 @@ def expand_synonyms(query_text: str, synonyms: dict[str, list[str]],
     return unparse_bool_expr(rewrite(ast))
 
 
+def query_set(queries) -> tuple[dict, str]:
+    """Normalize a batched query set to ({query_id: text}, id type).
+    ``queries`` is a list of texts (each its own id) or a
+    {query_id: text} dict. All-int ids come back as ``bigint``, all-str
+    ids as ``string``; mixed ids raise TypeError before any job."""
+    if not isinstance(queries, dict):
+        queries = {q: q for q in queries}
+    if all(isinstance(q, str) for q in queries):
+        return queries, "string"
+    if all(isinstance(q, int) for q in queries):
+        return queries, "bigint"
+    raise TypeError("query ids must be all int or all str")
+
+
+def _flat_and_tokens(ast) -> list[str] | None:
+    """The raw tokens of a flat all-positive AND (a lone term counts),
+    else None — the shape ``_bool_docs``'s one-aggregation plan
+    evaluates."""
+    if ast[0] == "term":
+        return [ast[1]]
+    if ast[0] == "and" and all(c[0] == "term" for c in ast[1]):
+        return [c[1] for c in ast[1]]
+    return None
+
+
 class Index:
     """A queryable inverted index (≙ IReadOnlyIndex + IIndex)."""
 
@@ -695,11 +720,8 @@ class Index:
         ast = parse_bool_expr(query_text)
         if ast is None:
             return None
-        if ast[0] == "term" or (
-                ast[0] == "and"
-                and all(c[0] == "term" for c in ast[1])):
-            toks = [ast[1]] if ast[0] == "term" else \
-                [c[1] for c in ast[1]]
+        toks = _flat_and_tokens(ast)
+        if toks is not None:
             tokens = list(dict.fromkeys(self._fold(t) for t in toks))
             return self._bool_docs(tokens)
         return self._eval_expr(ast)
@@ -782,11 +804,8 @@ class Index:
             ast = parse_bool_expr(text)
             if ast is None:
                 continue
-            if ast[0] == "term" or (
-                    ast[0] == "and"
-                    and all(c[0] == "term" for c in ast[1])):
-                toks = [ast[1]] if ast[0] == "term" else \
-                    [c[1] for c in ast[1]]
+            toks = _flat_and_tokens(ast)
+            if toks is not None:
                 flat.setdefault(" ".join(toks), []).append(qid)
             else:
                 branches.append(
@@ -814,15 +833,14 @@ class Index:
         token gets one scan regardless of how many queries use it; a
         broadcast (query_id, token) map fans matches out to queries and
         one aggregation applies the AND. ``queries``: list of query
-        strings (each its own id) or {query_id: text}. Returns
-        (query_id, doc_id) ordered by query_id, doc_id."""
-        if not isinstance(queries, dict):
-            queries = {q: q for q in queries}
+        strings (each its own id) or {query_id: text} (``query_set``).
+        Returns (query_id, doc_id) ordered by query_id, doc_id."""
+        queries, id_type = query_set(queries)
         qtokens = {qid: list(dict.fromkeys(
                        self._fold(t) for t in (text or "").split(" ") if t))
                    for qid, text in queries.items()}
         qtokens = {qid: ts for qid, ts in qtokens.items() if ts}
-        out_schema = "query_id string, doc_id bigint"
+        out_schema = f"query_id {id_type}, doc_id bigint"
         if not qtokens:
             return self.spark.createDataFrame([], out_schema)
         # rarest-first pruning for the whole batch: ONE dictionary
@@ -846,13 +864,14 @@ class Index:
             if sum(dfs[t] for t in seed_tokens) <= \
                     self.cfg.bool_seed_broadcast_max:
                 seed_map = self.spark.createDataFrame(
-                    sorted(rarest.items()), "query_id string, qi string")
+                    sorted(rarest.items()),
+                    f"query_id {id_type}, qi string")
                 seeds = (self._token_scans(seed_tokens, dedup_wild=True)
                          .join(F.broadcast(seed_map), "qi")
                          .select("query_id", "doc_id"))
         qmap = self.spark.createDataFrame(
             [(qid, t) for qid, ts in qtokens.items() for t in ts],
-            "query_id string, qi string")
+            f"query_id {id_type}, qi string")
         all_tokens = sorted({t for ts in qtokens.values() for t in ts})
         # one wildcard token may match many words -> dedup per token
         fanned = (self._token_scans(all_tokens, dedup_wild=True)
@@ -862,7 +881,7 @@ class Index:
                                  ["query_id", "doc_id"], "left_semi")
         need = self.spark.createDataFrame(
             [(qid, len(ts)) for qid, ts in qtokens.items()],
-            "query_id string, _need int")
+            f"query_id {id_type}, _need int")
         return (fanned.groupBy("query_id", "doc_id")
                 .agg(F.count_distinct("qi").alias("_nq"))
                 .join(F.broadcast(need), "query_id")
@@ -1074,28 +1093,22 @@ class Index:
         """Batched BM25 serving on the Catalyst tier: a whole query set
         in ONE job (per query identical to ``search_bm25``; the WAND
         twin is ``SegmentIndex.search_bm25_many``). All queries' terms
-        share a single pruned In-filter postings scan; a broadcast
-        (query_id, term) map fans matched postings out to queries; one
+        share one ``_bm25_term_weights`` frame (a single pruned
+        In-filter postings scan); a broadcast (query_id, term) map fans
+        its per-(term, doc) weights out to queries; one
         (query_id, doc_id) aggregation sums scores and a per-query
         window takes the top-k (Spark pushes it as a partial
         WindowGroupLimit ahead of the exchange, so only <=k rows per
         query per partition shuffle). ``queries``: list of query
-        strings (each its own id) or {query_id: text}. Returns
-        (query_id, doc_id, score) ordered query_id asc, score desc,
-        doc_id asc."""
+        strings (each its own id) or {query_id: text} (``query_set``).
+        Returns (query_id, doc_id, score) ordered query_id asc, score
+        desc, doc_id asc."""
         from pyspark.sql import Window
 
         from textindexing_spark.functions.tokenize import tokenize_text
 
         k = k or self.cfg.default_k
-        if not isinstance(queries, dict):
-            queries = {q: q for q in queries}
-        if all(isinstance(q, int) for q in queries):
-            id_type = "bigint"
-        elif all(isinstance(q, str) for q in queries):
-            id_type = "string"
-        else:
-            raise TypeError("query ids must be all int or all str")
+        queries, id_type = query_set(queries)
         qterms = {qid: sorted(set(tokenize_text(
                       text, self.cfg.tokenizer, self.cfg.case_insensitive)))
                   for qid, text in queries.items()}
@@ -1103,29 +1116,12 @@ class Index:
         out_schema = f"query_id {id_type}, doc_id bigint, score double"
         if not qterms:
             return self.spark.createDataFrame([], out_schema)
-        n_docs, avgdl = self.corpus_stats()
-        k1, b = self.cfg.bm25.k1, self.cfg.bm25.b
         all_terms = sorted({t for ts in qterms.values() for t in ts})
-        matched = (self.postings.where(F.col("term").isin(all_terms))
-                   .select("term", "df", F.explode("postings").alias("p"))
-                   .select("term", "df",
-                           F.col("p.doc_id").alias("doc_id"),
-                           F.col("p.tf").cast("double").alias("tf")))
         qmap = self.spark.createDataFrame(
             [(qid, t) for qid, ts in qterms.items() for t in ts],
             f"query_id {id_type}, term string")
-        scored = (matched.join(F.broadcast(qmap), "term")
-                  .join(self.documents, "doc_id")
-                  .withColumn(
-                      "idf",
-                      F.log(F.lit(1.0) +
-                            (F.lit(float(n_docs)) - F.col("df") + 0.5) /
-                            (F.col("df") + 0.5)))
-                  .withColumn(
-                      "w",
-                      F.col("idf") * (F.col("tf") * (k1 + 1.0)) /
-                      (F.col("tf") + k1 * (1.0 - b + b * F.col("doc_len") /
-                                           float(avgdl))))
+        scored = (self._bm25_term_weights(all_terms)
+                  .join(F.broadcast(qmap), "term")
                   .groupBy("query_id", "doc_id")
                   .agg(F.sum("w").alias("score")))
         w = Window.partitionBy("query_id").orderBy(

@@ -79,7 +79,8 @@ def fs_write_text(spark, path: str, text: str) -> None:
 
 def partition_lineage(df: DataFrame) -> list[dict]:
     """Per-partition (id, rows, checksum) for a DataFrame about to be
-    written. Checksum = sum of xxhash64 over all columns, order-free."""
+    written. Checksum = bit_xor of xxhash64 over all columns,
+    order-free."""
     rows = (df.withColumn("_pid", F.spark_partition_id())
             .withColumn("_h", F.xxhash64(*[F.col(c) for c in df.columns]))
             .groupBy("_pid")

@@ -121,6 +121,12 @@ class StreamingIngestor:
         self.url_ids = UrlIdTable(spark, f"{index_root}/_urlmap")
         self.metrics = IngestMetrics()
 
+    def _version(self) -> int:
+        """The store's latest committed version, 0 before the first."""
+        store = self.store
+        latest = getattr(store, "latest_version", None) or store._latest
+        return latest() or 0
+
     # -- batch core (shared by streaming + manual batch ingest) -----------
 
     def process_batch(self, batch: DataFrame, epoch_id: int = 0) -> int:
@@ -129,9 +135,7 @@ class StreamingIngestor:
         n_found = batch.count()
         self.metrics.docs_found += n_found
         if n_found == 0:
-            return (self.store.latest_version()
-                    if hasattr(self.store, "latest_version")
-                    else self.store._latest()) or 0
+            return self._version()
         # P7 quarantine FIRST: rows whose content is unreadable are
         # isolated, the rest of the batch proceeds (Indexer.cs:259-265).
         # Quarantine must precede dedup — dedup's window groups all
@@ -188,9 +192,7 @@ class StreamingIngestor:
                 .select("doc_id", F.lit("").alias("text")))
         n_gone = gone.count()
         if n_gone == 0:
-            return (self.store.latest_version() or 0
-                    if hasattr(self.store, "latest_version")
-                    else self.store._latest() or 0)
+            return self._version()
         v = self._merge_docs(gone)
         self.metrics.versions.append(v)
         return v
@@ -246,9 +248,7 @@ class StreamingIngestor:
             prev = self.spark.read.parquet(state_path)
         except Exception:
             prev = None
-        v = (self.store.latest_version() or 0
-             if hasattr(self.store, "latest_version")
-             else self.store._latest() or 0)
+        v = self._version()
         if prev is not None:
             moved = ((F.col("c.mtime") != F.col("p.mtime"))
                      | (F.col("c.n_bytes") != F.col("p.n_bytes")))

@@ -119,9 +119,7 @@ class _SourceIngestor(StreamingIngestor):
             v = self._merge_docs(gone)
             self.metrics.versions.append(v)
             return v
-        return (self.store.latest_version() or 0
-                if hasattr(self.store, "latest_version")
-                else self.store._latest() or 0)
+        return self._version()
 
 
 class IngestorSet:
