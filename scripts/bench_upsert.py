@@ -4,15 +4,10 @@
 The O(delta) claim (VERDICT round 1, item 1): a micro-batch merge into
 the boolean index must cost the same whether the corpus holds N or 4N
 documents. This bench builds a base corpus at two sizes, then times the
-SAME fixed-size batch stream against each through
-
-  - the LSM delta path (BucketedIndexStore.commit_merge, the
-    StreamingIngestor default), and
-  - the legacy full-logical-rebuild path (Index.merge + snapshot
-    commit) for contrast,
-
-and prints one JSON line with per-batch medians and the large/small
-ratio (flat == ratio ~1.0 for the delta path).
+SAME fixed-size batch stream against each through the LSM delta path
+(BucketedIndexStore.commit_merge, what StreamingIngestor commits), and
+prints one JSON line with per-batch medians and the large/small ratio
+(flat == ratio ~1.0).
 
 Run:  python scripts/bench_upsert.py [--small 6000] [--factor 4]
 """
@@ -44,7 +39,6 @@ def main(argv=None):
     ap.add_argument("--batches", type=int, default=5)
     ap.add_argument("--cpus", type=int,
                     default=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
-    ap.add_argument("--skip-legacy", action="store_true")
     args = ap.parse_args(argv)
 
     from pyspark.sql import SparkSession
@@ -67,7 +61,6 @@ def main(argv=None):
     sys.path.insert(0, os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))))
     from textindexing_spark.sources.bucketed import BucketedIndexStore
-    from textindexing_spark.sources.catalog import VersionedIndexStore
     from textindexing_spark.sources.pages import generate_pages_rows
 
     sizes = [args.small, args.small * args.factor]
@@ -79,35 +72,23 @@ def main(argv=None):
     result = {"metric": "upsert_batch_median_sec", "unit": "sec",
               "batch_size": args.batch_size, "sizes": sizes, "paths": {}}
 
-    for path_name in (["delta"] if args.skip_legacy
-                      else ["delta", "legacy_rebuild"]):
-        per_size = {}
-        for n in sizes:
-            root = f"{tmp_root}/{path_name}_{n}"
-            base = spark.createDataFrame(docs_all[:n],
-                                         "doc_id bigint, text string")
-            if path_name == "delta":
-                store = BucketedIndexStore(spark, root)
-                store.commit_merge(base, mode="rewrite")
-            else:
-                store = VersionedIndexStore(spark, root)
-                store.commit(__import__(
-                    "textindexing_spark").build_index(spark, base))
-            times = []
-            for batch_rows in _batches(docs_all, args.batches,
-                                       args.batch_size, max(sizes)):
-                batch = spark.createDataFrame(
-                    batch_rows, "doc_id bigint, text string")
-                t0 = time.perf_counter()
-                if path_name == "delta":
-                    store.commit_merge(batch)
-                else:
-                    store.commit(store.load().merge(batch))
-                times.append(time.perf_counter() - t0)
-            per_size[str(n)] = round(statistics.median(times), 3)
-        ratio = per_size[str(sizes[1])] / per_size[str(sizes[0])]
-        result["paths"][path_name] = {**per_size,
-                                      "ratio_4x_corpus": round(ratio, 3)}
+    per_size = {}
+    for n in sizes:
+        store = BucketedIndexStore(spark, f"{tmp_root}/delta_{n}")
+        store.commit_merge(spark.createDataFrame(
+            docs_all[:n], "doc_id bigint, text string"), mode="rewrite")
+        times = []
+        for batch_rows in _batches(docs_all, args.batches,
+                                   args.batch_size, max(sizes)):
+            batch = spark.createDataFrame(
+                batch_rows, "doc_id bigint, text string")
+            t0 = time.perf_counter()
+            store.commit_merge(batch)
+            times.append(time.perf_counter() - t0)
+        per_size[str(n)] = round(statistics.median(times), 3)
+    ratio = per_size[str(sizes[1])] / per_size[str(sizes[0])]
+    result["paths"]["delta"] = {**per_size,
+                                "ratio_4x_corpus": round(ratio, 3)}
 
     # url-id dimension: per-batch assign cost must stay FLAT as the
     # chunk stream grows (compaction folds chunks into a base every

@@ -10,7 +10,7 @@ from textindexing_spark import IndexConfig, build_index
 from textindexing_spark.functions.extract import extract_text
 from textindexing_spark.plans.manifest import (
     StagePipeline, read_manifest, verify_stage, write_stage)
-from textindexing_spark.sources.catalog import VersionedIndexStore, empty_index
+from textindexing_spark.sources.catalog import empty_index
 from textindexing_spark.sources.glob import glob_filter, glob_to_regex
 from textindexing_spark.sources.pages import (
     generate_pages, generate_pages_rows, PAGES_SCHEMA)
@@ -67,6 +67,31 @@ def test_write_stage_manifest(spark, tmp_path):
     assert verify_stage(spark, path)
 
 
+def test_fs_write_text_raises_when_rename_fails(monkeypatch):
+    """Hadoop's rename reports failure (common on object stores) by
+    returning False: the manifest write must raise, not silently leave
+    the stage without a manifest."""
+    import io
+
+    from textindexing_spark.plans import manifest
+
+    class FalseRenameFS:
+        def create(self, path, overwrite):
+            return io.BytesIO()
+
+        def exists(self, path):
+            return False
+
+        def rename(self, src, dst):
+            return False
+
+    monkeypatch.setattr(manifest, "_hadoop_fs",
+                        lambda spark, path: (FalseRenameFS(), path))
+    with pytest.raises(OSError, match="rename"):
+        manifest.fs_write_text(None, "s3a://bucket/stage/manifest.json",
+                               "{}")
+
+
 def test_pipeline_resume_skips_committed(spark, tmp_path):
     base = str(tmp_path / "pipe")
     calls = []
@@ -102,17 +127,20 @@ def test_pipeline_resume_skips_committed(spark, tmp_path):
 # --- versioned snapshot store (Q5 / MVCC) -------------------------------------
 
 def test_versioned_store_snapshot_isolation(spark, tmp_path):
-    store = VersionedIndexStore(spark, str(tmp_path / "idx"))
+    from textindexing_spark.sources.bucketed import BucketedIndexStore
+
+    store = BucketedIndexStore(spark, str(tmp_path / "idx"),
+                               n_term_buckets=4, n_doc_buckets=2)
     assert store.latest_version() is None
     assert store.load().documents.count() == 0
 
     docs1 = spark.createDataFrame([(1, "alpha beta"), (2, "beta gamma")],
                                   "doc_id bigint, text string")
-    v1 = store.commit(build_index(spark, docs1))
+    v1 = store.commit_merge(docs1)
     snap1 = store.load(v1)
 
     docs2 = spark.createDataFrame([(3, "delta")], "doc_id bigint, text string")
-    v2 = store.commit(store.load().merge(docs2))
+    v2 = store.commit_merge(docs2)
     assert v2 == v1 + 1
 
     # pinned snapshot unaffected by the later commit
@@ -806,7 +834,7 @@ def test_first_commit_participates_in_cas(spark, tmp_path):
     import pytest as _pytest
 
     with _pytest.raises(ConcurrentWriterError, match="empty store"):
-        a._write_manifest(1, b.manifest(), expect_prev=None)
+        a.log.publish(1, expect_prev=None, manifest=b.manifest())
 
 
 def test_single_pass_combined_ops_match_standalone(spark):
@@ -993,18 +1021,18 @@ def test_catalog_commit_claims_distinct_version_dirs(spark, tmp_path):
     files into the same directory."""
     import os
 
-    from textindexing_spark import IndexConfig, build_index
-    from textindexing_spark.sources.catalog import VersionedIndexStore
+    from textindexing_spark.operators.bm25 import build_segments_from_docs
+    from textindexing_spark.sources.catalog import VersionedSegmentStore
 
-    store = VersionedIndexStore(spark, str(tmp_path / "cas"))
+    store = VersionedSegmentStore(spark, str(tmp_path / "cas"))
     docs = spark.createDataFrame([(1, "alpha beta")],
                                  "doc_id bigint, text string")
-    idx = build_index(spark, docs, IndexConfig())
+    idx = build_segments_from_docs(spark, docs, n_shards=2)
     assert store.commit(idx) == 1
     os.mkdir(f"{store.root}/v2")          # simulate a racing claim
     assert store.commit(idx) == 3         # skips the claimed slot
     assert store.latest_version() == 3
-    assert store.load().search_bool("alpha").count() == 1
+    assert store.load().search_bm25("alpha").count() == 1
 
 
 def test_quarantine_records_every_failed_row(spark, tmp_path):

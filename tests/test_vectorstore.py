@@ -169,7 +169,7 @@ def test_concurrent_writer_cas(spark, store, tmp_path):
     prev_v = store.latest_version()
     other.upsert(_vecs(spark, [(7000, [1.0] * 6)]))
     with pytest.raises(ConcurrentWriterError):
-        store._write_manifest(prev_v + 1, prev, expect_prev=prev_v)
+        store.log.publish(prev_v + 1, expect_prev=prev_v, manifest=prev)
 
 
 def test_time_travel_and_vacuum(spark, store):
@@ -183,6 +183,41 @@ def test_time_travel_and_vacuum(spark, store):
     assert not os.path.exists(f"{store.root}/v{v1}.json")
     # latest still fully readable after vacuum
     assert len(_resolved_dict(store)) == 85
+
+
+def _two_cell_store(spark, root):
+    st = IvfVectorStore.create(spark, root, k_cells=2,
+                               centroids=[[1.0, 0.0], [0.0, 1.0]])
+    st.upsert(spark.createDataFrame(
+        [(1, [1.0, 0.1]), (2, [0.1, 1.0])],
+        "vec_id bigint, embedding array<float>"), mode="rewrite")
+    return st
+
+
+def test_vacuum_grace_spares_inflight_attempt_dir(spark, tmp_path):
+    """A fresh unreferenced attempt dir may be an in-flight writer's: it
+    survives the default vacuum, and the orphan sweep still collects it
+    with grace_s=0 when only one version is left to keep."""
+    st = _two_cell_store(spark, str(tmp_path / "g"))
+    orphan = f"{st.root}/v99_data_x"
+    os.makedirs(orphan)
+    deleted = st.vacuum(keep_last=1)
+    assert orphan not in deleted and os.path.isdir(orphan)
+    assert st.versions() == [1]
+    deleted = st.vacuum(keep_last=1, grace_s=0)
+    assert orphan in deleted and not os.path.isdir(orphan)
+    assert st.count() == 2
+
+
+def test_resolved_raises_on_missing_referenced_cell(spark, tmp_path):
+    """A cell dir the manifest references but that is gone is corruption:
+    reads raise instead of silently returning fewer vectors."""
+    import shutil
+
+    st = _two_cell_store(spark, str(tmp_path / "m"))
+    shutil.rmtree(next(iter(st.manifest()["cells"].values())))
+    with pytest.raises(ValueError, match="missing data dirs"):
+        st.resolved()
 
 
 def test_retrain_rotates_quantizer_and_migrates_contents(

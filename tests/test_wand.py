@@ -513,6 +513,65 @@ def test_segment_store_expire(spark, corpus, tmp_path):
     assert store.load().search_bm25("brand new", 5).count() >= 1
 
 
+class _StubSeg:
+    """Spark-free stand-in for a SegmentIndex: ``save`` writes one file."""
+
+    def save(self, path):
+        with open(f"{path}/part", "w") as fh:
+            fh.write(path)
+
+
+def _stub_store(root):
+    """A VersionedSegmentStore whose ``load`` reads a _StubSeg version
+    back (raising if its directory is gone)."""
+    from textindexing_spark.sources.catalog import VersionedSegmentStore
+
+    class Loader:
+        @staticmethod
+        def load(spark, path, cfg):
+            with open(f"{path}/part") as fh:
+                return fh.read()
+
+    class Store(VersionedSegmentStore):
+        def _index_class(self):
+            return Loader
+
+    return Store(None, root)
+
+
+def test_segment_store_expire_never_deletes_latest(tmp_path):
+    """A crashed writer's claimed-but-unpublished v3 slot must not count
+    as a version: expire(keep_last=1) keeps v2, the one LATEST points
+    at, and leaves v3 to the grace window."""
+    import os
+
+    store = _stub_store(str(tmp_path / "exp"))
+    assert store.commit(_StubSeg()) == 1
+    assert store.commit(_StubSeg()) == 2
+    os.mkdir(f"{store.root}/v3")
+    assert store.expire(keep_last=1) == [1]
+    assert os.path.isdir(f"{store.root}/v2")
+    assert store.load() == f"{store.root}/v2"
+    assert store.versions() == [2]
+
+
+def test_segment_store_stale_writer_commit_raises(tmp_path):
+    """Two writers read v1; B commits v2; A's commit, built from v1, must
+    raise instead of publishing a version without B's batch — and must
+    leave no slot behind that would read as a version."""
+    from textindexing_spark.sources.versionlog import ConcurrentWriterError
+
+    root = str(tmp_path / "race")
+    a, b = _stub_store(root), _stub_store(root)
+    a.commit(_StubSeg(), expect_prev=None)
+    read_a, read_b = a.latest_version(), b.latest_version()
+    assert b.commit(_StubSeg(), expect_prev=read_b) == 2
+    with pytest.raises(ConcurrentWriterError, match="from v1 to v2"):
+        a.commit(_StubSeg(), expect_prev=read_a)
+    assert a.latest_version() == 2 and a.versions() == [1, 2]
+    assert a.load() == f"{root}/v2"
+
+
 def test_upsert_duplicate_doc_ids_in_batch(spark):
     """A batch carrying the same doc_id twice (retry that unioned a
     change set with itself) must index the doc ONCE — duplicate

@@ -74,7 +74,11 @@ def fs_write_text(spark, path: str, text: str) -> None:
         stream.close()
     if fs.exists(p):
         fs.delete(p, False)
-    fs.rename(tmp, p)
+    # Hadoop reports a failed rename (common on object stores) by
+    # returning False, not by raising: unchecked, the stage would lose
+    # its manifest, and with it resumability, without an error
+    if not fs.rename(tmp, p):
+        raise OSError(f"could not rename {tmp_path} to {path}")
 
 
 def partition_lineage(df: DataFrame) -> list[dict]:

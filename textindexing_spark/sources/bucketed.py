@@ -29,8 +29,9 @@ index. At lake scale that translates to TWO mechanisms, both here:
    Iceberg's MERGE INTO file-level copy-on-write.
 
 Versions are manifests (v{N}.json mapping bucket -> directory, plus the
-delta list) committed with an atomic LATEST pointer swap (≙ the
-reference's state-pointer swap, ImmutableIndex.cs:92-96). Merge
+delta list) published through the store's VersionLog
+(sources/versionlog.py: an atomic LATEST pointer swap ≙ the reference's
+state-pointer swap, ImmutableIndex.cs:92-96). Merge
 semantics are exactly ``Index.merge`` (IIndex.cs:116-119): a re-merged
 doc REPLACES its postings, an empty token set DELETES the doc, emptied
 terms disappear — gated by the streaming==bulk equivalence tests plus
@@ -38,11 +39,11 @@ randomized merge-sequence equivalence (test_pipeline.py).
 
 Concurrency contract: SINGLE WRITER (matching the reference's
 write-locked merge, ImmutableIndex.cs:98-106) — and the contract is
-ENFORCED: every commit records the manifest version it read and swaps
-LATEST via compare-and-set under an fcntl lock, so a second writer that
-raced the first fails loudly with ConcurrentWriterError (replay on the
-new version) instead of silently clobbering the pointer; its orphaned
-data dirs are reclaimed by vacuum. Readers are always safe: they pin an
+ENFORCED: every commit records the manifest version it read and
+publishes with the log's compare-and-set, so a second writer that raced
+the first fails loudly with ConcurrentWriterError (replay on the new
+version) instead of silently clobbering the pointer; its orphaned data
+dirs are reclaimed by vacuum. Readers are always safe: they pin an
 immutable manifest.
 
 At 100 TB: bucket count scales with the corpus (constant bucket size);
@@ -53,7 +54,6 @@ per-batch tax.
 
 from __future__ import annotations
 
-import json
 import os
 from functools import reduce
 
@@ -61,6 +61,8 @@ from pyspark.sql import DataFrame, functions as F
 
 from textindexing_spark.config import IndexConfig
 from textindexing_spark.operators.query import Index
+from textindexing_spark.sources.versionlog import (  # noqa: F401
+    ConcurrentWriterError, VersionLog)
 
 POSTINGS_DDL = ("term string, df bigint, total_tf bigint, "
                 "postings array<struct<doc_id:bigint,tf:int>>")
@@ -71,18 +73,27 @@ IDS_DDL = "doc_id bigint"
 _TABLES = ("postings", "doc_tokens", "documents")
 
 
-class ConcurrentWriterError(RuntimeError):
-    """Raised when a commit observes that another writer advanced LATEST
-    since this commit read its base version — the loud alternative to
-    silent last-writer-wins on the manifest pointer."""
+def read_dirs(spark, paths: list[str], ddl: str) -> DataFrame:
+    """Read the parquet dirs a manifest references (empty table for
+    none). A referenced dir that no longer exists is CORRUPTION (e.g. a
+    mis-timed vacuum), not an empty table: skipping it would make whole
+    buckets of a store vanish from query results with no error."""
+    missing = [p for p in paths if not os.path.isdir(p)]
+    if missing:
+        raise ValueError(
+            f"manifest references missing data dirs {missing}; "
+            "the store is corrupt (vacuumed while a reader or an "
+            "uncommitted writer held this version?)")
+    if not paths:
+        return spark.createDataFrame([], ddl)
+    return spark.read.schema(ddl).parquet(*paths)
 
 
 class BucketedIndexStore:
     """Snapshot-versioned boolean index with O(batch) delta commits and
-    bucket-level copy-on-write compaction. Same external surface as
-    VersionedIndexStore (latest_version / versions / load -> Index) plus
-    ``commit_merge`` which IS the merge — there is no full-index rewrite
-    anywhere on this path."""
+    bucket-level copy-on-write compaction: latest_version / versions /
+    load -> Index, plus ``commit_merge`` which IS the merge — there is
+    no full-index rewrite anywhere on this path."""
 
     def __init__(self, spark, root: str, cfg: IndexConfig | None = None,
                  n_term_buckets: int = 64, n_doc_buckets: int = 64):
@@ -94,7 +105,7 @@ class BucketedIndexStore:
         self.cfg = cfg or IndexConfig()
         self.n_term_buckets = n_term_buckets
         self.n_doc_buckets = n_doc_buckets
-        os.makedirs(root, exist_ok=True)
+        self.log = VersionLog(root)
 
     # -- bucket functions (must stay stable across versions) --------------
 
@@ -109,88 +120,21 @@ class BucketedIndexStore:
     # -- version bookkeeping ----------------------------------------------
 
     def latest_version(self) -> int | None:
-        try:
-            with open(f"{self.root}/LATEST") as fh:
-                return int(fh.read().strip())
-        except FileNotFoundError:
-            return None
+        return self.log.latest()
 
     def versions(self) -> list[int]:
-        return sorted(int(f[1:-5]) for f in os.listdir(self.root)
-                      if f.startswith("v") and f.endswith(".json")
-                      and f[1:-5].isdigit())
+        return self.log.versions()
 
     def manifest(self, version: int | None = None) -> dict | None:
-        v = self.latest_version() if version is None else version
-        if v is None:
-            return None
-        with open(f"{self.root}/v{v}.json") as fh:
-            m = json.load(fh)
-        m.setdefault("deltas", [])
+        m = self.log.manifest(version)
+        if m is not None:
+            m.setdefault("deltas", [])
         return m
-
-    def _attempt_dir(self, v: int) -> str:
-        """Per-ATTEMPT data directory: racing writers must never share an
-        uncommitted directory (the CAS decides whose manifest lands; the
-        loser's unique dir becomes an orphan for vacuum)."""
-        import uuid
-
-        return f"{self.root}/v{v}_data_{uuid.uuid4().hex[:8]}"
-
-    _NO_EXPECT = object()
-
-    def _write_manifest(self, v: int, man: dict,
-                        expect_prev=_NO_EXPECT) -> int:
-        """Commit manifest v and swap LATEST. When ``expect_prev`` is
-        given (every merge/compaction path passes the version it READ —
-        including ``None`` for "I read an EMPTY store", which still
-        participates in the CAS: two writers racing the very first
-        commit must not both succeed), the swap is a compare-and-set
-        under an fcntl lock: if another writer advanced LATEST in
-        between, this commit raises ConcurrentWriterError instead of
-        silently clobbering the other writer's version — its data
-        directories are orphans for vacuum. (On an object store the CAS
-        would be a conditional put of the pointer object; the lockfile
-        is the local-FS stand-in.)"""
-        import fcntl
-
-        with open(f"{self.root}/.commit_lock", "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            current = self.latest_version()
-            if expect_prev is not self._NO_EXPECT and \
-                    current != expect_prev:
-                prev_desc = ("empty store" if expect_prev is None
-                             else f"v{expect_prev}")
-                raise ConcurrentWriterError(
-                    f"LATEST moved from {prev_desc} to v{current} "
-                    f"during this commit; replay the batch on the new "
-                    f"version")
-            tmp = f"{self.root}/v{v}.json.tmp"
-            with open(tmp, "w") as fh:
-                json.dump(man, fh)
-            os.replace(tmp, f"{self.root}/v{v}.json")
-            tmp = f"{self.root}/LATEST.tmp"
-            with open(tmp, "w") as fh:
-                fh.write(str(v))
-            os.replace(tmp, f"{self.root}/LATEST")
-        return v
 
     # -- readers ----------------------------------------------------------
 
     def _read(self, paths: list[str], ddl: str) -> DataFrame:
-        # a path the manifest references but that no longer exists is
-        # CORRUPTION (e.g. a mis-timed vacuum), not an empty table —
-        # silently skipping it would make whole buckets of documents
-        # vanish from query results with no error
-        missing = [p for p in paths if not os.path.isdir(p)]
-        if missing:
-            raise ValueError(
-                f"manifest references missing data dirs {missing}; "
-                "the store is corrupt (vacuumed while a reader or an "
-                "uncommitted writer held this version?)")
-        if not paths:
-            return self.spark.createDataFrame([], ddl)
-        return self.spark.read.schema(ddl).parquet(*paths)
+        return read_dirs(self.spark, paths, ddl)
 
     def load(self, version: int | None = None) -> Index:
         """Resolved view of a version: base plus deltas, last-wins-per-doc.
@@ -275,7 +219,7 @@ class BucketedIndexStore:
             prev_v = self.latest_version()
             prev = self.manifest(prev_v)
         v = (prev_v or 0) + 1
-        vdir = self._attempt_dir(v)
+        vdir = self.log.attempt_dir(v)
         new_tokens = (tokenize_documents(docs, self.cfg, id_col=id_col,
                                          text_col=text_col)
                       .persist(StorageLevel.MEMORY_AND_DISK))
@@ -286,7 +230,7 @@ class BucketedIndexStore:
                 man = self._fold_into_buckets(prev, new_tokens, batch_ids,
                                               vdir)
                 man["deltas"] = list(prev["deltas"])
-                return self._write_manifest(v, man, expect_prev=prev_v)
+                return self.log.publish(v, prev_v, man)
 
             ddir = f"{vdir}/delta"
             n_docs = self._write_delta(ddir, batch_ids, new_tokens,
@@ -295,7 +239,7 @@ class BucketedIndexStore:
             deltas = self._tier_merge(deltas, vdir)
             man = {t: dict(prev[t]) for t in _TABLES}
             man["deltas"] = deltas
-            return self._write_manifest(v, man, expect_prev=prev_v)
+            return self.log.publish(v, prev_v, man)
         finally:
             new_tokens.unpersist()
             batch_ids.unpersist()
@@ -358,7 +302,7 @@ class BucketedIndexStore:
         from pyspark import StorageLevel
 
         v = (prev_v or 0) + 1
-        vdir = self._attempt_dir(v)
+        vdir = self.log.attempt_dir(v)
         # resolved state of all delta docs (newest wins), plus the full
         # override set as batch ids
         later = None
@@ -379,7 +323,7 @@ class BucketedIndexStore:
         try:
             man = self._fold_into_buckets(prev, new_tokens, batch_ids, vdir)
             man["deltas"] = []
-            return self._write_manifest(v, man, expect_prev=prev_v)
+            return self.log.publish(v, prev_v, man)
         finally:
             new_tokens.unpersist()
             batch_ids.unpersist()
@@ -400,41 +344,12 @@ class BucketedIndexStore:
         manifest has not landed yet (deleting its attempt dir would let
         its commit succeed pointing at vanished data; cf. Iceberg's
         remove_orphan_files older_than guard)."""
-        import shutil
-        import time
-
-        keep_last = max(int(keep_last), 1)
-        versions = self.versions()
-        if not versions:
-            return []
-        # NO early return when every version is kept: the orphan-dir
-        # sweep below must still run — aged attempt dirs from lost CAS
-        # races (and dirs a previous grace-window pass spared after
-        # their manifests were already dropped) are collectable only
-        # here
-        keep_vs = set(versions[-keep_last:])
-        referenced: set[str] = set()
-        for v in keep_vs:
+        def referenced(v):
             m = self.manifest(v)
-            for t in _TABLES:
-                referenced.update(m[t].values())
-            for d in m["deltas"]:
-                referenced.add(d["dir"])
-        deleted = []
-        now = time.time()
-        for name in sorted(os.listdir(self.root)):
-            full = f"{self.root}/{name}"
-            if "_data" in name and os.path.isdir(full):
-                if not any(p == full or p.startswith(full + "/")
-                           for p in referenced) \
-                        and now - os.path.getmtime(full) >= grace_s:
-                    shutil.rmtree(full, ignore_errors=True)
-                    deleted.append(full)
-            elif name.startswith("v") and name.endswith(".json") \
-                    and name[1:-5].isdigit() and int(name[1:-5]) not in keep_vs:
-                os.unlink(full)
-                deleted.append(full)
-        return deleted
+            return ([p for t in _TABLES for p in m[t].values()]
+                    + [d["dir"] for d in m["deltas"]])
+
+        return self.log.vacuum(referenced, keep_last, grace_s)
 
     def _fold_into_buckets(self, prev: dict, new_tokens: DataFrame,
                            batch_ids: DataFrame, vdir: str) -> dict:

@@ -1,16 +1,18 @@
-"""Snapshot-versioned index store — the engine's MVCC layer.
+"""Snapshot-versioned segment stores — the scale path's MVCC layer.
 
 The reference gets snapshot isolation from copy-on-write immutable state
 (ImmutableIndex.cs:20-22,92-96,177: queries read a volatile state pointer;
 merges swap it atomically). The lake-format equivalent is Iceberg snapshot
-commits; Iceberg jars are not in this image, so this module implements the
-same contract directly over parquet:
+commits; Iceberg jars are not in this image, so the stores implement the
+same contract directly over parquet, through the store's VersionLog
+(sources/versionlog.py):
 
-    <root>/v{N}/postings/, <root>/v{N}/documents/   -- immutable versions
-    <root>/LATEST                                    -- atomic pointer file
+    <root>/v{N}/     -- immutable, self-contained index versions
+    <root>/LATEST    -- atomic pointer file
 
-- ``commit`` writes a new version directory then atomically replaces
-  LATEST (os.replace ≙ the state-pointer swap);
+- ``commit`` saves the index into a freshly claimed ``v{N}`` slot, then
+  publishes it (the state-pointer swap; a compare-and-set when the
+  caller passes the version it read);
 - ``load(version)`` pins a snapshot: later commits never touch committed
   version dirs, so a pinned reader is isolated (IndexTests.cs:102-118);
 - time travel = load any historical version.
@@ -19,9 +21,12 @@ same contract directly over parquet:
 from __future__ import annotations
 
 import os
+import shutil
 
 from textindexing_spark.config import IndexConfig
 from textindexing_spark.operators.query import Index
+from textindexing_spark.sources.versionlog import (
+    ANY, ConcurrentWriterError, VersionLog)
 
 _EMPTY_POSTINGS = ("term string, df bigint, total_tf bigint, "
                    "postings array<struct<doc_id:bigint,tf:int>>")
@@ -35,96 +40,62 @@ def empty_index(spark, cfg: IndexConfig | None = None) -> Index:
                  cfg or IndexConfig())
 
 
-def _claim_version(root: str, start: int) -> int:
-    """Atomically claim the next free version slot: os.mkdir is the
-    compare-and-set (it fails if a racing writer claimed v{N} first, in
-    which case this writer takes the next number). Without the claim,
-    two writers that both read LATEST=5 would write interleaved part
-    files into the SAME v6 directory and one index would be silently
-    lost."""
-    v = start
-    while True:
-        try:
-            os.mkdir(f"{root}/v{v}")
-            return v
-        except FileExistsError:
-            v += 1
-
-
-def _advance_latest(root: str, v: int) -> None:
-    """Move the LATEST pointer forward to ``v`` — never backward: two
-    racing writers hold DISTINCT claimed versions, and the pointer must
-    end on the numerically newest one regardless of commit completion
-    order (fcntl lock ≙ a conditional pointer put on an object store)."""
-    import fcntl
-
-    with open(f"{root}/.commit_lock", "w") as lock:
-        fcntl.flock(lock, fcntl.LOCK_EX)
-        try:
-            with open(f"{root}/LATEST") as fh:
-                cur = int(fh.read().strip())
-        except FileNotFoundError:
-            cur = 0
-        if v > cur:
-            tmp = f"{root}/LATEST.tmp"
-            with open(tmp, "w") as fh:
-                fh.write(str(v))
-            os.replace(tmp, f"{root}/LATEST")
-
-
 class VersionedSegmentStore:
-    """Snapshot-versioned store for the compressed SegmentIndex — the
-    scale path's MVCC layer. Same contract as VersionedIndexStore
-    (immutable v{N} dirs + atomic LATEST pointer ≙ ImmutableIndex's
-    state-pointer swap); versions are written by SegmentIndex.save and
-    are usually produced by shard-local upserts."""
+    """Snapshot-versioned store for the compressed SegmentIndex; versions
+    are written by SegmentIndex.save and are usually produced by
+    shard-local upserts."""
 
     def __init__(self, spark, root: str, cfg: IndexConfig | None = None):
         self.spark = spark
         self.root = root
         self.cfg = cfg or IndexConfig()
-        os.makedirs(root, exist_ok=True)
+        self.log = VersionLog(root)
 
-    def _latest(self) -> int | None:
-        try:
-            with open(f"{self.root}/LATEST") as fh:
-                return int(fh.read().strip())
-        except FileNotFoundError:
-            return None
+    def latest_version(self) -> int | None:
+        return self.log.latest()
+
+    # the pointer reader's older name, still read by the benchmark
+    _latest = latest_version
 
     def versions(self) -> list[int]:
-        return sorted(int(d[1:]) for d in os.listdir(self.root)
-                      if d.startswith("v") and d[1:].isdigit())
+        return self.log.versions()
 
-    def load(self, version: int | None = None):
+    def _index_class(self):
         from textindexing_spark.operators.bm25 import SegmentIndex
 
-        v = self._latest() if version is None else version
+        return SegmentIndex
+
+    def load(self, version: int | None = None):
+        v = self.latest_version() if version is None else version
         if v is None:
             return None
-        return SegmentIndex.load(self.spark, f"{self.root}/v{v}", self.cfg)
+        return self._index_class().load(self.spark, f"{self.root}/v{v}",
+                                        self.cfg)
 
-    def commit(self, seg) -> int:
-        v = _claim_version(self.root, (self._latest() or 0) + 1)
-        seg.save(f"{self.root}/v{v}")
-        _advance_latest(self.root, v)
-        return v
+    def commit(self, seg, expect_prev=ANY) -> int:
+        """Save ``seg`` as a new version and publish it. ``expect_prev``
+        (the version the caller read, None for an empty store) makes the
+        publish a compare-and-set: a stale writer gets
+        ConcurrentWriterError and its slot is removed — it sits at or
+        below LATEST, where it would otherwise read as a published
+        version."""
+        v, path = self.log.claim_slot()
+        seg.save(path)
+        try:
+            return self.log.publish(v, expect_prev)
+        except ConcurrentWriterError:
+            shutil.rmtree(path, ignore_errors=True)
+            raise
 
     def expire(self, keep_last: int = 2) -> list[int]:
-        """Drop all but the newest ``keep_last`` versions (segment
-        versions are self-contained directories, so expiry is a plain
-        delete — ≙ Iceberg expire_snapshots). ``keep_last`` is clamped
-        to >= 1: expiring everything would delete the version LATEST
-        points at and leave the store unloadable. Returns expired
-        versions."""
-        import shutil
-
-        keep_last = max(int(keep_last), 1)
-        versions = self.versions()
-        expired = versions[:-keep_last]
-        for v in expired:
-            shutil.rmtree(f"{self.root}/v{v}", ignore_errors=True)
-        return expired
+        """Drop all but the newest ``keep_last`` published versions
+        (segment versions are self-contained directories, so expiry is a
+        plain delete — ≙ Iceberg expire_snapshots), clamped to >= 1 so
+        the version LATEST points at survives. Unpublished slots above
+        LATEST (a crashed or in-flight writer's) go only once older than
+        the log's grace window. Returns the deleted versions."""
+        return sorted(int(os.path.basename(p)[1:])
+                      for p in self.log.vacuum(keep_last=keep_last))
 
 
 class VersionedPositionalStore(VersionedSegmentStore):
@@ -133,50 +104,8 @@ class VersionedPositionalStore(VersionedSegmentStore):
     versions are produced by ``PositionalSegmentIndex.upsert`` (shard-
     local rewrites) and written by its ``save``."""
 
-    def load(self, version: int | None = None):
+    def _index_class(self):
         from textindexing_spark.operators.phrase import (
             PositionalSegmentIndex)
 
-        v = self._latest() if version is None else version
-        if v is None:
-            return None
-        return PositionalSegmentIndex.load(
-            self.spark, f"{self.root}/v{v}", self.cfg)
-
-
-class VersionedIndexStore:
-    def __init__(self, spark, root: str, cfg: IndexConfig | None = None):
-        self.spark = spark
-        self.root = root
-        self.cfg = cfg or IndexConfig()
-        os.makedirs(root, exist_ok=True)
-
-    def latest_version(self) -> int | None:
-        try:
-            with open(f"{self.root}/LATEST") as fh:
-                return int(fh.read().strip())
-        except FileNotFoundError:
-            return None
-
-    def versions(self) -> list[int]:
-        return sorted(int(d[1:]) for d in os.listdir(self.root)
-                      if d.startswith("v") and d[1:].isdigit())
-
-    def load(self, version: int | None = None) -> Index:
-        """Pin a snapshot (None = latest). Empty store -> empty index."""
-        v = self.latest_version() if version is None else version
-        if v is None:
-            return empty_index(self.spark, self.cfg)
-        path = f"{self.root}/v{v}"
-        return Index.load(self.spark, path, self.cfg)
-
-    def commit(self, idx: Index) -> int:
-        """Write a new immutable version; atomic LATEST swap (the slot
-        is mkdir-claimed first so racing writers get distinct version
-        directories — see _claim_version)."""
-        v = _claim_version(self.root, (self.latest_version() or 0) + 1)
-        path = f"{self.root}/v{v}"
-        idx.postings.write.mode("overwrite").parquet(f"{path}/postings")
-        idx.documents.write.mode("overwrite").parquet(f"{path}/documents")
-        _advance_latest(self.root, v)
-        return v
+        return PositionalSegmentIndex

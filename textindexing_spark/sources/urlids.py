@@ -36,6 +36,8 @@ import os
 
 from pyspark.sql import DataFrame, functions as F
 
+from textindexing_spark.sources.versionlog import VersionLog
+
 URLMAP_DDL = "url string, doc_id bigint"
 
 
@@ -52,14 +54,12 @@ class UrlIdTable:
         self.path = path
         self.n_buckets = n_buckets
         self.compact_every = max(int(compact_every), 1)
-        os.makedirs(path, exist_ok=True)
-
-    def _latest(self) -> int | None:
-        try:
-            with open(f"{self.path}/LATEST") as fh:
-                return int(fh.read().strip())
-        except FileNotFoundError:
-            return None
+        # LATEST counts committed chunks. The log's writer lock covers the
+        # whole assign/compact/vacuum critical section: id assignment is a
+        # read-modify-write over NEXT_ID + LATEST (+ BASE.json), so
+        # unserialized writers would mint the same id range for two url
+        # sets or clobber each other's chunk. Readers never lock.
+        self.log = VersionLog(path)
 
     def _base_meta(self) -> dict:
         """{'base': dir-or-None, 'folded_through': chunk version}."""
@@ -69,35 +69,8 @@ class UrlIdTable:
         except FileNotFoundError:
             return {"base": None, "folded_through": 0}
 
-    def _swap(self, name: str, content: str) -> None:
-        tmp = f"{self.path}/{name}.tmp"
-        with open(tmp, "w") as fh:
-            fh.write(content)
-        os.replace(tmp, f"{self.path}/{name}")
-
-    def _lock(self):
-        """Exclusive writer lock for the whole assign/compact/vacuum
-        critical section. Id assignment is a read-modify-write over
-        NEXT_ID + LATEST (+ BASE.json), so concurrent unserialized
-        writers would mint the same id range for two different url sets
-        or clobber each other's chunk — the dimension is a serialized
-        id service, exactly like the store-level commit CAS
-        (sources/bucketed.py). Readers never lock: the atomic pointer
-        swaps keep mapping() consistent. (On an object store this
-        becomes a conditional put of the pointer object.)"""
-        import fcntl
-        from contextlib import contextmanager
-
-        @contextmanager
-        def held():
-            with open(f"{self.path}/.lock", "w") as fh:
-                fcntl.flock(fh, fcntl.LOCK_EX)
-                yield
-
-        return held()
-
     def _live_paths(self) -> list[str]:
-        v = self._latest()
+        v = self.log.latest()
         if v is None:
             return []
         meta = self._base_meta()
@@ -115,7 +88,7 @@ class UrlIdTable:
         return self.spark.read.schema(URLMAP_DDL).parquet(*paths)
 
     def _next_id(self) -> int:
-        v = self._latest()
+        v = self.log.latest()
         if v is None:
             return 0
         try:
@@ -129,14 +102,14 @@ class UrlIdTable:
     def assign(self, df: DataFrame, url_col: str = "url") -> DataFrame:
         """Return ``df`` with a ``doc_id`` column; unseen urls get fresh
         dense ids appended to the table first (atomic commit, serialized
-        across writers by ``_lock`` — new-url discovery must see any
+        across writers by the log's lock — new-url discovery must see any
         concurrent writer's committed chunk or two batches would mint
         overlapping id ranges)."""
         if "doc_id" in df.columns:
             raise ValueError(
                 "input already has a doc_id column — drop it before "
                 "assign() (ids come from this dimension, not the input)")
-        with self._lock():
+        with self.log.lock():
             return self._assign_locked(df, url_col)
 
     def _assign_locked(self, df: DataFrame, url_col: str) -> DataFrame:
@@ -180,13 +153,13 @@ class UrlIdTable:
             assigned = (new_urls.withColumn("b", bucket)
                         .groupBy("b")
                         .applyInPandas(rank_bucket, URLMAP_DDL))
-            v = (self._latest() or 0) + 1
+            v = (self.log.latest() or 0) + 1
             assigned.write.mode("overwrite").parquet(
                 f"{self.path}/chunk{v}")
-            self._swap("NEXT_ID", str(acc))
-            self._swap("LATEST", str(v))
+            self.log.swap("NEXT_ID", str(acc))
+            self.log.publish(v)
             if v - self._base_meta()["folded_through"] >= self.compact_every:
-                self._compact_locked()
+                self.compact()
         new_urls.unpersist()
         full = self.mapping()
         return df.join(full, df[url_col] == full["url"], "left") \
@@ -197,43 +170,37 @@ class UrlIdTable:
         base generation (crash-safe: the BASE.json swap is last, so an
         interrupted fold leaves the previous base + chunks readable).
         Returns the new base directory."""
-        with self._lock():
-            return self._compact_locked()
-
-    def _compact_locked(self) -> str | None:
-        v = self._latest()
-        if v is None:
-            return None
-        meta = self._base_meta()
-        gen = int(os.path.basename(meta["base"] or "base0")[4:]) + 1
-        new_base = f"{self.path}/base{gen}"
-        # hash-clustered flat layout (one file per url-hash group) so the
-        # base unions cleanly with flat chunks and join/anti-join sides
-        # cluster the same urls together; file count = n_buckets scales
-        # with the dimension
-        (self.mapping()
-         .repartition(self.n_buckets, F.xxhash64("url"))
-         .write.mode("overwrite").parquet(new_base))
-        self._swap("BASE.json",
-                   json.dumps({"base": new_base, "folded_through": v}))
-        return new_base
+        with self.log.lock():
+            v = self.log.latest()
+            if v is None:
+                return None
+            meta = self._base_meta()
+            gen = int(os.path.basename(meta["base"] or "base0")[4:]) + 1
+            new_base = f"{self.path}/base{gen}"
+            # hash-clustered flat layout (one file per url-hash group) so
+            # the base unions cleanly with flat chunks and join/anti-join
+            # sides cluster the same urls together; file count =
+            # n_buckets scales with the dimension
+            (self.mapping()
+             .repartition(self.n_buckets, F.xxhash64("url"))
+             .write.mode("overwrite").parquet(new_base))
+            self.log.swap("BASE.json", json.dumps(
+                {"base": new_base, "folded_through": v}))
+            return new_base
 
     def vacuum(self) -> list[str]:
         """Delete superseded base generations and folded chunks (kept
         until now for in-flight readers). Returns deleted paths."""
         import shutil
 
-        with self._lock():
-            return self._vacuum_locked(shutil)
-
-    def _vacuum_locked(self, shutil) -> list[str]:
-        live = set(self._live_paths())
         deleted = []
-        for name in sorted(os.listdir(self.path)):
-            full = f"{self.path}/{name}"
-            if not os.path.isdir(full) or full in live:
-                continue
-            if name.startswith("base") or name.startswith("chunk"):
-                shutil.rmtree(full, ignore_errors=True)
-                deleted.append(full)
+        with self.log.lock():
+            live = set(self._live_paths())
+            for name in sorted(os.listdir(self.path)):
+                full = f"{self.path}/{name}"
+                if not os.path.isdir(full) or full in live:
+                    continue
+                if name.startswith("base") or name.startswith("chunk"):
+                    shutil.rmtree(full, ignore_errors=True)
+                    deleted.append(full)
         return deleted

@@ -20,12 +20,11 @@ operation is O(batch) or partition-pruned:
   partitions copy-on-write: only cells owning delta rows (or tombstoned
   rows) are rewritten; every untouched cell's directory carries into
   the new manifest byte-identical.
-- **Versioning.** Manifests (v{N}.json: cell -> dir + delta list) with
-  an atomic LATEST pointer swapped compare-and-set under an fcntl lock
-  — the same single-writer contract (and failure mode:
-  ConcurrentWriterError, orphans reclaimed by vacuum) as
-  BucketedIndexStore (sources/bucketed.py). Readers pin an immutable
-  manifest; time travel = load any version.
+- **Versioning.** Manifests (v{N}.json: cell -> dir + delta list)
+  published through the store's VersionLog (sources/versionlog.py) — the
+  same single-writer contract (and failure mode: ConcurrentWriterError,
+  orphans reclaimed by vacuum) as BucketedIndexStore. Readers pin an
+  immutable manifest; time travel = load any version.
 - **Search.** The query's probe cells are chosen DRIVER-side against
   the pinned centroids (k_cells × dim floats in numpy — no Spark job),
   then exact cosine ranks the union of those cells' base partitions and
@@ -49,7 +48,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, functions as F
 
 from textindexing_spark.operators.similarity import DOT
-from textindexing_spark.sources.bucketed import ConcurrentWriterError
+from textindexing_spark.sources.bucketed import read_dirs
+from textindexing_spark.sources.versionlog import VersionLog
 
 VEC_DDL = "vec_id bigint, embedding array<float>"
 CELL_DDL = "vec_id bigint, cell int, embedding array<float>"
@@ -74,6 +74,7 @@ class IvfVectorStore:
 
         self._cents = np.asarray(meta["centroids"], dtype=np.float64)
         self._cnorms = np.sqrt((self._cents * self._cents).sum(axis=1))
+        self.log = VersionLog(root)
 
     # -- lifecycle ----------------------------------------------------------
 
@@ -100,16 +101,11 @@ class IvfVectorStore:
         if len(centroids) != k_cells:
             raise ValueError(
                 f"expected {k_cells} centroids, got {len(centroids)}")
-        os.makedirs(root, exist_ok=True)
         meta = {"k_cells": k_cells, "dim": len(centroids[0]),
                 "centroids": centroids}
-        tmp = f"{root}/meta.json.tmp"
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh)
-        os.replace(tmp, f"{root}/meta.json")
+        VersionLog(root).swap("meta.json", json.dumps(meta))
         store = cls(spark, root)
-        store._write_manifest(0, {"cells": {}, "deltas": []},
-                              expect_prev=None)
+        store.log.publish(0, None, {"cells": {}, "deltas": []})
         return store
 
     @classmethod
@@ -128,57 +124,13 @@ class IvfVectorStore:
     # -- version bookkeeping (BucketedIndexStore contract) --------------------
 
     def latest_version(self) -> int | None:
-        try:
-            with open(f"{self.root}/LATEST") as fh:
-                return int(fh.read().strip())
-        except FileNotFoundError:
-            return None
+        return self.log.latest()
 
     def versions(self) -> list[int]:
-        return sorted(int(f[1:-5]) for f in os.listdir(self.root)
-                      if f.startswith("v") and f.endswith(".json")
-                      and f[1:-5].isdigit())
+        return self.log.versions()
 
     def manifest(self, version: int | None = None) -> dict | None:
-        v = self.latest_version() if version is None else version
-        if v is None:
-            return None
-        with open(f"{self.root}/v{v}.json") as fh:
-            return json.load(fh)
-
-    def _attempt_dir(self, v: int) -> str:
-        import uuid
-
-        return f"{self.root}/v{v}_data_{uuid.uuid4().hex[:8]}"
-
-    _NO_EXPECT = object()
-
-    def _write_manifest(self, v: int, man: dict,
-                        expect_prev=_NO_EXPECT) -> int:
-        """Atomic LATEST swap, compare-and-set against the version this
-        commit READ (None = empty store) — same loud single-writer
-        contract as BucketedIndexStore._write_manifest."""
-        import fcntl
-
-        with open(f"{self.root}/.commit_lock", "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            current = self.latest_version()
-            if expect_prev is not self._NO_EXPECT and \
-                    current != expect_prev:
-                prev_desc = ("empty store" if expect_prev is None
-                             else f"v{expect_prev}")
-                raise ConcurrentWriterError(
-                    f"LATEST moved from {prev_desc} to v{current} during "
-                    f"this commit; replay the batch on the new version")
-            tmp = f"{self.root}/v{v}.json.tmp"
-            with open(tmp, "w") as fh:
-                json.dump(man, fh)
-            os.replace(tmp, f"{self.root}/v{v}.json")
-            tmp = f"{self.root}/LATEST.tmp"
-            with open(tmp, "w") as fh:
-                fh.write(str(v))
-            os.replace(tmp, f"{self.root}/LATEST")
-        return v
+        return self.log.manifest(version)
 
     # -- assignment -----------------------------------------------------------
 
@@ -196,10 +148,7 @@ class IvfVectorStore:
     # -- readers ---------------------------------------------------------------
 
     def _read(self, paths: list[str], ddl: str) -> DataFrame:
-        paths = [p for p in paths if os.path.isdir(p)]
-        if not paths:
-            return self.spark.createDataFrame([], ddl)
-        return self.spark.read.schema(ddl).parquet(*paths)
+        return read_dirs(self.spark, paths, ddl)
 
     def _resolve(self, m: dict, cells: list[int] | None) -> DataFrame:
         """(vec_id, cell, embedding) — base + deltas, last-wins per
@@ -258,7 +207,7 @@ class IvfVectorStore:
         prev = (self.manifest(prev_v) if prev_v is not None else None) \
             or {"cells": {}, "deltas": []}
         v = (prev_v or 0) + 1
-        vdir = self._attempt_dir(v)
+        vdir = self.log.attempt_dir(v)
         # one row per vec_id within the batch: a duplicated id would
         # survive in the delta twice (tombstones only anti-join OLDER
         # state) and break replace-by-id — two rows for one vec_id in
@@ -275,16 +224,16 @@ class IvfVectorStore:
                     prev_v = self.latest_version()
                     prev = self.manifest(prev_v)
                     v = prev_v + 1
-                    vdir = self._attempt_dir(v)
+                    vdir = self.log.attempt_dir(v)
                 man = self._fold_into_cells(prev, assigned, tombs, vdir)
                 man["deltas"] = []
-                return self._write_manifest(v, man, expect_prev=prev_v)
+                return self.log.publish(v, prev_v, man)
             ddir = f"{vdir}/delta"
             n = self._write_delta(ddir, tombs, assigned)
             deltas = list(prev["deltas"]) + [{"dir": ddir, "n_vecs": n}]
             deltas = self._tier_merge(deltas, vdir)
             man = {"cells": dict(prev["cells"]), "deltas": deltas}
-            return self._write_manifest(v, man, expect_prev=prev_v)
+            return self.log.publish(v, prev_v, man)
         finally:
             assigned.unpersist()
 
@@ -295,13 +244,13 @@ class IvfVectorStore:
         prev = (self.manifest(prev_v) if prev_v is not None else None) \
             or {"cells": {}, "deltas": []}
         v = (prev_v or 0) + 1
-        vdir = self._attempt_dir(v)
+        vdir = self.log.attempt_dir(v)
         ddir = f"{vdir}/delta"
         empty = self.spark.createDataFrame([], CELL_DDL)
         self._write_delta(ddir, vec_ids.select("vec_id").distinct(), empty)
         deltas = list(prev["deltas"]) + [{"dir": ddir, "n_vecs": 0}]
         man = {"cells": dict(prev["cells"]), "deltas": deltas}
-        return self._write_manifest(v, man, expect_prev=prev_v)
+        return self.log.publish(v, prev_v, man)
 
     def _write_delta(self, ddir: str, tombstones: DataFrame,
                      vectors: DataFrame) -> int:
@@ -345,7 +294,7 @@ class IvfVectorStore:
         from pyspark import StorageLevel
 
         v = prev_v + 1
-        vdir = self._attempt_dir(v)
+        vdir = self.log.attempt_dir(v)
         # resolved delta rows (newest wins) + the full tombstone union
         later = None
         parts, tombs = [], []
@@ -364,7 +313,7 @@ class IvfVectorStore:
         try:
             man = self._fold_into_cells(prev, fresh, all_tombs, vdir)
             man["deltas"] = []
-            return self._write_manifest(v, man, expect_prev=prev_v)
+            return self.log.publish(v, prev_v, man)
         finally:
             fresh.unpersist()
             all_tombs.unpersist()
@@ -422,7 +371,7 @@ class IvfVectorStore:
         from pyspark import StorageLevel
 
         if os.path.abspath(dest_root) == os.path.abspath(self.root):
-            # create() would os.replace this store's meta.json (new
+            # create() would swap this store's meta.json (new
             # centroids) BEFORE the manifest write fails on the
             # existing LATEST — leaving live cell data partitioned
             # under a quantizer that no longer matches meta.json
@@ -445,37 +394,19 @@ class IvfVectorStore:
         finally:
             cur.unpersist()
 
-    def vacuum(self, keep_last: int = 2) -> list[str]:
+    def vacuum(self, keep_last: int = 2,
+               grace_s: float = 3600.0) -> list[str]:
         """Drop data dirs unreachable from the newest ``keep_last``
         manifests (clamped >= 1) and the older manifests themselves —
-        BucketedIndexStore.vacuum's reachability rule."""
-        import shutil
-
-        keep_last = max(int(keep_last), 1)
-        versions = self.versions()
-        if len(versions) <= keep_last:
-            return []
-        keep_vs = set(versions[-keep_last:])
-        referenced: set[str] = set()
-        for v in keep_vs:
+        BucketedIndexStore.vacuum's reachability rule, with the same
+        ``grace_s`` window sparing a younger unreferenced dir that may be
+        an in-flight writer's attempt."""
+        def referenced(v):
             m = self.manifest(v)
-            referenced.update(m["cells"].values())
-            for d in m["deltas"]:
-                referenced.add(d["dir"])
-        deleted = []
-        for name in sorted(os.listdir(self.root)):
-            full = f"{self.root}/{name}"
-            if "_data" in name and os.path.isdir(full):
-                if not any(p == full or p.startswith(full + "/")
-                           for p in referenced):
-                    shutil.rmtree(full, ignore_errors=True)
-                    deleted.append(full)
-            elif name.startswith("v") and name.endswith(".json") \
-                    and name[1:-5].isdigit() \
-                    and int(name[1:-5]) not in keep_vs:
-                os.unlink(full)
-                deleted.append(full)
-        return deleted
+            return (list(m["cells"].values())
+                    + [d["dir"] for d in m["deltas"]])
+
+        return self.log.vacuum(referenced, keep_last, grace_s)
 
     # -- search --------------------------------------------------------------
 

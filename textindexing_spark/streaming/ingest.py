@@ -15,14 +15,16 @@ Reference model -> Spark model:
   F5 progress counters               -> IngestMetrics (found/indexed/
                                         deleted/failed per batch)
   F7 start/stop + resume             -> streaming checkpointLocation +
-                                        VersionedIndexStore commits
+                                        versioned store commits
   P7 per-doc failure quarantine      -> null/undecodable text rows land in
                                         a quarantine table, never abort
 
-Each micro-batch is an upsert (Index.merge): re-crawled urls replace their
-postings, empty text deletes (SURVEY.md 1.4.2) — then an atomic snapshot
-commit. A crash between batches resumes from the streaming checkpoint and
-the last committed snapshot.
+Each micro-batch is an upsert with Index.merge semantics: re-crawled urls
+replace their postings, empty text deletes (SURVEY.md 1.4.2). Each
+ingestor commits to one store: an LSM delta in a BucketedIndexStore, or a
+shard-local upsert published as a new segment version. A crash between
+batches resumes from the streaming checkpoint and the last committed
+version.
 """
 
 from __future__ import annotations
@@ -32,7 +34,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, functions as F
 
 from textindexing_spark.config import IndexConfig
-from textindexing_spark.sources.catalog import (VersionedIndexStore,
+from textindexing_spark.sources.catalog import (VersionedPositionalStore,
                                                 VersionedSegmentStore)
 from textindexing_spark.sources.pages import PAGES_SCHEMA
 
@@ -74,18 +76,14 @@ def dedup_last_wins(batch: DataFrame) -> DataFrame:
 
 
 class StreamingIngestor:
-    """Continuously maintained index over a growing pages directory.
-
-    ``bucketed=True`` (default) maintains the index in a
-    BucketedIndexStore: each micro-batch rewrites only the term/doc
-    buckets it touches — O(delta + touched buckets) per batch.
-    ``bucketed=False`` falls back to full-snapshot commits through
-    ``Index.merge`` (the logical-rebuild plan; demo scale only)."""
+    """Continuously maintained index over a growing pages directory, kept
+    in a BucketedIndexStore: each micro-batch is an O(batch) LSM delta
+    commit, and compaction rewrites only the term/doc buckets it
+    touches."""
 
     def __init__(self, spark, index_root: str,
                  cfg: IndexConfig | None = None,
                  quarantine_path: str | None = None,
-                 bucketed: bool = True,
                  n_term_buckets: int = 64, n_doc_buckets: int = 64,
                  compact_every: int | None = None,
                  transform=None):
@@ -104,15 +102,7 @@ class StreamingIngestor:
         # keeps its old version; pair with reconcile_deletes or emit
         # empty-text tombstones from the transform to remove instead.
         self.transform = transform
-        if bucketed:
-            from textindexing_spark.sources.bucketed import (
-                BucketedIndexStore)
-
-            self.store = BucketedIndexStore(
-                spark, index_root, self.cfg,
-                n_term_buckets=n_term_buckets, n_doc_buckets=n_doc_buckets)
-        else:
-            self.store = VersionedIndexStore(spark, index_root, self.cfg)
+        self.store = self._open_store(n_term_buckets, n_doc_buckets)
         self.quarantine_path = quarantine_path or f"{index_root}/_quarantine"
         from textindexing_spark.sources.urlids import UrlIdTable
 
@@ -121,11 +111,16 @@ class StreamingIngestor:
         self.url_ids = UrlIdTable(spark, f"{index_root}/_urlmap")
         self.metrics = IngestMetrics()
 
+    def _open_store(self, n_term_buckets: int, n_doc_buckets: int):
+        from textindexing_spark.sources.bucketed import BucketedIndexStore
+
+        return BucketedIndexStore(
+            self.spark, self.index_root, self.cfg,
+            n_term_buckets=n_term_buckets, n_doc_buckets=n_doc_buckets)
+
     def _version(self) -> int:
         """The store's latest committed version, 0 before the first."""
-        store = self.store
-        latest = getattr(store, "latest_version", None) or store._latest
-        return latest() or 0
+        return self.store.latest_version() or 0
 
     # -- batch core (shared by streaming + manual batch ingest) -----------
 
@@ -166,10 +161,7 @@ class StreamingIngestor:
 
     def _merge_docs(self, docs: DataFrame) -> int:
         """Commit one docs(doc_id, text) batch with upsert semantics."""
-        if hasattr(self.store, "commit_merge"):
-            # O(batch) path: LSM delta commit
-            return self.store.commit_merge(docs)
-        return self.store.commit(self.store.load().merge(docs))
+        return self.store.commit_merge(docs)
 
     def reconcile_deletes(self, source_dir: str) -> int:
         """Delete detection for the watch loop: documents whose url is no
@@ -329,13 +321,14 @@ class StreamingSegmentIngestor(StreamingIngestor):
     P7 semantics, but per-batch cost is O(touched shards), not a logical
     rebuild."""
 
+    store_class = VersionedSegmentStore
+
     def __init__(self, spark, index_root: str,
                  cfg: IndexConfig | None = None,
                  quarantine_path: str | None = None,
                  n_shards: int = 64, transform=None):
         super().__init__(spark, index_root, cfg, quarantine_path,
-                         bucketed=False, transform=transform)
-        self.store = VersionedSegmentStore(spark, index_root, self.cfg)
+                         transform=transform)
         self.n_shards = n_shards
 
     # batch pipeline (quarantine -> dedup -> transform -> id assign ->
@@ -343,24 +336,32 @@ class StreamingSegmentIngestor(StreamingIngestor):
     # override let the two paths drift (the parent's quarantine-order
     # fix and compact hook did not apply here)
 
-    def _merge_docs(self, docs: DataFrame) -> int:
+    def _open_store(self, *_buckets):
+        return self.store_class(self.spark, self.index_root, self.cfg)
+
+    def _build(self, docs: DataFrame):
         from textindexing_spark.operators.bm25 import (
             build_segments_from_docs)
 
-        base = self.store.load()
-        if base is None:
-            new_seg = build_segments_from_docs(self.spark, docs, self.cfg,
-                                               n_shards=self.n_shards)
-        else:
-            new_seg = base.upsert(docs)
+        return build_segments_from_docs(self.spark, docs, self.cfg,
+                                        n_shards=self.n_shards)
+
+    def _merge_docs(self, docs: DataFrame) -> int:
+        # read-modify-write of one exact version: the commit is a
+        # compare-and-set against it, so a writer that raced this one
+        # fails loudly instead of publishing a version built without
+        # the other writer's batch
+        prev = self.store.latest_version()
+        new_idx = (self._build(docs) if prev is None
+                   else self.store.load(prev).upsert(docs))
         try:
-            return self.store.commit(new_seg)
+            return self.store.commit(new_idx, expect_prev=prev)
         finally:
             # the fused frame was MEMORY_AND_DISK-persisted inside the
             # build/upsert; once committed to parquet it must leave the
             # cache or a long-running stream leaks one full index copy
             # per micro-batch
-            new_seg.unpersist()
+            new_idx.unpersist()
 
 
 class StreamingPositionalIngestor(StreamingSegmentIngestor):
@@ -370,28 +371,11 @@ class StreamingPositionalIngestor(StreamingSegmentIngestor):
     ``PositionalSegmentIndex.upsert`` — the streaming completion of the
     round-3 phrase extension."""
 
-    def __init__(self, spark, index_root: str,
-                 cfg: IndexConfig | None = None,
-                 quarantine_path: str | None = None,
-                 n_shards: int = 64, transform=None):
-        from textindexing_spark.sources.catalog import (
-            VersionedPositionalStore)
+    store_class = VersionedPositionalStore
 
-        super().__init__(spark, index_root, cfg, quarantine_path,
-                         n_shards=n_shards, transform=transform)
-        self.store = VersionedPositionalStore(spark, index_root, self.cfg)
-
-    def _merge_docs(self, docs: DataFrame) -> int:
+    def _build(self, docs: DataFrame):
         from textindexing_spark.operators.phrase import (
             PositionalSegmentIndex)
 
-        base = self.store.load()
-        if base is None:
-            new_idx = PositionalSegmentIndex.build(
-                self.spark, docs, self.cfg, n_shards=self.n_shards)
-        else:
-            new_idx = base.upsert(docs)
-        try:
-            return self.store.commit(new_idx)
-        finally:
-            new_idx.unpersist()  # see StreamingSegmentIngestor._merge_docs
+        return PositionalSegmentIndex.build(
+            self.spark, docs, self.cfg, n_shards=self.n_shards)
