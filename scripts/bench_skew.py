@@ -71,13 +71,9 @@ def run_one(mode: str) -> None:
         # the doc-sharded scale path: no task ever materializes a full
         # head-term list (a stopword's postings split across all shards)
         from textindexing_spark.operators.bm25 import build_segments
-        from textindexing_spark.operators.build import document_lengths
 
-        docs_tbl = document_lengths(tokens).persist()
-        docs_tbl.count()
         t0 = time.perf_counter()
-        seg = build_segments(spark, tokens, docs_tbl, IndexConfig(),
-                             n_shards=64)
+        seg = build_segments(spark, tokens, IndexConfig(), n_shards=64)
         n = seg.segments.agg(F.sum("n_docs")).collect()[0][0]
         dt = time.perf_counter() - t0
         print(json.dumps({"mode": mode, "wall_s": round(dt, 2),

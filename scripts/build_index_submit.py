@@ -191,8 +191,7 @@ def main(argv: list[str] | None = None) -> None:
 
     index_stats = None
     if not args.skip_segments:
-        seg = build_segments(spark, tokens, documents, cfg,
-                             n_shards=args.shards)
+        seg = build_segments(spark, tokens, cfg, n_shards=args.shards)
         seg.save(f"{args.output}/segments_root")
         if args.stats:
             index_stats = seg.stats_summary()

@@ -288,6 +288,18 @@ def test_cli_files_mode_builds_index(spark, tmp_path, capsys, monkeypatch):
     assert out["index_stats"]["n_postings"] == 6  # spark indexes twice
     assert out["index_stats"]["n_shards"] == 2
 
+    # the CLI's segments are routed like upsert/reshard expect
+    from textindexing_spark.operators.bm25 import SegmentIndex
+
+    seg = SegmentIndex.load(spark, str(tmp_path / "ix" / "segments_root"))
+    assert seg.n_shards == 2
+    grown = seg.reshard(4)
+    for q in ("spark", "hello index"):
+        assert ([(r.doc_id, round(r.score, 9))
+                 for r in seg.search_bm25(q, 5).collect()]
+                == [(r.doc_id, round(r.score, 9))
+                    for r in grown.search_bm25(q, 5).collect()]), q
+
     # query the CLI-built snapshot through the query CLI's suggest mode
     # (did-you-mean): 'sprk' -> spark at edit distance 1
     qspec = importlib.util.spec_from_file_location(

@@ -250,8 +250,30 @@ def test_reshard_one_exchange_per_direction(spark, tmp_path):
     for p in (_plan(grow), _plan(shrink)):
         assert len(re.findall(r"\(\d+\) Exchange", p)) == 1, p
         assert len(re.findall(r"\(\d+\) FlatMapGroupsInPandas", p)) == 1, p
-        # no row-at-a-time Python anywhere; the one Arrow stage besides
-        # the shard kernel is the O(S)-row sum_dl coalesce on the doc
-        # tables (_shard_docs_with_sum_dl), never posting-sized work
+        # no Python stage besides the shard kernel
         assert "BatchEvalPython" not in p
-        assert len(re.findall(r"\(\d+\) ArrowEvalPython", p)) <= 1
+        assert len(re.findall(r"\(\d+\) ArrowEvalPython", p)) == 0
+
+
+def test_upsert_one_cogroup_no_python_udf(spark, tmp_path):
+    """SegmentIndex.upsert over a loaded index: the shard merge is ONE
+    FlatMapCoGroupsInPandas and no scalar Python UDF runs beside it (the
+    saved doc tables already carry sum_dl)."""
+    from textindexing_spark import IndexConfig
+    from textindexing_spark.operators.bm25 import (SegmentIndex,
+                                                   build_segments_from_docs)
+
+    docs = spark.createDataFrame(
+        [(i, f"w{i % 5} w{i % 3} common") for i in range(40)],
+        "doc_id bigint, text string")
+    build_segments_from_docs(spark, docs, IndexConfig(block_size=16),
+                             n_shards=4).save(str(tmp_path / "seg"))
+    base = SegmentIndex.load(spark, str(tmp_path / "seg"))
+    merged = base.upsert(spark.createDataFrame(
+        [(3, "fresh"), (99, "new doc")], "doc_id bigint, text string"))
+    p = _plan(merged._fused)
+    # the executed plan's node tree: upsert materialized the frame, so
+    # the cached AdaptiveSparkPlan also prints its initial plan
+    tree = p.split("\n\n")[0].split("== Initial Plan ==")[0]
+    assert tree.count("FlatMapCoGroupsInPandas") == 1, p
+    assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p, p

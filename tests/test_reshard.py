@@ -137,7 +137,7 @@ def test_reshard_shrink_equals_build_at_lower_count(spark, base, corpus):
         assert a == b, q
 
 
-def test_reshard_guards(spark, base):
+def test_reshard_guards(spark, base, tmp_path):
     with pytest.raises(ValueError, match="multiple or divisor"):
         base.reshard(6)
     with pytest.raises(ValueError, match="multiple or divisor"):
@@ -145,12 +145,23 @@ def test_reshard_guards(spark, base):
     with pytest.raises(ValueError, match="multiple or divisor"):
         base.reshard(0)
     assert base.reshard(4) is base
-    from textindexing_spark.operators.bm25 import segment_index_from
+    import json
+
+    from textindexing_spark.operators.bm25 import (SegmentIndex,
+                                                   segment_index_from)
     from textindexing_spark import build_index
 
+    # a save without a known shard count (older build CLI output, routed
+    # by pmod(doc_id, S)) must refuse a rewrite rather than mis-route
     docs = spark.createDataFrame([(1, "a b"), (2, "b c")],
                                  "doc_id bigint, text string")
-    legacy = segment_index_from(build_index(spark, docs), n_shards=2)
+    segment_index_from(build_index(spark, docs), n_shards=2).save(
+        str(tmp_path / "legacy"))
+    meta = tmp_path / "legacy" / "_meta.json"
+    meta.write_text(json.dumps({**json.loads(meta.read_text()),
+                                "n_shards": None}))
+    (tmp_path / "legacy" / "._meta.json.crc").unlink(missing_ok=True)
+    legacy = SegmentIndex.load(spark, str(tmp_path / "legacy"))
     with pytest.raises(ValueError, match="needs n_shards"):
         legacy.reshard(4)
 

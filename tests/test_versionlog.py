@@ -108,10 +108,42 @@ def test_vacuum_leaves_unpublished_slot_above_latest_to_grace(tmp_path):
     for _ in range(2):
         log.publish(log.claim_slot()[0])
     log.claim_slot()                          # v3: a crashed writer's slot
-    assert log.vacuum(keep_last=1) == [f"{tmp_path}/v1"]
+    assert log.vacuum(keep_last=1) == [f"{tmp_path}/v1",
+                                       f"{tmp_path}/v1.json"]
     assert os.path.isdir(f"{tmp_path}/v2") and os.path.isdir(f"{tmp_path}/v3")
     assert log.vacuum(keep_last=1, grace_s=0) == [f"{tmp_path}/v3"]
     assert log.versions() == [2]
+
+
+def test_failed_save_never_reads_as_published(tmp_path):
+    """A segment-store commit whose save raises removes its slot, and a
+    record-less slot below LATEST (a writer that died mid-save) is
+    neither listed nor kept in place of a published version."""
+    from textindexing_spark.sources.catalog import VersionedSegmentStore
+
+    class Seg:
+        def __init__(self, fail=False):
+            self.fail = fail
+
+        def save(self, path):
+            with open(f"{path}/part", "w") as fh:
+                fh.write("row")
+            if self.fail:
+                raise OSError("disk full")
+
+    store = VersionedSegmentStore(None, str(tmp_path))
+    assert store.commit(Seg()) == 1
+    with pytest.raises(OSError, match="disk full"):
+        store.commit(Seg(fail=True))
+    assert not os.path.exists(f"{tmp_path}/v2")
+    v, path = store.log.claim_slot()          # a writer that died in save
+    Seg().save(path)
+    assert store.commit(Seg()) == 3
+    assert store.versions() == [1, 3]
+    assert store.expire(keep_last=2) == []
+    assert store.versions() == [1, 3] and os.path.isdir(f"{tmp_path}/v1")
+    assert store.expire(keep_last=1) == [1]
+    assert os.path.isdir(path)                # left to the grace window
 
 
 def test_lock_nests_in_its_thread_and_excludes_others(tmp_path):

@@ -147,13 +147,33 @@ def test_fused_builder_stats_match(idx, seg_fused):
     n, avgdl = idx.corpus_stats()
     assert seg_fused.n_docs == n
     assert seg_fused.avgdl == pytest.approx(avgdl, rel=1e-12)
-    # shard assignment agrees between segments (TaskContext partition id)
-    # and shard_docs (pmod(hash(doc_id), S) in Catalyst)
+    # segments and shard_docs agree on every doc's shard
     seg_shards = {r["shard"] for r in
                   seg_fused.segments.select("shard").distinct().collect()}
     doc_shards = {r["shard"] for r in
                   seg_fused.shard_docs.select("shard").distinct().collect()}
     assert seg_shards == doc_shards
+
+
+def test_token_and_docs_fronts_write_identical_segments(seg, seg_fused):
+    """One shard writer: the token front (segment_index_from) and the
+    docs front (build_segments_from_docs) route and encode alike."""
+    def seg_rows(ix):
+        return sorted(
+            (r["shard"], r["term"], r["n_docs"], bytes(r["gaps"]),
+             bytes(r["tfs"]), tuple(map(tuple, r["blocks"])))
+            for r in ix.segments.collect())
+
+    def doc_rows(ix):
+        return sorted(
+            (r["shard"], bytes(r["doc_ids"]), bytes(r["doc_lens"]),
+             r["n"], r["sum_dl"])
+            for r in ix.shard_docs.collect())
+
+    assert seg_rows(seg) == seg_rows(seg_fused)
+    assert doc_rows(seg) == doc_rows(seg_fused)
+    assert (seg.n_docs, seg.avgdl) == (seg_fused.n_docs, seg_fused.avgdl)
+    assert seg.n_shards == seg_fused.n_shards == 4
 
 
 def test_negative_doc_ids_roundtrip(spark, corpus):
@@ -174,6 +194,25 @@ def test_negative_doc_ids_roundtrip(spark, corpus):
              seg_neg.search_bm25(q, 10).collect()]
         assert a == b, q
         assert any(d < 0 for d, _ in a)
+
+
+def test_int_doc_ids_route_like_bigint(spark):
+    """An int doc_id column is routed by the long hash the shard kernel
+    recomputes, so each shard keeps ONE doc table through build and
+    upsert (hashing it as int split every shard over several tasks)."""
+    from textindexing_spark.operators.bm25 import build_segments_from_docs
+
+    rows = [(i, f"w{i % 7} common") for i in range(60)]
+    seg = build_segments_from_docs(
+        spark, spark.createDataFrame(rows, "doc_id int, text string"),
+        n_shards=4)
+    seg = seg.upsert(spark.createDataFrame([(3, "fresh")],
+                                           "doc_id int, text string"))
+    shards = [r["shard"] for r in seg.shard_docs.collect()]
+    assert sorted(shards) == sorted(set(shards))
+    assert [r["doc_id"] for r in seg.search_bm25("fresh", 5).collect()] \
+        == [3]
+    assert len(seg.search_bm25("common", 100).collect()) == 59
 
 
 def test_segment_upsert_equals_rebuild(spark, corpus):
@@ -266,6 +305,30 @@ def test_segment_roundtrip_save_load(spark, seg, tmp_path):
     b = [(r.doc_id, round(r.score, 9)) for r in
          loaded.search_bm25("word1 word7", 10).collect()]
     assert a == b
+
+
+def test_index_metadata_on_file_uri(spark, tmp_path, monkeypatch):
+    """Both segment tiers read and write their metadata through the
+    Hadoop FileSystem of the path's scheme: a file:/// URI round-trips
+    and leaves no literal 'file:' directory in the working dir."""
+    from textindexing_spark.operators.bm25 import (SegmentIndex,
+                                                   build_segments_from_docs)
+    from textindexing_spark.operators.phrase import PositionalSegmentIndex
+
+    monkeypatch.chdir(tmp_path)
+    uri = (tmp_path / "out").as_uri()
+    docs = spark.createDataFrame([(1, "a b c"), (2, "b c d")],
+                                 "doc_id bigint, text string")
+    seg = build_segments_from_docs(spark, docs, n_shards=2)
+    seg.save(f"{uri}/seg")
+    back = SegmentIndex.load(spark, f"{uri}/seg")
+    assert (back.n_docs, back.avgdl, back.n_shards) == (2, 3.0, 2)
+    PositionalSegmentIndex.build(spark, docs, n_shards=2).save(f"{uri}/pos")
+    pos = PositionalSegmentIndex.load(spark, f"{uri}/pos")
+    assert pos.n_shards == 2
+    assert sorted(r.doc_id for r in pos.search_phrase("b c").collect()) \
+        == [1, 2]
+    assert not (tmp_path / "file:").exists()
 
 
 def test_upsert_single_doc_many_shards_keeps_avgdl(spark, corpus):

@@ -4,12 +4,14 @@ This is the engine's scale path for ranked retrieval (SURVEY.md section
 7.2 M4/M5) — the part Catalyst has no primitive for, implemented as
 explicit dataflow:
 
-- the index is **document-sharded**: shard = pmod(doc_id, S). Every shard
-  holds the varbyte-compressed postings of every term for its doc range
-  plus that range's doc lengths — so a query evaluates shard-locally with
-  NO join and NO shuffle of postings: one mapInPandas-style task per
-  shard, then a tiny distributed top-k reduce (orderBy+limit =
-  TakeOrderedAndProject over <= S*k rows).
+- the index is **document-sharded**: shard = pmod(murmur3(doc_id), S),
+  the routing of ``repartition(S, doc_id)``. Every shard holds the
+  varbyte-compressed postings of every term for its docs plus those
+  docs' lengths — so a query evaluates shard-locally with NO join and
+  NO shuffle of postings: one mapInPandas-style task per shard, then a
+  tiny distributed top-k reduce (orderBy+limit = TakeOrderedAndProject
+  over <= S*k rows). One shard kernel writes every segment row: both
+  build fronts (raw docs, counted tokens), upsert and reshard.
 - per posting block (block_size docs) we store skip metadata:
   (last_doc, byte offsets, n, max_tf, max_score) where max_score is the
   block's true max BM25 partial tf*(k1+1)/(tf+k1*(1-b+b*dl/avgdl)) —
@@ -60,19 +62,11 @@ SEGMENT_SCHEMA = T.StructType([
     ]))),
 ])
 
-# fused-builder output: segment rows plus ONE summary row per shard
-# (term NULL) carrying the shard's packed document table and stats
+# every shard kernel's output (_FusedRows): segment rows plus ONE summary
+# row per shard (term NULL) carrying the shard's packed document table
 FUSED_SCHEMA = T.StructType(SEGMENT_SCHEMA.fields + [
     T.StructField("doc_ids", T.BinaryType()),
     T.StructField("doc_lens", T.BinaryType()),
-    T.StructField("sum_dl", T.LongType()),
-])
-
-SHARD_DOCS_SCHEMA = T.StructType([
-    T.StructField("shard", T.IntegerType()),
-    T.StructField("doc_ids", T.BinaryType()),
-    T.StructField("doc_lens", T.BinaryType()),
-    T.StructField("n", T.IntegerType()),
     # per-shard doc-length sum: carried so corpus avgdl stays exact across
     # upserts that leave this shard untouched (its summary row passes
     # through _merge_shard_factory without decoding)
@@ -102,10 +96,7 @@ def _decoded_doc_table(token: str, shard: int, ids_blob, lens_blob):
     key = (token, int(shard))
     hit = _DOC_TABLE_CACHE.get(key)
     if hit is None:
-        hit = (codec.varbyte_decode(np.frombuffer(ids_blob,
-                                                  dtype=np.uint8)),
-               codec.varbyte_decode(np.frombuffer(lens_blob,
-                                                  dtype=np.uint8)))
+        hit = (_unpack(ids_blob), _unpack(lens_blob))
         _DOC_TABLE_CACHE[key] = hit
         global _DOC_TABLE_CACHE_BYTES
         _DOC_TABLE_CACHE_BYTES += hit[0].nbytes + hit[1].nbytes
@@ -291,7 +282,8 @@ class SegmentIndex:
 
     def save(self, path: str) -> None:
         import json
-        import os
+
+        from textindexing_spark.plans.manifest import fs_write_text
 
         # physically cluster by shard so a query task reads one file group;
         # rebind each table to its written parquet as we go so derived
@@ -305,18 +297,18 @@ class SegmentIndex:
                                                     self.n_shards)
         self.term_stats.write.mode("overwrite").parquet(f"{path}/term_stats")
         self.term_stats = self.spark.read.parquet(f"{path}/term_stats")
-        os.makedirs(path, exist_ok=True)
-        with open(f"{path}/_meta.json", "w") as fh:
-            json.dump({"n_docs": self.n_docs, "avgdl": self.avgdl,
-                       "n_shards": self.n_shards}, fh)
+        fs_write_text(self.spark, f"{path}/_meta.json", json.dumps(
+            {"n_docs": self.n_docs, "avgdl": self.avgdl,
+             "n_shards": self.n_shards}))
 
     @classmethod
     def load(cls, spark, path: str,
              cfg: IndexConfig | None = None) -> "SegmentIndex":
         import json
 
-        with open(f"{path}/_meta.json") as fh:
-            meta = json.load(fh)
+        from textindexing_spark.plans.manifest import fs_read_text
+
+        meta = json.loads(fs_read_text(spark, f"{path}/_meta.json"))
         return cls(spark,
                    spark.read.parquet(f"{path}/segments"),
                    spark.read.parquet(f"{path}/shard_docs"),
@@ -334,10 +326,8 @@ class SegmentIndex:
             for pdf in batches:
                 ids_parts, len_parts = [], []
                 for di, dl in zip(pdf["doc_ids"], pdf["doc_lens"]):
-                    ids_parts.append(codec.varbyte_decode(
-                        np.frombuffer(di, dtype=np.uint8)))
-                    len_parts.append(codec.varbyte_decode(
-                        np.frombuffer(dl, dtype=np.uint8)))
+                    ids_parts.append(_unpack(di))
+                    len_parts.append(_unpack(dl))
                 if ids_parts:
                     # one output frame per Arrow batch, not per shard row
                     # (hundreds of 1-row record batches cost more IPC
@@ -391,7 +381,7 @@ class SegmentIndex:
         pb = [r["postings_bytes"] for r in rows]
         n_post = sum(r["n_postings"] for r in rows)
         return {
-            "n_shards": len(rows),
+            "n_shards": self.n_shards or len(rows),
             "n_docs": self.n_docs,
             "avgdl": round(self.avgdl, 4),
             "n_terms_total": sum(r["n_terms"] for r in rows),
@@ -445,29 +435,6 @@ class SegmentIndex:
                             est_max_after=int(mx))
         return plan
 
-    def _shard_docs_with_sum_dl(self) -> DataFrame:
-        """shard_docs with a guaranteed non-null ``sum_dl`` column.
-        Indexes saved before sum_dl existed (or built via paths that left
-        it null) get it recomputed by decoding each shard's doc_lens blob
-        once — a narrow map over S rows, no shuffle."""
-        sd = self.shard_docs
-        if "sum_dl" not in sd.columns:
-            sd = sd.withColumn("sum_dl", F.lit(None).cast("long"))
-
-        @F.pandas_udf("long")
-        def _decode_sum(doc_lens):
-            import pandas as pd
-
-            return pd.Series([
-                int(codec.varbyte_decode(
-                    np.frombuffer(b, dtype=np.uint8)).sum())
-                if b is not None else 0
-                for b in doc_lens], dtype="int64")
-
-        return sd.withColumn(
-            "sum_dl", F.coalesce(F.col("sum_dl"),
-                                 _decode_sum(F.col("doc_lens"))))
-
     # -- incremental upsert (A1 merge at the compressed-segment level) ----
 
     def _as_fused(self) -> DataFrame:
@@ -479,15 +446,14 @@ class SegmentIndex:
                 .withColumn("doc_ids", F.lit(None).cast("binary"))
                 .withColumn("doc_lens", F.lit(None).cast("binary"))
                 .withColumn("sum_dl", F.lit(None).cast("long"))
-                .unionByName(self._shard_docs_with_sum_dl().select(
+                .unionByName(self.shard_docs.select(
                     "shard",
                     F.lit(None).cast("string").alias("term"),
                     F.col("n").cast("long").alias("n_docs"),
                     F.lit(None).cast("binary").alias("gaps"),
                     F.lit(None).cast("binary").alias("tfs"),
                     F.lit(None).cast(blocks_t).alias("blocks"),
-                    "doc_ids", "doc_lens",
-                    F.col("sum_dl").cast("long").alias("sum_dl"))))
+                    "doc_ids", "doc_lens", "sum_dl")))
 
     def upsert(self, docs: DataFrame, id_col: str = "doc_id",
                text_col: str = "text") -> "SegmentIndex":
@@ -505,14 +471,14 @@ class SegmentIndex:
         from pyspark import StorageLevel
 
         if not self.n_shards:
-            raise ValueError("upsert needs n_shards (index built by "
-                             "build_segments_from_docs or loaded with meta)")
-        delta = (docs.select(F.col(id_col).alias(id_col),
+            raise ValueError("upsert needs n_shards (a save whose "
+                             "_meta.json lacks it has an unknown routing)")
+        delta = (docs.select(F.col(id_col).cast("bigint").alias(id_col),
                              F.col(text_col).alias(text_col))
                  .repartition(self.n_shards, id_col)
-                 .mapInPandas(_fused_encoder(self.cfg, id_col, text_col,
-                                             include_empty_docs=True,
-                                             n_shards=self.n_shards),
+                 .mapInPandas(_fused_encoder(self.cfg, self.n_shards,
+                                             id_col, text_col,
+                                             include_empty_docs=True),
                               FUSED_SCHEMA))
         merged = (self._as_fused().groupby("shard")
                   .cogroup(delta.groupby("shard"))
@@ -576,9 +542,8 @@ class SegmentIndex:
         from pyspark import StorageLevel
 
         if not self.n_shards:
-            raise ValueError("reshard needs n_shards (index built by "
-                             "build_segments_from_docs or loaded with "
-                             "meta)")
+            raise ValueError("reshard needs n_shards (a save whose "
+                             "_meta.json lacks it has an unknown routing)")
         if n_shards == self.n_shards:
             return self
         if n_shards > self.n_shards and n_shards % self.n_shards == 0:
@@ -1024,106 +989,39 @@ def _term_stats_from_segments(segments: DataFrame,
     return agg
 
 
-def build_segments(spark, tokens: DataFrame, documents: DataFrame,
-                   cfg: IndexConfig | None = None,
+def build_segments(spark, tokens: DataFrame, cfg: IndexConfig | None = None,
                    n_shards: int = 8) -> SegmentIndex:
-    """tokens(doc_id, term, tf) + documents(doc_id, doc_len) ->
-    SegmentIndex.
+    """tokens(doc_id, term, tf) -> SegmentIndex: the token front of the
+    one shard writer (``build_segments_from_docs`` is the docs front).
 
-    ONE shuffle, keyed by doc shard; everything after the exchange is
-    numpy inside applyInPandas: per shard, lexsort (term, doc_id), find
-    term runs, varbyte-encode each run. Flat columns cross the shuffle —
-    deliberately NO JVM-side collect_list/sort_array of posting arrays:
-    millions of medium-size array allocations across many executor
-    threads stall the JVM allocator/GC (measured 3.5x slowdown from 8 to
-    32 local cores), while Arrow hands the same data to numpy as flat
-    columnar buffers.
+    Already-counted token rows shuffle ONCE to their doc shard
+    (``repartition(n_shards, doc_id)``, the routing upsert and reshard
+    use), and one Python task per shard feeds its (doc, term, tf) rows
+    to the shared shard tail: sort by (term, doc), cut term runs,
+    varbyte-encode each, emit the summary row. A doc's length is the sum
+    of its tf values, as ``build.document_lengths`` defines it. Flat
+    columns cross the shuffle — deliberately NO JVM-side
+    collect_list/sort_array of posting arrays: millions of medium-size
+    array allocations across many executor threads stall the JVM
+    allocator/GC (measured 3.5x slowdown from 8 to 32 local cores),
+    while Arrow hands the same data to numpy as flat columnar buffers.
 
     Scale: one task per shard; pick n_shards so a shard's token rows fit
-    a task (~10-100 MB each). Shard sizes are uniform by construction
-    (pmod over dense doc ids), so no salting is needed here — a head
-    term's postings are already spread over ALL shards.
+    a task (~10-100 MB each). A head term's postings spread over ALL
+    shards, so no salting is needed here.
     """
+    from pyspark import StorageLevel
+
     from textindexing_spark._pkg import ensure_shipped
 
     ensure_shipped(spark)
     cfg = cfg or IndexConfig()
-    row = documents.agg(F.count("*").alias("n"),
-                        F.avg("doc_len").alias("avgdl")).collect()[0]
-    n_docs, avgdl = int(row["n"]), float(row["avgdl"] or 0.0)
-    block_size = cfg.block_size
-
-    with_dl = (tokens.join(documents, "doc_id")
-               .withColumn("shard",
-                           F.pmod(F.col("doc_id"), F.lit(n_shards))
-                            .cast("int")))
-
-    def encode_shard(pdf):
-        import pandas as pd
-
-        shard = int(pdf["shard"].iloc[0])
-        doc = pdf["doc_id"].to_numpy(np.int64)
-        tf = pdf["tf"].to_numpy(np.int64)
-        dl = pdf["doc_len"].to_numpy(np.int64)
-        codes, uniq_terms = pd.factorize(pdf["term"], sort=True)
-        order = np.lexsort((doc, codes))
-        doc, tf, dl, codes = doc[order], tf[order], dl[order], codes[order]
-        starts = np.flatnonzero(np.r_[True, codes[1:] != codes[:-1]])
-        bounds = np.append(starts, codes.size)
-        rows = {"shard": [], "term": [], "n_docs": [], "gaps": [],
-                "tfs": [], "blocks": []}
-        for i in range(starts.size):
-            s, e = bounds[i], bounds[i + 1]
-            gb, tb, blocks = codec.encode_postings(doc[s:e], tf[s:e],
-                                                   block_size, dl[s:e])
-            rows["shard"].append(shard)
-            rows["term"].append(uniq_terms[codes[s]])
-            rows["n_docs"].append(int(e - s))
-            rows["gaps"].append(gb)
-            rows["tfs"].append(tb)
-            rows["blocks"].append(blocks)
-        return pd.DataFrame(rows)
-
-    segments = (with_dl.groupBy("shard")
-                .applyInPandas(encode_shard, SEGMENT_SCHEMA))
-
-    def encode_shard_docs(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values("doc_id")
-        ids = pdf["doc_id"].to_numpy(np.int64)
-        lens = pdf["doc_len"].to_numpy(np.int64)
-        return pd.DataFrame({
-            "shard": [int(pdf["shard"].iloc[0])],
-            "doc_ids": [codec.varbyte_encode(ids).tobytes()],
-            "doc_lens": [codec.varbyte_encode(lens).tobytes()],
-            "n": [ids.size],
-            "sum_dl": [int(lens.sum())],
-        })
-
-    shard_docs = (documents
-                  .withColumn("shard",
-                              F.pmod(F.col("doc_id"), F.lit(n_shards))
-                               .cast("int"))
-                  .groupBy("shard")
-                  .applyInPandas(encode_shard_docs, SHARD_DOCS_SCHEMA))
-
-    shard_of = F.pmod(F.col("doc_id"), F.lit(n_shards)).cast("int")
-    term_stats = (tokens.groupBy("term")
-                  .agg(F.count("*").alias("df"),
-                       F.sort_array(F.collect_set(shard_of))
-                        .alias("shards"))
-                  .withColumn("shards",
-                              F.when(F.size("shards") < F.lit(n_shards),
-                                     F.col("shards"))))
-    # n_shards is deliberately NOT stored on the index: this builder
-    # shards by pmod(doc_id, S) while upsert's delta path shards by
-    # Spark's murmur3 HashPartitioning — advertising n_shards here would
-    # enable an upsert whose delta rows land in different shards than
-    # the base postings (use build_segments_from_docs for upsertable
-    # indexes)
-    return SegmentIndex(spark, segments, shard_docs, term_stats,
-                        n_docs, avgdl, cfg)
+    fused = (tokens.select(F.col("doc_id").cast("bigint").alias("doc_id"),
+                           "term", F.col("tf").cast("bigint").alias("tf"))
+             .repartition(n_shards, "doc_id")
+             .mapInPandas(_token_encoder(cfg, n_shards), FUSED_SCHEMA)
+             .persist(StorageLevel.MEMORY_AND_DISK))
+    return _index_from_fused(spark, fused, cfg, n_shards)
 
 
 def build_segments_from_docs(spark, docs: DataFrame,
@@ -1144,8 +1042,8 @@ def build_segments_from_docs(spark, docs: DataFrame,
     per-block skip bound stores (max_tf, min_dl) — inputs, not scores —
     precisely so encoding never needs avgdl.
 
-    Shard identity: rows reach partition pmod(murmur3(doc_id), n_shards)
-    (Spark's HashPartitioning), read in-task via TaskContext.partitionId().
+    Shard identity: pmod(murmur3(doc_id), n_shards), Spark's
+    HashPartitioning, recomputed in-task from doc_id (``_by_shard``).
 
     Scale: one task per shard; pick n_shards so a shard's documents fit a
     task. Head-term skew is structurally bounded — a stopword's postings
@@ -1157,17 +1055,223 @@ def build_segments_from_docs(spark, docs: DataFrame,
 
     ensure_shipped(spark)
     cfg = cfg or IndexConfig()
-    fused = (docs.select(F.col(id_col).alias(id_col),
+    fused = (docs.select(F.col(id_col).cast("bigint").alias(id_col),
                          F.col(text_col).alias(text_col))
              .repartition(n_shards, id_col)
-             .mapInPandas(_fused_encoder(cfg, id_col, text_col,
-                                         n_shards=n_shards),
+             .mapInPandas(_fused_encoder(cfg, n_shards, id_col, text_col),
                           FUSED_SCHEMA)
              .persist(StorageLevel.MEMORY_AND_DISK))
     return _index_from_fused(spark, fused, cfg, n_shards)
 
 
 _FUSED_COLS = [f.name for f in FUSED_SCHEMA.fields]
+
+
+class _FusedRows:
+    """The one writer of FUSED_SCHEMA rows: both build fronts, the upsert
+    merge and reshard's split and coalesce all append through it."""
+
+    def __init__(self, block_size: int):
+        self.block_size = block_size
+        self.cols = {c: [] for c in _FUSED_COLS}
+
+    def _append(self, *vals) -> None:
+        for c, v in zip(_FUSED_COLS, vals):
+            self.cols[c].append(v)
+
+    def postings(self, shard, term, doc, tf, dl) -> None:
+        """Encode one term's posting list (doc ids ascending)."""
+        gb, tb, blocks = codec.encode_postings(doc, tf, self.block_size, dl)
+        self._append(int(shard), term, int(doc.size), gb, tb, blocks,
+                     None, None, None)
+
+    def passthrough(self, shard, row) -> None:
+        """Re-emit an encoded posting row verbatim (no decode)."""
+        self._append(int(shard), row["term"], int(row["n_docs"]),
+                     row["gaps"], row["tfs"], row["blocks"],
+                     None, None, None)
+
+    def summary(self, shard, ids, lens) -> None:
+        """The shard's summary row (term NULL): packed doc table + sum."""
+        self._append(int(shard), None, int(ids.size), None, None, None,
+                     codec.varbyte_encode(ids).tobytes(),
+                     codec.varbyte_encode(lens).tobytes(), int(lens.sum()))
+
+    def frame(self):
+        import pandas as pd
+
+        return pd.DataFrame(self.cols)
+
+
+def _unpack(blob):
+    """A packed doc-table blob (ids or lengths) -> int64 array."""
+    return codec.varbyte_decode(np.frombuffer(blob, dtype=np.uint8))
+
+
+def _unpack_postings(row):
+    """An encoded posting row -> (doc ids, tfs)."""
+    return codec.decode_postings(bytes(row["gaps"]), bytes(row["tfs"]),
+                                 list(row["blocks"]))
+
+
+class _ShardBuffer:
+    """One doc shard's rows as a build task reads them: (doc, len)
+    entries, and (doc, term code, tf) triples over one shard-local
+    vocabulary. ``write`` is the shard tail both build fronts end in."""
+
+    def __init__(self):
+        self.vocab: dict = {}
+        self.d_id, self.d_len = [], []
+        self.p_doc, self.p_code, self.p_tf = [], [], []
+
+    def add(self, d_id, d_len, doc=None, terms=(), code=None,
+            tf=None) -> None:
+        """Doc entries (a doc may repeat; its lengths add up) and
+        postings whose ``code`` indexes the batch-local ``terms``."""
+        self.d_id.append(d_id)
+        self.d_len.append(d_len)
+        if len(terms):
+            vocab = self.vocab
+            g = np.fromiter((vocab.setdefault(t, len(vocab))
+                             for t in terms),
+                            dtype=np.int64, count=len(terms))
+            self.p_doc.append(doc)
+            self.p_code.append(g[code])
+            self.p_tf.append(tf)
+
+    def write(self, out: _FusedRows, shard: int) -> None:
+        ids = np.concatenate(self.d_id)
+        if ids.size == 0:
+            return  # empty shard: contributes no rows
+        lens = np.concatenate(self.d_len)
+        o = np.argsort(ids, kind="stable")
+        ids, lens = ids[o], lens[o]
+        first = np.flatnonzero(np.r_[True, ids[1:] != ids[:-1]])
+        d_ids, d_lens = ids[first], np.add.reduceat(lens, first)
+        if self.p_doc:
+            terms = np.array(list(self.vocab), dtype=object)
+            doc = np.concatenate(self.p_doc)
+            code = np.concatenate(self.p_code)
+            tf = np.concatenate(self.p_tf)
+            order = np.lexsort((doc, code))
+            doc, code, tf = doc[order], code[order], tf[order]
+            dl = d_lens[np.searchsorted(d_ids, doc)]
+            cut = np.append(np.flatnonzero(np.r_[True,
+                                                 code[1:] != code[:-1]]),
+                            code.size)
+            for s, e in zip(cut[:-1], cut[1:]):
+                out.postings(shard, terms[code[s]], doc[s:e], tf[s:e],
+                             dl[s:e])
+        out.summary(shard, d_ids, d_lens)
+
+
+def _by_shard(pdf, id_col: str, n_shards: int):
+    """Split one batch into (shard, rows) by pmod(murmur3(doc_id), S) —
+    the numpy twin (codec.spark_hash_long) of the ``repartition(S,
+    doc_id)`` in front of every shard kernel. The shard comes from the
+    data, NOT the task's partitionId: Catalyst can ELIDE a repartition it
+    deems redundant (child already hash-partitioned on doc_id with the
+    same N — e.g. after a dropDuplicates when shuffle.partitions ==
+    n_shards) and AQE then coalesces the remaining exchange, so one
+    partition may hold several shards (normally exactly one)."""
+    sh = np.mod(codec.spark_hash_long(
+        pdf[id_col].to_numpy(np.int64)).astype(np.int64), n_shards)
+    first = int(sh[0])
+    if (sh == first).all():     # the common single-shard case
+        return [(first, pdf)]
+    return [(int(s), sub) for s, sub in pdf.groupby(sh, sort=False)]
+
+
+def _write_shards(bufs: dict, block_size: int):
+    out = _FusedRows(block_size)
+    for shard in sorted(bufs):
+        bufs[shard].write(out, shard)
+    if out.cols["shard"]:
+        yield out.frame()
+
+
+def _fused_encoder(cfg: IndexConfig, n_shards: int, id_col: str,
+                   text_col: str, include_empty_docs: bool = False):
+    """mapInPandas fn, the docs front: one partition of docs(id, text)
+    -> FUSED_SCHEMA rows. ``include_empty_docs`` records token-less docs
+    in the summary doc table with doc_len 0 — the delta form upsert
+    needs to express "replace with nothing" (empty merge deletes,
+    SURVEY 1.4.2)."""
+    from collections import defaultdict
+
+    from textindexing_spark.functions.tokenize import tokenize_series
+
+    block_size = cfg.block_size
+    tokenizer, fold = cfg.tokenizer, cfg.case_insensitive
+
+    def encode_partition(batches):
+        import pandas as pd
+
+        from textindexing_spark.operators.build import _count_pairs
+
+        bufs: dict = defaultdict(_ShardBuffer)
+        seen: set = set()
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            # first occurrence per doc_id wins: drop within-batch
+            # repeats and ids already consumed in this partition (a
+            # duplicated id would otherwise encode twice — duplicate
+            # doc-table entries, non-strictly-increasing posting ids,
+            # one doc in two top-k slots); same-id rows always
+            # co-locate under any hash partitioning on doc_id
+            fresh = ~pdf[id_col].duplicated() \
+                & ~pdf[id_col].isin(seen)
+            if not fresh.all():
+                pdf = pdf[fresh]
+                if pdf.empty:
+                    continue
+            seen.update(pdf[id_col].tolist())
+            for sh, sub in _by_shard(pdf, id_col, n_shards):
+                ids_a = sub[id_col].to_numpy(np.int64)
+                # vectorized tf counting (see build._count_pairs); the
+                # batch's unique TERM set maps into the shard vocabulary
+                # after counting, so no per-token Python dict loop
+                lens, total, kv, tf_u, uniq = _count_pairs(
+                    tokenize_series(sub[text_col], tokenizer, fold),
+                    np, pd)
+                # an empty doc is never indexed (SURVEY 1.4.2); the
+                # delta form keeps a dl=0 tombstone so upsert deletes it
+                keep = slice(None) if include_empty_docs else lens > 0
+                if total:
+                    V = len(uniq)
+                    bufs[sh].add(ids_a[keep], lens[keep],
+                                 ids_a[kv // V], uniq, kv % V, tf_u)
+                else:
+                    bufs[sh].add(ids_a[keep], lens[keep])
+        yield from _write_shards(bufs, block_size)
+
+    return encode_partition
+
+
+def _token_encoder(cfg: IndexConfig, n_shards: int):
+    """mapInPandas fn, the token front: one partition of counted
+    tokens(doc_id, term, tf) -> FUSED_SCHEMA rows through the same
+    shard tail; a doc's length is the sum of its tf values."""
+    from collections import defaultdict
+
+    block_size = cfg.block_size
+
+    def encode_partition(batches):
+        import pandas as pd
+
+        bufs: dict = defaultdict(_ShardBuffer)
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            for sh, sub in _by_shard(pdf, "doc_id", n_shards):
+                doc = sub["doc_id"].to_numpy(np.int64)
+                tf = sub["tf"].to_numpy(np.int64)
+                code, terms = pd.factorize(sub["term"])
+                bufs[sh].add(doc, tf, doc, terms, code, tf)
+        yield from _write_shards(bufs, block_size)
+
+    return encode_partition
 
 
 def _merge_shard_factory(cfg: IndexConfig):
@@ -1179,25 +1283,20 @@ def _merge_shard_factory(cfg: IndexConfig):
     Untouched shards pass through without decoding."""
     block_size = cfg.block_size
 
-    def _decode_blob(blob):
-        return codec.varbyte_decode(np.frombuffer(blob, dtype=np.uint8))
-
     def merge(left, right):
-        import pandas as pd
-
         if right.empty:
             return left[_FUSED_COLS]  # shard untouched by this batch
         shard = int(right["shard"].iloc[0])
         rsum = right[right["term"].isna()].iloc[0]
-        d_ids_r = _decode_blob(rsum["doc_ids"])
-        d_lens_r = _decode_blob(rsum["doc_lens"])
+        d_ids_r = _unpack(rsum["doc_ids"])
+        d_lens_r = _unpack(rsum["doc_lens"])
         if left.empty:
             d_ids_l = np.empty(0, dtype=np.int64)
             d_lens_l = np.empty(0, dtype=np.int64)
         else:
             lsum = left[left["term"].isna()].iloc[0]
-            d_ids_l = _decode_blob(lsum["doc_ids"])
-            d_lens_l = _decode_blob(lsum["doc_lens"])
+            d_ids_l = _unpack(lsum["doc_ids"])
+            d_lens_l = _unpack(lsum["doc_lens"])
         keep = ~np.isin(d_ids_l, d_ids_r)
         alive = d_lens_r > 0
         ids = np.concatenate([d_ids_l[keep], d_ids_r[alive]])
@@ -1208,20 +1307,11 @@ def _merge_shard_factory(cfg: IndexConfig):
         lterms = left[left["term"].notna()] if not left.empty else left
         rterms = right[right["term"].notna()]
         rmap = {r["term"]: r for r in rterms.to_dict("records")}
-        rows = {c: [] for c in _FUSED_COLS}
+        out = _FusedRows(block_size)
 
         def emit(term, doc, tf):
-            dl = lens[np.searchsorted(ids, doc)]
-            gb, tb, blocks = codec.encode_postings(doc, tf, block_size, dl)
-            rows["shard"].append(shard)
-            rows["term"].append(term)
-            rows["n_docs"].append(int(doc.size))
-            rows["gaps"].append(gb)
-            rows["tfs"].append(tb)
-            rows["blocks"].append(blocks)
-            rows["doc_ids"].append(None)
-            rows["doc_lens"].append(None)
-            rows["sum_dl"].append(None)
+            out.postings(shard, term, doc, tf,
+                         lens[np.searchsorted(ids, doc)])
 
         # skip-decode pre-check: a resident term whose max doc id sits
         # BELOW every delta doc id cannot contain any replaced/deleted
@@ -1236,37 +1326,22 @@ def _merge_shard_factory(cfg: IndexConfig):
                 term = lrow["term"]
                 seen.add(term)
                 rrow = rmap.get(term)
-
-                def passthrough(lrow=lrow, term=term):
-                    rows["shard"].append(shard)
-                    rows["term"].append(term)
-                    rows["n_docs"].append(int(lrow["n_docs"]))
-                    rows["gaps"].append(lrow["gaps"])
-                    rows["tfs"].append(lrow["tfs"])
-                    rows["blocks"].append(lrow["blocks"])
-                    rows["doc_ids"].append(None)
-                    rows["doc_lens"].append(None)
-                    rows["sum_dl"].append(None)
-
                 if rrow is None and (
                         d_min is None or
                         int(lrow["blocks"][-1]["last_doc"]) < d_min):
-                    passthrough()  # no delta id can be in this list
+                    # no delta id can be in this list
+                    out.passthrough(shard, lrow)
                     continue
-                doc_l, tf_l = codec.decode_postings(
-                    bytes(lrow["gaps"]), bytes(lrow["tfs"]),
-                    list(lrow["blocks"]))
+                doc_l, tf_l = _unpack_postings(lrow)
                 m = ~np.isin(doc_l, d_ids_r)  # drop replaced/deleted docs
                 if rrow is None and m.all():
                     # posting list untouched by this delta: pass the
                     # encoded bytes through verbatim (no re-encode)
-                    passthrough()
+                    out.passthrough(shard, lrow)
                     continue
                 doc_l, tf_l = doc_l[m], tf_l[m]
                 if rrow is not None:
-                    doc_r, tf_r = codec.decode_postings(
-                        bytes(rrow["gaps"]), bytes(rrow["tfs"]),
-                        list(rrow["blocks"]))
+                    doc_r, tf_r = _unpack_postings(rrow)
                     doc_l = np.concatenate([doc_l, doc_r])
                     tf_l = np.concatenate([tf_l, tf_r])
                     o = np.argsort(doc_l)
@@ -1276,21 +1351,9 @@ def _merge_shard_factory(cfg: IndexConfig):
         for term, rrow in rmap.items():
             if term in seen:
                 continue
-            doc_r, tf_r = codec.decode_postings(
-                bytes(rrow["gaps"]), bytes(rrow["tfs"]),
-                list(rrow["blocks"]))
-            emit(term, doc_r, tf_r)
-
-        rows["shard"].append(shard)
-        rows["term"].append(None)
-        rows["n_docs"].append(int(ids.size))
-        rows["gaps"].append(None)
-        rows["tfs"].append(None)
-        rows["blocks"].append(None)
-        rows["doc_ids"].append(codec.varbyte_encode(ids).tobytes())
-        rows["doc_lens"].append(codec.varbyte_encode(lens).tobytes())
-        rows["sum_dl"].append(int(lens.sum()))
-        return pd.DataFrame(rows)
+            emit(term, *_unpack_postings(rrow))
+        out.summary(shard, ids, lens)
+        return out.frame()
 
     return merge
 
@@ -1304,48 +1367,23 @@ def _split_shard_factory(cfg: IndexConfig, new_n: int):
     block_size = cfg.block_size
 
     def split(pdf):
-        import pandas as pd
-
         summary = pdf[pdf["term"].isna()].iloc[0]
-        d_ids = codec.varbyte_decode(
-            np.frombuffer(summary["doc_ids"], dtype=np.uint8))
-        d_lens = codec.varbyte_decode(
-            np.frombuffer(summary["doc_lens"], dtype=np.uint8))
+        d_ids = _unpack(summary["doc_ids"])
+        d_lens = _unpack(summary["doc_lens"])
         child = np.mod(
             codec.spark_hash_long(d_ids).astype(np.int64), new_n)
-        rows = {c: [] for c in _FUSED_COLS}
+        out = _FusedRows(block_size)
         for r in pdf[pdf["term"].notna()].to_dict("records"):
-            doc, tf = codec.decode_postings(
-                bytes(r["gaps"]), bytes(r["tfs"]), list(r["blocks"]))
+            doc, tf = _unpack_postings(r)
             pos = np.searchsorted(d_ids, doc)
             dl, ns = d_lens[pos], child[pos]
             for sh in np.unique(ns):
                 m = ns == sh
-                gb, tb, blocks = codec.encode_postings(
-                    doc[m], tf[m], block_size, dl[m])
-                rows["shard"].append(int(sh))
-                rows["term"].append(r["term"])
-                rows["n_docs"].append(int(m.sum()))
-                rows["gaps"].append(gb)
-                rows["tfs"].append(tb)
-                rows["blocks"].append(blocks)
-                rows["doc_ids"].append(None)
-                rows["doc_lens"].append(None)
-                rows["sum_dl"].append(None)
+                out.postings(sh, r["term"], doc[m], tf[m], dl[m])
         for sh in np.unique(child):
             m = child == sh
-            rows["shard"].append(int(sh))
-            rows["term"].append(None)
-            rows["n_docs"].append(int(m.sum()))
-            rows["gaps"].append(None)
-            rows["tfs"].append(None)
-            rows["blocks"].append(None)
-            rows["doc_ids"].append(
-                codec.varbyte_encode(d_ids[m]).tobytes())
-            rows["doc_lens"].append(
-                codec.varbyte_encode(d_lens[m]).tobytes())
-            rows["sum_dl"].append(int(d_lens[m].sum()))
-        return pd.DataFrame(rows)
+            out.summary(sh, d_ids[m], d_lens[m])
+        return out.frame()
 
     return split
 
@@ -1359,214 +1397,27 @@ def _coalesce_shard_factory(cfg: IndexConfig):
     tf-level combine."""
     block_size = cfg.block_size
 
-    def _decode(blob):
-        return codec.varbyte_decode(np.frombuffer(blob, dtype=np.uint8))
-
     def coalesce(pdf):
-        import pandas as pd
-
         shard = int(pdf["shard"].iloc[0])
         summaries = pdf[pdf["term"].isna()]
-        d_ids = np.concatenate(
-            [_decode(b) for b in summaries["doc_ids"]])
-        d_lens = np.concatenate(
-            [_decode(b) for b in summaries["doc_lens"]])
+        d_ids = np.concatenate([_unpack(b) for b in summaries["doc_ids"]])
+        d_lens = np.concatenate([_unpack(b) for b in summaries["doc_lens"]])
         o = np.argsort(d_ids)
         d_ids, d_lens = d_ids[o], d_lens[o]
-        rows = {c: [] for c in _FUSED_COLS}
+        out = _FusedRows(block_size)
         for term, grp in pdf[pdf["term"].notna()].groupby("term",
                                                           sort=False):
-            parts = [codec.decode_postings(bytes(r["gaps"]),
-                                           bytes(r["tfs"]),
-                                           list(r["blocks"]))
-                     for r in grp.to_dict("records")]
+            parts = [_unpack_postings(r) for r in grp.to_dict("records")]
             doc = np.concatenate([p[0] for p in parts])
             tf = np.concatenate([p[1] for p in parts])
             po = np.argsort(doc)
             doc, tf = doc[po], tf[po]
-            dl = d_lens[np.searchsorted(d_ids, doc)]
-            gb, tb, blocks = codec.encode_postings(doc, tf, block_size,
-                                                   dl)
-            rows["shard"].append(shard)
-            rows["term"].append(term)
-            rows["n_docs"].append(int(doc.size))
-            rows["gaps"].append(gb)
-            rows["tfs"].append(tb)
-            rows["blocks"].append(blocks)
-            rows["doc_ids"].append(None)
-            rows["doc_lens"].append(None)
-            rows["sum_dl"].append(None)
-        rows["shard"].append(shard)
-        rows["term"].append(None)
-        rows["n_docs"].append(int(d_ids.size))
-        rows["gaps"].append(None)
-        rows["tfs"].append(None)
-        rows["blocks"].append(None)
-        rows["doc_ids"].append(codec.varbyte_encode(d_ids).tobytes())
-        rows["doc_lens"].append(codec.varbyte_encode(d_lens).tobytes())
-        rows["sum_dl"].append(int(d_lens.sum()))
-        return pd.DataFrame(rows)
+            out.postings(shard, term, doc, tf,
+                         d_lens[np.searchsorted(d_ids, doc)])
+        out.summary(shard, d_ids, d_lens)
+        return out.frame()
 
     return coalesce
-
-
-def _fused_encoder(cfg: IndexConfig, id_col: str, text_col: str,
-                   include_empty_docs: bool = False,
-                   n_shards: int | None = None):
-    """mapInPandas fn: one doc-shard partition -> FUSED_SCHEMA rows.
-    ``include_empty_docs`` records token-less docs in the summary doc
-    table with doc_len 0 — the delta form upsert needs to express
-    "replace with nothing" (empty merge deletes, SURVEY 1.4.2)."""
-    from textindexing_spark.functions.tokenize import tokenize_series
-
-    block_size = cfg.block_size
-    tokenizer, fold = cfg.tokenizer, cfg.case_insensitive
-
-    def encode_partition(batches):
-        import pandas as pd
-        from pyspark import TaskContext
-
-        from textindexing_spark.operators.build import _count_pairs
-
-        # Shard identity: computed from doc_id via the murmur3 twin of
-        # Spark's HashPartitioning (spark_hash_long — the same identity
-        # reshard relies on), NOT the task's partitionId. The upstream
-        # repartition(n_shards, doc_id) normally makes them equal, but
-        # Catalyst can ELIDE a repartition it deems redundant (child
-        # already hash-partitioned on doc_id with the same N — e.g.
-        # after a dropDuplicates when shuffle.partitions == n_shards)
-        # and AQE then coalesces the remaining exchange; a partitionId-
-        # derived shard silently mis-routes every row in that plan.
-        # Deriving the shard from the data keeps the index correct
-        # under ANY physical plan; one partition may then emit several
-        # shard groups (normally exactly one). Duplicate doc ids within
-        # the input dedup here too (first occurrence wins) — same-id
-        # rows always co-locate under any hash partitioning on doc_id.
-        if n_shards:
-            def shard_of(ids_a):
-                h = codec.spark_hash_long(ids_a).astype(np.int64)
-                return ((h % n_shards) + n_shards) % n_shards
-        else:
-            pid = TaskContext.get().partitionId()
-
-            def shard_of(ids_a):
-                return np.full(ids_a.size, pid, dtype=np.int64)
-
-        states: dict[int, dict] = {}
-        seen: set = set()
-
-        def state_for(sh: int) -> dict:
-            st = states.get(sh)
-            if st is None:
-                st = states[sh] = {
-                    "vocab": {}, "d_id": [], "d_len": [],
-                    "p_doc": [], "p_code": [], "p_tf": []}
-            return st
-
-        def eat(st, pdf):
-            tok_lists = tokenize_series(pdf[text_col], tokenizer, fold)
-            ids_a = pdf[id_col].to_numpy(np.int64)
-            # vectorized tf counting (see build._count_pairs): dense
-            # bincount over combined (doc, term-code) keys, sort
-            # fallback for huge vocabularies; the batch's (small)
-            # unique TERM set maps into the shard vocabulary AFTER
-            # counting, so the global-code lookup touches unique pairs
-            # only — no per-doc/per-token Python dict loop
-            lens, total, kv, tf_u, uniq = _count_pairs(tok_lists, np, pd)
-            if include_empty_docs:
-                # empty doc: never indexed (SURVEY 1.4.2); the delta form
-                # keeps a dl=0 tombstone so upsert deletes it
-                st["d_id"].append(ids_a)
-                st["d_len"].append(lens)
-            else:
-                st["d_id"].append(ids_a[lens > 0])
-                st["d_len"].append(lens[lens > 0])
-            if total == 0:
-                return
-            vocab = st["vocab"]
-            g_uniq = np.fromiter(
-                (vocab.setdefault(t, len(vocab)) for t in uniq),
-                dtype=np.int64, count=len(uniq))
-            V = len(uniq)
-            st["p_doc"].append(ids_a[kv // V])
-            st["p_code"].append(g_uniq[kv % V])
-            st["p_tf"].append(tf_u)
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            # first occurrence per doc_id wins: drop within-batch
-            # repeats and ids already consumed in this partition (a
-            # duplicated id would otherwise encode twice — duplicate
-            # doc-table entries, non-strictly-increasing posting ids,
-            # one doc in two top-k slots)
-            fresh = ~pdf[id_col].duplicated() \
-                & ~pdf[id_col].isin(seen)
-            if not fresh.all():
-                pdf = pdf[fresh]
-                if pdf.empty:
-                    continue
-            seen.update(pdf[id_col].tolist())
-            sh_a = shard_of(pdf[id_col].to_numpy(np.int64))
-            first = int(sh_a[0])
-            if (sh_a == first).all():     # the common single-shard case
-                eat(state_for(first), pdf)
-            else:
-                for sh, sub in pdf.groupby(sh_a, sort=False):
-                    eat(state_for(int(sh)), sub)
-
-        rows = {"shard": [], "term": [], "n_docs": [], "gaps": [],
-                "tfs": [], "blocks": [], "doc_ids": [], "doc_lens": [],
-                "sum_dl": []}
-        for shard in sorted(states):
-            st = states[shard]
-            d_ids_a = (np.concatenate(st["d_id"]) if st["d_id"]
-                       else np.empty(0, dtype=np.int64))
-            if d_ids_a.size == 0:
-                continue  # empty shard: contributes no rows
-            terms = np.array(list(st["vocab"].keys()), dtype=object)
-            d_lens_a = np.concatenate(st["d_len"])
-            d_order = np.argsort(d_ids_a)
-            d_ids_a, d_lens_a = d_ids_a[d_order], d_lens_a[d_order]
-            if st["p_doc"]:
-                doc = np.concatenate(st["p_doc"])
-                code = np.concatenate(st["p_code"])
-                tf = np.concatenate(st["p_tf"])
-                order = np.lexsort((doc, code))
-                doc, code, tf = doc[order], code[order], tf[order]
-                dl = d_lens_a[np.searchsorted(d_ids_a, doc)]
-                starts = np.flatnonzero(np.r_[True,
-                                              code[1:] != code[:-1]])
-                bounds = np.append(starts, code.size)
-                for i in range(starts.size):
-                    s, e = bounds[i], bounds[i + 1]
-                    gb, tb, blocks = codec.encode_postings(
-                        doc[s:e], tf[s:e], block_size, dl[s:e])
-                    rows["shard"].append(shard)
-                    rows["term"].append(terms[code[s]])
-                    rows["n_docs"].append(int(e - s))
-                    rows["gaps"].append(gb)
-                    rows["tfs"].append(tb)
-                    rows["blocks"].append(blocks)
-                    rows["doc_ids"].append(None)
-                    rows["doc_lens"].append(None)
-                    rows["sum_dl"].append(None)
-            # shard summary row: packed doc table + stats (term NULL)
-            rows["shard"].append(shard)
-            rows["term"].append(None)
-            rows["n_docs"].append(len(d_ids_a))
-            rows["gaps"].append(None)
-            rows["tfs"].append(None)
-            rows["blocks"].append(None)
-            rows["doc_ids"].append(
-                codec.varbyte_encode(d_ids_a).tobytes())
-            rows["doc_lens"].append(
-                codec.varbyte_encode(d_lens_a).tobytes())
-            rows["sum_dl"].append(int(d_lens_a.sum()))
-        if rows["shard"]:
-            yield pd.DataFrame(rows)
-
-    return encode_partition
 
 
 def _index_from_fused(spark, fused: DataFrame, cfg: IndexConfig,
@@ -1597,10 +1448,11 @@ def _index_from_fused(spark, fused: DataFrame, cfg: IndexConfig,
 
 def segment_index_from(idx, n_shards: int = 8) -> SegmentIndex:
     """Build the ranked-retrieval segments from a (boolean) Index by
-    exploding its postings — same tokens, no re-tokenization."""
+    exploding its postings into the token front of ``build_segments`` —
+    same tokens, no re-tokenization, and the same segments
+    ``build_segments_from_docs`` writes from the index's source docs."""
     tokens = (idx.postings
               .select("term", F.explode("postings").alias("p"))
               .select(F.col("p.doc_id").alias("doc_id"), "term",
                       F.col("p.tf").alias("tf")))
-    return build_segments(idx.spark, tokens, idx.documents, idx.cfg,
-                          n_shards)
+    return build_segments(idx.spark, tokens, idx.cfg, n_shards)

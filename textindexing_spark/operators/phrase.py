@@ -296,6 +296,22 @@ class PositionalIndex:
 
 # --- compressed tier: positional segments (the 100 TB phrase path) ----------
 
+def _pos_rows() -> dict:
+    """An empty POS_SEGMENT_SCHEMA column dict for ``_append_pos_term``."""
+    return {"shard": [], "term": [], "n_docs": [], "gaps_blob": [],
+            "plens_blob": [], "pos_blob": []}
+
+
+def _append_pos_term(out: dict, shard, term, doc_ids, plens, flat, np):
+    """The one writer of positional segment rows: encode one (shard,
+    term) posting list (``_encode_term_arrays``) and append it to
+    ``out``."""
+    gb, plb, pb = _encode_term_arrays(doc_ids, plens, flat, np)
+    for c, v in zip(out, (int(shard), term, int(doc_ids.size),
+                          gb, plb, pb)):
+        out[c].append(v)
+
+
 def _encode_pos_shard(shard: int, pdf, np):
     """One doc shard's positional rows -> compressed per-term segments.
 
@@ -303,8 +319,7 @@ def _encode_pos_shard(shard: int, pdf, np):
     absolute), per-doc position counts varbyte'd, and in-document
     position deltas varbyte'd (first position of each doc absolute) —
     the classic Lucene-style proximity layout, numpy-vectorized."""
-    out = {"shard": [], "term": [], "n_docs": [], "gaps_blob": [],
-           "plens_blob": [], "pos_blob": []}
+    out = _pos_rows()
     if pdf.empty:
         return out
     pdf = pdf.sort_values(["term", "doc_id"], kind="mergesort")
@@ -316,14 +331,7 @@ def _encode_pos_shard(shard: int, pdf, np):
                             count=len(pos_lists))
         flat = (np.concatenate(pos_lists) if pos_lists
                 else np.empty(0, np.int64))
-        gaps_b, plens_b, pos_b = _encode_term_arrays(doc_ids, plens,
-                                                     flat, np)
-        out["shard"].append(shard)
-        out["term"].append(term)
-        out["n_docs"].append(len(doc_ids))
-        out["gaps_blob"].append(gaps_b)
-        out["plens_blob"].append(plens_b)
-        out["pos_blob"].append(pos_b)
+        _append_pos_term(out, shard, term, doc_ids, plens, flat, np)
     return out
 
 
@@ -451,27 +459,27 @@ class PositionalSegmentIndex:
 
     def save(self, path: str) -> None:
         import json
-        import os
+
+        from textindexing_spark.plans.manifest import fs_write_text
 
         (self.segments.repartition("shard")
          .sortWithinPartitions("shard", "term")
          .write.mode("overwrite").parquet(path))
         # underscore-prefixed: invisible to parquet readers (like _SUCCESS)
-        with open(os.path.join(path, "_pos_meta.json"), "w") as fh:
-            json.dump({"n_shards": self.n_shards}, fh)
+        fs_write_text(self.spark, f"{path}/_pos_meta.json",
+                      json.dumps({"n_shards": self.n_shards}))
 
     @classmethod
     def load(cls, spark, path: str,
              cfg: IndexConfig | None = None) -> "PositionalSegmentIndex":
         import json
-        import os
 
-        n_shards = None
-        try:
-            with open(os.path.join(path, "_pos_meta.json")) as fh:
-                n_shards = json.load(fh).get("n_shards")
-        except FileNotFoundError:
-            pass
+        from textindexing_spark.plans.manifest import (fs_exists,
+                                                       fs_read_text)
+
+        meta = f"{path}/_pos_meta.json"
+        n_shards = (json.loads(fs_read_text(spark, meta)).get("n_shards")
+                    if fs_exists(spark, meta) else None)
         return cls(spark, spark.read.parquet(path), cfg,
                    n_shards=n_shards)
 
@@ -540,8 +548,7 @@ class PositionalSegmentIndex:
                 import numpy as np
                 import pandas as pd
 
-                out = {"shard": [], "term": [], "n_docs": [],
-                       "gaps_blob": [], "plens_blob": [], "pos_blob": []}
+                out = _pos_rows()
                 for term, dec in _decode_shard_terms(pdf, np).items():
                     doc_ids, plens, starts, flat = dec
                     child = np.mod(doc_ids, new_n)
@@ -557,14 +564,8 @@ class PositionalSegmentIndex:
                             sub_flat = flat[take]
                         else:
                             sub_flat = np.empty(0, np.int64)
-                        gb, plb, pb = _encode_term_arrays(
-                            doc_ids[idx], sel, sub_flat, np)
-                        out["shard"].append(int(sh))
-                        out["term"].append(term)
-                        out["n_docs"].append(int(idx.size))
-                        out["gaps_blob"].append(gb)
-                        out["plens_blob"].append(plb)
-                        out["pos_blob"].append(pb)
+                        _append_pos_term(out, sh, term, doc_ids[idx], sel,
+                                         sub_flat, np)
                 return pd.DataFrame(out)
 
             seg = (self.segments.groupby("shard")
@@ -574,19 +575,11 @@ class PositionalSegmentIndex:
                 import numpy as np
                 import pandas as pd
 
-                shard = int(key[0])
-                out = {"shard": [], "term": [], "n_docs": [],
-                       "gaps_blob": [], "plens_blob": [], "pos_blob": []}
+                out = _pos_rows()
                 for term, dec in _decode_shard_terms(pdf, np).items():
                     doc_ids, plens, _starts, flat = dec
-                    gb, plb, pb = _encode_term_arrays(
-                        doc_ids, plens, flat, np)
-                    out["shard"].append(shard)
-                    out["term"].append(term)
-                    out["n_docs"].append(int(doc_ids.size))
-                    out["gaps_blob"].append(gb)
-                    out["plens_blob"].append(plb)
-                    out["pos_blob"].append(pb)
+                    _append_pos_term(out, key[0], term, doc_ids, plens,
+                                     flat, np)
                 return pd.DataFrame(out)
 
             seg = (self.segments

@@ -8,6 +8,7 @@ same contract directly over parquet, through the store's VersionLog
 (sources/versionlog.py):
 
     <root>/v{N}/     -- immutable, self-contained index versions
+    <root>/v{N}.json -- its publish record
     <root>/LATEST    -- atomic pointer file
 
 - ``commit`` saves the index into a freshly claimed ``v{N}`` slot, then
@@ -25,8 +26,7 @@ import shutil
 
 from textindexing_spark.config import IndexConfig
 from textindexing_spark.operators.query import Index
-from textindexing_spark.sources.versionlog import (
-    ANY, ConcurrentWriterError, VersionLog)
+from textindexing_spark.sources.versionlog import ANY, VersionLog
 
 _EMPTY_POSTINGS = ("term string, df bigint, total_tf bigint, "
                    "postings array<struct<doc_id:bigint,tf:int>>")
@@ -76,14 +76,14 @@ class VersionedSegmentStore:
         """Save ``seg`` as a new version and publish it. ``expect_prev``
         (the version the caller read, None for an empty store) makes the
         publish a compare-and-set: a stale writer gets
-        ConcurrentWriterError and its slot is removed — it sits at or
-        below LATEST, where it would otherwise read as a published
-        version."""
+        ConcurrentWriterError. A failed save or publish removes the slot
+        (a record-less slot never reads as published, but it holds disk
+        until the vacuum's grace window)."""
         v, path = self.log.claim_slot()
-        seg.save(path)
         try:
+            seg.save(path)
             return self.log.publish(v, expect_prev)
-        except ConcurrentWriterError:
+        except BaseException:
             shutil.rmtree(path, ignore_errors=True)
             raise
 
@@ -91,11 +91,11 @@ class VersionedSegmentStore:
         """Drop all but the newest ``keep_last`` published versions
         (segment versions are self-contained directories, so expiry is a
         plain delete — ≙ Iceberg expire_snapshots), clamped to >= 1 so
-        the version LATEST points at survives. Unpublished slots above
-        LATEST (a crashed or in-flight writer's) go only once older than
+        the version LATEST points at survives. Slots without a publish
+        record (a crashed or in-flight writer's) go only once older than
         the log's grace window. Returns the deleted versions."""
-        return sorted(int(os.path.basename(p)[1:])
-                      for p in self.log.vacuum(keep_last=keep_last))
+        return sorted({int(os.path.basename(p)[1:].removesuffix(".json"))
+                       for p in self.log.vacuum(keep_last=keep_last)})
 
 
 class VersionedPositionalStore(VersionedSegmentStore):

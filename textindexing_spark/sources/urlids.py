@@ -190,7 +190,8 @@ class UrlIdTable:
 
     def vacuum(self) -> list[str]:
         """Delete superseded base generations and folded chunks (kept
-        until now for in-flight readers). Returns deleted paths."""
+        until now for in-flight readers), and every publish record but
+        the newest. Returns deleted paths."""
         import shutil
 
         deleted = []
@@ -203,4 +204,5 @@ class UrlIdTable:
                 if name.startswith("base") or name.startswith("chunk"):
                     shutil.rmtree(full, ignore_errors=True)
                     deleted.append(full)
+            deleted += self.log.vacuum(keep_last=1)
         return deleted

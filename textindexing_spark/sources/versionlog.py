@@ -5,16 +5,18 @@ merge swaps under one write lock (ImmutableIndex.cs:92-106). Every store
 here commits the same way over its root directory:
 
     <root>/LATEST             -- the pointer: newest published version
-    <root>/v{N}.json          -- a version's manifest (manifest stores)
+    <root>/v{N}.json          -- version N's publish record (its manifest,
+                                 or ``{}`` for a store without one)
     <root>/v{N}/              -- a mkdir-claimed version slot (slot stores)
     <root>/v{N}_data_{id}/    -- one writer attempt's data (manifest stores)
     <root>/.commit_lock       -- the exclusive writer lock
 
-A version is *published* once LATEST has reached it. Slots, manifests and
-data dirs above LATEST belong to in-flight or crashed writers and are left
-to the vacuum's grace window. The primitives are local-FS ones: os.mkdir
-is the create-if-absent, fcntl.flock the lock, os.replace the atomic
-swap. On an object store the pointer swap would be a conditional put.
+A version is *published* once its record exists and LATEST has reached
+it. A slot or data dir without a record — an in-flight writer's, or one
+whose save failed — is left to the vacuum's grace window, even below
+LATEST. The primitives are local-FS ones: os.mkdir is the
+create-if-absent, fcntl.flock the lock, os.replace the atomic swap. On
+an object store the pointer swap would be a conditional put.
 """
 
 from __future__ import annotations
@@ -38,17 +40,17 @@ class ConcurrentWriterError(RuntimeError):
     silent last-writer-wins on the pointer."""
 
 
-def _parse(name: str) -> tuple[int, bool] | None:
-    """(N, is_entry) for a name the log owns: ``v{N}`` and ``v{N}.json``
-    are version N's own entries, ``v{N}_data_*`` is attempt data; any
+def _parse(name: str) -> tuple[int, str] | None:
+    """(N, kind) for a name the log owns: ``v{N}.json`` is version N's
+    "record", ``v{N}`` its "slot", ``v{N}_data_*`` attempt "data"; any
     other name (LATEST, temp files, a store's side tables) is None."""
     if not name.startswith("v"):
         return None
-    stem = name[1:-5] if name.endswith(".json") else name[1:]
-    num, sep, _ = stem.partition("_data_")
+    record = name.endswith(".json")
+    num, sep, _ = (name[1:-5] if record else name[1:]).partition("_data_")
     if not num.isdigit():
         return None
-    return int(num), not sep
+    return int(num), ("record" if record else "data" if sep else "slot")
 
 
 class VersionLog:
@@ -68,13 +70,13 @@ class VersionLog:
             return None
 
     def versions(self) -> list[int]:
-        """Published versions (a manifest or a slot at or below LATEST),
-        ascending."""
+        """Published versions (a record at or below LATEST), ascending."""
         latest = self.latest()
         if latest is None:
             return []
-        return sorted({p[0] for p in map(_parse, os.listdir(self.root))
-                       if p is not None and p[1] and p[0] <= latest})
+        return sorted(p[0] for p in map(_parse, os.listdir(self.root))
+                      if p is not None and p[1] == "record"
+                      and p[0] <= latest)
 
     def manifest(self, version: int | None = None) -> dict | None:
         v = self.latest() if version is None else version
@@ -128,11 +130,12 @@ class VersionLog:
 
     def publish(self, v: int, expect_prev=ANY,
                 manifest: dict | None = None) -> int:
-        """Publish version ``v``: write its manifest (if given), then move
-        LATEST to ``v``, only ever forward. With ``expect_prev`` (the
-        version the caller read, None for an empty store) this is a
-        compare-and-set under the writer lock: if LATEST moved since, it
-        raises ConcurrentWriterError and writes nothing."""
+        """Publish version ``v``: write its record (the manifest, or
+        ``{}``), then move LATEST to ``v``, only ever forward. With
+        ``expect_prev`` (the version the caller read, None for an empty
+        store) this is a compare-and-set under the writer lock: if LATEST
+        moved since, it raises ConcurrentWriterError and writes
+        nothing."""
         with self.lock():
             cur = self.latest()
             if expect_prev is not ANY and cur != expect_prev:
@@ -141,8 +144,7 @@ class VersionLog:
                 raise ConcurrentWriterError(
                     f"LATEST moved from {prev} to v{cur} during this "
                     f"commit; replay the batch on the new version")
-            if manifest is not None:
-                self.swap(f"v{v}.json", json.dumps(manifest))
+            self.swap(f"v{v}.json", json.dumps(manifest or {}))
             if cur is None or v > cur:
                 self.swap("LATEST", str(v))
         return v
@@ -150,30 +152,35 @@ class VersionLog:
     def vacuum(self, referenced=lambda v: (), keep_last: int = 2,
                grace_s: float = 3600.0) -> list[str]:
         """Keep the newest ``keep_last`` published versions (clamped to
-        >= 1, so LATEST always survives) and every path under the root
-        that ``referenced(v)`` names for one of them. Delete the other
-        published entries at once, and every other slot, manifest or data
-        dir once it is ``grace_s`` old: a younger one may belong to a
-        writer whose publish has not landed yet. Returns deleted paths."""
+        >= 1) plus the version LATEST names, record or not, with their
+        slots and every path under the root that ``referenced(v)`` names
+        for one of them. Delete the other published records and slots at
+        once, and every other slot, record or data dir once it is
+        ``grace_s`` old: a younger one may belong to a writer whose
+        publish has not landed yet. Returns deleted paths."""
         keep_last = max(int(keep_last), 1)
         deleted = []
         with self.lock():
             latest = self.latest()
-            keep = set(self.versions()[-keep_last:])
+            published = set(self.versions())
+            keep = set(sorted(published)[-keep_last:])
+            if latest is not None:
+                keep.add(latest)
             live = {p for v in keep for p in referenced(v)}
             now = time.time()
             for name in sorted(os.listdir(self.root)):
                 parsed = _parse(name)
                 if parsed is None:
                     continue
-                v, entry = parsed
+                v, kind = parsed
                 full = f"{self.root}/{name}"
+                entry = kind != "data"
                 if (entry and v in keep) or any(
                         p == full or p.startswith(full + "/")
                         for p in live):
                     continue
-                published = entry and latest is not None and v <= latest
-                if published or now - os.path.getmtime(full) >= grace_s:
+                if ((entry and v in published)
+                        or now - os.path.getmtime(full) >= grace_s):
                     if os.path.isdir(full):
                         shutil.rmtree(full, ignore_errors=True)
                     else:
