@@ -524,9 +524,8 @@ The packaged engine zip drives the cluster entry point
 (2,000 pages incl. re-crawls, `sources/pages.py` generator):
 
 ```
-$ python -c "from textindexing_spark._pkg import package_zip; print(package_zip())"
-/tmp/textindexing_spark.zip
-$ spark-submit --master local[8] --py-files /tmp/textindexing_spark.zip \\
+$ ZIP=$(python -c "from textindexing_spark._pkg import package_zip; print(package_zip())")
+$ spark-submit --master local[8] --py-files "$ZIP" \\
     scripts/build_index_submit.py --input /tmp/pages_demo \\
     --output /tmp/ix_demo --resume --shards 8
 {"input": "/tmp/pages_demo", "output": "/tmp/ix_demo", "n_docs": 1963,

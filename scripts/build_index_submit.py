@@ -2,10 +2,10 @@
 """Cluster entry point: build (or resume) the inverted index over a pages
 table, run via spark-submit (north-rule launch mode):
 
-    python -c "from textindexing_spark._pkg import package_zip; \\
-               print(package_zip())"
+    ZIP=$(python -c "from textindexing_spark._pkg import package_zip; \\
+                     print(package_zip())")
     spark-submit --master <cluster> \\
-        --py-files /tmp/textindexing_spark.zip \\
+        --py-files "$ZIP" \\
         scripts/build_index_submit.py \\
         --input  <pages parquet/iceberg path> \\
         --output <index root> [--resume] [--shards 64]

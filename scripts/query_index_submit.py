@@ -1,7 +1,8 @@
 #!/usr/bin/env python
-"""Query a saved index from the command line (spark-submit entry point):
+"""Query a saved index from the command line (spark-submit entry point;
+``$ZIP`` is the path ``package_zip()`` prints):
 
-    spark-submit --master <cluster> --py-files /tmp/textindexing_spark.zip \\
+    spark-submit --master <cluster> --py-files "$ZIP" \\
         scripts/query_index_submit.py --index <root> \\
         --query "hash merge fast" \\
         [--mode bm25|bm25f|bool|expr|phrase|near|suggest|complete|mlt|explain] \\

@@ -1,10 +1,10 @@
 #!/usr/bin/env python
 """Cluster entry point: re-shard a saved compressed BM25 segment index
 (grow or shrink — SegmentIndex.reshard), run via spark-submit exactly
-like the build CLI:
+like the build CLI (``$ZIP`` is the path ``package_zip()`` prints):
 
     spark-submit --master <cluster> \\
-        --py-files /tmp/textindexing_spark.zip \\
+        --py-files "$ZIP" \\
         scripts/reshard_index_submit.py \\
         --index <segments dir> --output <new segments dir> --shards 256
 

@@ -227,9 +227,13 @@ def test_zero_norm_vectors_do_not_crash_cosine(spark, emb):
     assert pairs == []
 
 
-def test_missing_anchor_or_centroid_ids_fail_loudly(spark, emb):
+def test_missing_anchor_or_centroid_ids_fail_loudly(spark, emb, tmp_path):
     """Misconfigured anchor/centroid ids must raise, not return empty
-    results indistinguishable from 'no neighbors found'."""
+    results indistinguishable from 'no neighbors found' — also when the
+    ids passed validation and the table at the same path was then
+    rewritten without them."""
+    from pyspark.sql import functions as F
+
     from textindexing_spark.operators.similarity import (
         ivf_topk as _ivf, lsh_topk as _lsh)
 
@@ -237,3 +241,15 @@ def test_missing_anchor_or_centroid_ids_fail_loudly(spark, emb):
         _lsh(emb, 0, 5, anchor_ids=(888888, 999999)).collect()
     with pytest.raises(ValueError, match="centroid_ids"):
         _ivf(emb, 0, 5, centroid_ids=(888888, 999999)).collect()
+
+    path = str(tmp_path / "emb")
+    emb.write.parquet(path)
+    ids = (5, 6, 8)
+    _lsh(spark.read.parquet(path), 0, 5, anchor_ids=ids).collect()
+    _ivf(spark.read.parquet(path), 0, 5, centroid_ids=ids).collect()
+    (emb.where(~F.col("vec_id").isin(*ids))
+     .write.mode("overwrite").parquet(path))
+    with pytest.raises(ValueError, match="anchor_ids"):
+        _lsh(spark.read.parquet(path), 0, 5, anchor_ids=ids).collect()
+    with pytest.raises(ValueError, match="centroid_ids"):
+        _ivf(spark.read.parquet(path), 0, 5, centroid_ids=ids).collect()

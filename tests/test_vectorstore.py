@@ -161,6 +161,36 @@ def test_tier_merge_bounds_delta_count(spark, store):
     # equal-size batches collapse: far fewer than 6 live deltas
     assert len(m["deltas"]) < 4
     assert len(_resolved_dict(store)) == 80 + 24
+    # tombstone-only deltas tier-merge too: k deletes must not leave k
+    # live deltas for every later read to anti-join
+    before = len(store.manifest()["deltas"])
+    for vid in (0, 1, 3000, 3011):
+        store.delete(spark.createDataFrame([(vid,)], "vec_id bigint"))
+    assert len(store.manifest()["deltas"]) <= before + 1
+    rows = _resolved_dict(store)
+    assert len(rows) == 80 + 24 - 4
+    assert not {0, 1, 3000, 3011} & set(rows)
+
+
+def test_search_pushes_probed_cells_into_delta_scans(spark, store):
+    """search() reads only the probed cells: the base through its cell
+    dirs, every delta through an In-filter on ``cell`` pushed into the
+    delta's parquet scan."""
+    import contextlib
+    import io
+
+    store.compact()
+    store.upsert(_vecs(spark, _mk(8, seed=21, base=6000)))
+    q = [0.5, 0.1, 0.9, 0.2, 0.7, 0.3]
+    cells = sorted(store.probe_cells(q, nprobe=2))
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        store.search(q, k=5, nprobe=2).explain("formatted")
+    scans = buf.getvalue().split("Scan parquet")[1:]
+    delta = [s for s in scans if "/delta/vectors" in s.split("ReadSchema")[0]]
+    assert delta
+    pushed = f"In(cell, [{cells[0]},{cells[1]}])"
+    assert all(pushed in s.split("ReadSchema")[0] for s in delta)
 
 
 def test_concurrent_writer_cas(spark, store, tmp_path):

@@ -328,6 +328,17 @@ def test_index_metadata_on_file_uri(spark, tmp_path, monkeypatch):
     assert pos.n_shards == 2
     assert sorted(r.doc_id for r in pos.search_phrase("b c").collect()) \
         == [1, 2]
+    # the boolean Index's config round-trips too: loaded without cfg, it
+    # still folds queries with the tokenizer it was built with
+    from textindexing_spark.operators.query import Index
+
+    cfg = IndexConfig(tokenizer="regex:[a-z_]+")
+    build_index(spark, spark.createDataFrame(
+        [(1, "foo_bar baz")], "doc_id bigint, text string"),
+        cfg).snapshot(f"{uri}/ix")
+    ix = Index.load(spark, f"{uri}/ix")
+    assert ix.cfg.tokenizer == "regex:[a-z_]+"
+    assert [r.doc_id for r in ix.search_bool("foo_bar").collect()] == [1]
     assert not (tmp_path / "file:").exists()
 
 

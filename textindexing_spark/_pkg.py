@@ -5,16 +5,20 @@ mode)."""
 
 from __future__ import annotations
 
+import hashlib
 import os
+import tempfile
 import zipfile
 
 _SHIPPED_SESSIONS: set[int] = set()
 
 
-def package_zip(dest: str = "/tmp/textindexing_spark.zip") -> str:
-    """Zip the package source tree (deterministic content order). Writes
-    via a temp file + atomic rename so concurrent readers (e.g. a parallel
-    spark-submit) never see a partial zip."""
+def package_zip(dest: str | None = None) -> str:
+    """Zip the package source tree (deterministic content order) and
+    return the zip's path. Writes via a temp file + atomic rename so
+    concurrent readers (e.g. a parallel spark-submit) never see a partial
+    zip. The default ``dest`` is named after this checkout's root, so two
+    checkouts on one host never overwrite each other's shipped engine."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     if not os.path.isdir(pkg_dir):
         # the package was itself imported from a zip (spark-submit
@@ -29,6 +33,10 @@ def package_zip(dest: str = "/tmp/textindexing_spark.zip") -> str:
             return zip_path
         raise RuntimeError(f"cannot package: {pkg_dir} not found")
     root = os.path.dirname(pkg_dir)
+    if dest is None:
+        tag = hashlib.sha1(root.encode()).hexdigest()[:12]
+        dest = os.path.join(tempfile.gettempdir(),
+                            f"textindexing_spark-{tag}.zip")
     tmp = f"{dest}.{os.getpid()}.tmp"
     n = 0
     with zipfile.ZipFile(tmp, "w", zipfile.ZIP_STORED) as zf:

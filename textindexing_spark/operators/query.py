@@ -293,6 +293,11 @@ class Index:
         # the boolean language (attach_positional)
         self._phrase_index = None
 
+    def documents_df(self) -> DataFrame:
+        """(doc_id, doc_len) — the documents table, under the name both
+        segment tiers give theirs."""
+        return self.documents
+
     # -- maintenance ---------------------------------------------------------
 
     def cache(self) -> "Index":
@@ -1269,18 +1274,16 @@ class Index:
         self.postings.write.mode("overwrite").parquet(f"{path}/postings")
         self.documents.write.mode("overwrite").parquet(f"{path}/documents")
         # persist the QUERY-relevant config: a loaded index must fold
-        # query terms and score BM25 exactly as it was built (same
-        # local-open convention as SegmentIndex._meta.json)
+        # query terms and score BM25 exactly as it was built (through
+        # the path's Hadoop FS, like SegmentIndex._meta.json)
         import json
 
-        try:
-            with open(f"{path}/_index_cfg.json", "w") as fh:
-                json.dump({"tokenizer": self.cfg.tokenizer,
-                           "case_insensitive": self.cfg.case_insensitive,
-                           "bm25": {"k1": self.cfg.bm25.k1,
-                                    "b": self.cfg.bm25.b}}, fh)
-        except OSError:
-            pass  # non-local path: caller supplies cfg at load()
+        from textindexing_spark.plans.manifest import fs_write_text
+
+        fs_write_text(self.spark, f"{path}/_index_cfg.json", json.dumps(
+            {"tokenizer": self.cfg.tokenizer,
+             "case_insensitive": self.cfg.case_insensitive,
+             "bm25": {"k1": self.cfg.bm25.k1, "b": self.cfg.bm25.b}}))
         return Index(self.spark,
                      self.spark.read.parquet(f"{path}/postings"),
                      self.spark.read.parquet(f"{path}/documents"),
@@ -1293,13 +1296,14 @@ class Index:
         """An explicit ``cfg`` wins; else the snapshot's persisted
         config is restored (pre-cfg snapshots fall back to defaults)."""
         import json
-        import os
 
-        if cfg is None and os.path.exists(f"{path}/_index_cfg.json"):
+        from textindexing_spark.plans.manifest import (fs_exists,
+                                                       fs_read_text)
+
+        if cfg is None and fs_exists(spark, f"{path}/_index_cfg.json"):
             from textindexing_spark.config import BM25Params
 
-            with open(f"{path}/_index_cfg.json") as fh:
-                m = json.load(fh)
+            m = json.loads(fs_read_text(spark, f"{path}/_index_cfg.json"))
             cfg = IndexConfig(
                 tokenizer=m["tokenizer"],
                 case_insensitive=m["case_insensitive"],

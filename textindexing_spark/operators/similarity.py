@@ -20,16 +20,19 @@ from pyspark.sql import DataFrame, functions as F
 DOT = ("aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * "
        "CAST(y AS DOUBLE)), CAST(0 AS DOUBLE), (acc, v) -> acc + v)")
 
-# (semanticHash(filtered frame), param name) -> validated. Bounded: the
-# set only ever holds one entry per distinct (table plan, id tuple) a
-# session queries — misconfig checks cost ONE job per table, not one
-# per query (the guard exists so absent anchor/centroid ids raise
-# instead of silently emptying every result).
+# (semanticHash(filtered frame), its input files, param name) ->
+# validated. Bounded: the set only ever holds one entry per distinct
+# (table plan, files, id tuple) a session queries — misconfig checks cost
+# ONE job per table, not one per query (the guard exists so absent
+# anchor/centroid ids raise instead of silently emptying every result).
+# The files are part of the key because a plan over a path hashes the
+# same after the path is rewritten without those ids.
 _VALIDATED_IDS: set = set()
 
 
 def _check_ids_exist(filtered: DataFrame, what: str, ids: tuple) -> None:
-    key = (filtered.semanticHash(), what)
+    key = (filtered.semanticHash(), tuple(sorted(filtered.inputFiles())),
+           what)
     if key in _VALIDATED_IDS:
         return
     if not filtered.take(1):

@@ -8,23 +8,15 @@ once, add forever; re-training is a new store) and from then on every
 operation is O(batch) or partition-pruned:
 
 - **Layout.** Vectors live in parquet partitioned by IVF cell
-  (``cell={c}/``), the unit of both copy-on-write and query pruning —
+  (``pcell={c}/``), the unit of both copy-on-write and query pruning —
   the vector twin of BucketedIndexStore's term buckets. A query probes
   ``nprobe`` cells, so a search reads nprobe directories out of
   ``k_cells``, never the corpus.
-- **Ingest.** ``upsert`` commits an LSM delta: the batch's tombstone
-  set (vec_ids — an upsert REPLACES by id) plus its cell-assigned
-  vectors, size-tier-merged so a long stream keeps O(log total) deltas
-  alive. Nothing of the base is rewritten per batch. ``delete`` is a
-  tombstone-only delta. ``compact`` folds deltas into the cell
-  partitions copy-on-write: only cells owning delta rows (or tombstoned
-  rows) are rewritten; every untouched cell's directory carries into
-  the new manifest byte-identical.
-- **Versioning.** Manifests (v{N}.json: cell -> dir + delta list)
-  published through the store's VersionLog (sources/versionlog.py) — the
-  same single-writer contract (and failure mode: ConcurrentWriterError,
-  orphans reclaimed by vacuum) as BucketedIndexStore. Readers pin an
-  immutable manifest; time travel = load any version.
+- **Ingest and versioning.** The shared run layer (sources/runs.py):
+  ``upsert`` commits the batch's cell-assigned vectors as a delta run
+  tombstoned by its vec_ids (an upsert REPLACES by id), ``delete`` a
+  tombstone-only one, and ``compact`` folds them into the cells it
+  touches (delta rows' cells and cells holding tombstoned residents).
 - **Search.** The query's probe cells are chosen DRIVER-side against
   the pinned centroids (k_cells × dim floats in numpy — no Spark job),
   then exact cosine ranks the union of those cells' base partitions and
@@ -43,27 +35,28 @@ from __future__ import annotations
 import json
 import math
 import os
-from functools import reduce
 
 from pyspark.sql import DataFrame, functions as F
 
 from textindexing_spark.operators.similarity import DOT
-from textindexing_spark.sources.bucketed import read_dirs
+from textindexing_spark.sources.runs import RunStore
 from textindexing_spark.sources.versionlog import VersionLog
 
-VEC_DDL = "vec_id bigint, embedding array<float>"
 CELL_DDL = "vec_id bigint, cell int, embedding array<float>"
-IDS_DDL = "vec_id bigint"
 
 
-class IvfVectorStore:
+class IvfVectorStore(RunStore):
     """Snapshot-versioned, cell-partitioned embedding store with pinned
     IVF centroids, O(batch) upsert/delete deltas, copy-on-write
     compaction, and nprobe-pruned cosine search."""
 
+    KEY = "vec_id"
+    SIZE = "n_vecs"
+    BASE = {"cells": CELL_DDL}
+    DELTA = {"vectors": CELL_DDL}
+
     def __init__(self, spark, root: str):
-        self.spark = spark
-        self.root = root
+        super().__init__(spark, root)
         with open(f"{root}/meta.json") as fh:
             meta = json.load(fh)
         self.k_cells = int(meta["k_cells"])
@@ -74,7 +67,6 @@ class IvfVectorStore:
 
         self._cents = np.asarray(meta["centroids"], dtype=np.float64)
         self._cnorms = np.sqrt((self._cents * self._cents).sum(axis=1))
-        self.log = VersionLog(root)
 
     # -- lifecycle ----------------------------------------------------------
 
@@ -121,17 +113,6 @@ class IvfVectorStore:
              for i, c in enumerate(self._cents)],
             "cid int, ce array<double>")
 
-    # -- version bookkeeping (BucketedIndexStore contract) --------------------
-
-    def latest_version(self) -> int | None:
-        return self.log.latest()
-
-    def versions(self) -> list[int]:
-        return self.log.versions()
-
-    def manifest(self, version: int | None = None) -> dict | None:
-        return self.log.manifest(version)
-
     # -- assignment -----------------------------------------------------------
 
     def _assign(self, embeddings: DataFrame) -> DataFrame:
@@ -147,37 +128,17 @@ class IvfVectorStore:
 
     # -- readers ---------------------------------------------------------------
 
-    def _read(self, paths: list[str], ddl: str) -> DataFrame:
-        return read_dirs(self.spark, paths, ddl)
-
     def _resolve(self, m: dict, cells: list[int] | None) -> DataFrame:
         """(vec_id, cell, embedding) — base + deltas, last-wins per
-        vec_id, optionally restricted to ``cells``. Newest delta rows
-        survive unconditionally; older rows are anti-joined against the
-        cumulative tombstones of everything newer (the
-        BucketedIndexStore.load resolution order). Tombstone sets are
-        micro-batch-scale, so the anti-joins broadcast."""
-        if cells is None:
-            base_paths = list(m["cells"].values())
-        else:
-            want = {str(c) for c in cells}
-            base_paths = [p for k, p in m["cells"].items() if k in want]
-        base = self._read(base_paths, CELL_DDL)
-        parts = []
-        later = None
-        for d in reversed(m["deltas"]):
-            dv = self._read([f"{d['dir']}/vectors"], CELL_DDL)
-            if cells is not None:
-                # pushed In-filter on the delta's cell column
-                dv = dv.where(F.col("cell").isin([int(c) for c in cells]))
-            if later is not None:
-                dv = dv.join(F.broadcast(later), "vec_id", "left_anti")
-            parts.append(dv)
-            t = self._read([f"{d['dir']}/tombstones"], IDS_DDL)
-            later = t if later is None else later.unionByName(t).distinct()
-        if later is not None:
-            base = base.join(F.broadcast(later), "vec_id", "left_anti")
-        return reduce(DataFrame.unionByName, parts + [base])
+        vec_id, optionally restricted to ``cells``: the probed cells' base
+        dirs, and an In-filter on ``cell`` pushed into every delta scan."""
+        base = self._read_base(m, "cells", cells)
+        if not m["deltas"]:
+            return base
+        where = (None if cells is None
+                 else F.col("cell").isin([int(c) for c in cells]))
+        delta, later = self._resolve_deltas(m["deltas"], where)
+        return delta["vectors"].unionByName(self._drop(base, later))
 
     def resolved(self, version: int | None = None,
                  cells: list[int] | None = None) -> DataFrame:
@@ -198,144 +159,37 @@ class IvfVectorStore:
         mode='delta' (default): O(batch) LSM delta, size-tier-merged.
         mode='rewrite': fold straight into the cell partitions,
         rewriting only the cells the batch touches."""
-        from pyspark import StorageLevel
-
-        # pointer first, then THAT version's manifest (same TOCTOU
-        # discipline as BucketedIndexStore.commit_merge: the CAS must
-        # expect the exact version this commit read)
-        prev_v = self.latest_version()
-        prev = (self.manifest(prev_v) if prev_v is not None else None) \
-            or {"cells": {}, "deltas": []}
-        v = (prev_v or 0) + 1
-        vdir = self.log.attempt_dir(v)
         # one row per vec_id within the batch: a duplicated id would
         # survive in the delta twice (tombstones only anti-join OLDER
         # state) and break replace-by-id — two rows for one vec_id in
         # every later search
-        assigned = (self._assign(embeddings.dropDuplicates(["vec_id"]))
-                    .persist(StorageLevel.MEMORY_AND_DISK))
-        tombs = assigned.select("vec_id").distinct()
-        try:
-            if mode == "rewrite":
-                if prev["deltas"]:
-                    # deltas are newer than the base; folding a still-newer
-                    # batch under them would invert last-wins — flush first
-                    self.compact()
-                    prev_v = self.latest_version()
-                    prev = self.manifest(prev_v)
-                    v = prev_v + 1
-                    vdir = self.log.attempt_dir(v)
-                man = self._fold_into_cells(prev, assigned, tombs, vdir)
-                man["deltas"] = []
-                return self.log.publish(v, prev_v, man)
-            ddir = f"{vdir}/delta"
-            n = self._write_delta(ddir, tombs, assigned)
-            deltas = list(prev["deltas"]) + [{"dir": ddir, "n_vecs": n}]
-            deltas = self._tier_merge(deltas, vdir)
-            man = {"cells": dict(prev["cells"]), "deltas": deltas}
-            return self.log.publish(v, prev_v, man)
-        finally:
-            assigned.unpersist()
+        assigned = self._assign(embeddings.dropDuplicates(["vec_id"]))
+        return self._commit(mode, assigned.select("vec_id").distinct(),
+                            {"vectors": assigned})
 
     def delete(self, vec_ids: DataFrame) -> int:
         """Tombstone-only delta: the ids disappear from every subsequent
         read; storage is reclaimed at the next compact."""
-        prev_v = self.latest_version()
-        prev = (self.manifest(prev_v) if prev_v is not None else None) \
-            or {"cells": {}, "deltas": []}
-        v = (prev_v or 0) + 1
-        vdir = self.log.attempt_dir(v)
-        ddir = f"{vdir}/delta"
-        empty = self.spark.createDataFrame([], CELL_DDL)
-        self._write_delta(ddir, vec_ids.select("vec_id").distinct(), empty)
-        deltas = list(prev["deltas"]) + [{"dir": ddir, "n_vecs": 0}]
-        man = {"cells": dict(prev["cells"]), "deltas": deltas}
-        return self.log.publish(v, prev_v, man)
+        return self._commit(
+            "delta", vec_ids.select("vec_id").distinct(),
+            {"vectors": self.spark.createDataFrame([], CELL_DDL)})
 
-    def _write_delta(self, ddir: str, tombstones: DataFrame,
-                     vectors: DataFrame) -> int:
-        (tombstones.coalesce(1).write.mode("overwrite")
-         .parquet(f"{ddir}/tombstones"))
-        (vectors.coalesce(1).write.mode("overwrite")
-         .parquet(f"{ddir}/vectors"))
-        return vectors.count()
-
-    def _tier_merge(self, deltas: list[dict], vdir: str) -> list[dict]:
-        """Size-tiered LSM merging (BucketedIndexStore._tier_merge's
-        rule): while the newest delta is >= half its predecessor, merge
-        the two — O(log total) live deltas, amortized O(batch log)."""
-        i = 0
-        while len(deltas) >= 2 and \
-                deltas[-1]["n_vecs"] * 2 >= deltas[-2]["n_vecs"]:
-            old, new = deltas[-2], deltas[-1]
-            old_t = self._read([f"{old['dir']}/tombstones"], IDS_DDL)
-            new_t = self._read([f"{new['dir']}/tombstones"], IDS_DDL)
-            mdir = f"{vdir}/merged{i}"
-            i += 1
-            n = self._write_delta(
-                mdir,
-                old_t.unionByName(new_t).distinct(),
-                self._read([f"{old['dir']}/vectors"], CELL_DDL)
-                    .join(F.broadcast(new_t), "vec_id", "left_anti")
-                    .unionByName(self._read([f"{new['dir']}/vectors"],
-                                            CELL_DDL)))
-            deltas = deltas[:-2] + [{"dir": mdir, "n_vecs": n}]
-        return deltas
-
-    def compact(self) -> int:
-        """Fold every live delta into the cell partitions copy-on-write:
-        a cell is rewritten only if a delta adds rows to it OR tombstones
-        one of its resident vectors; untouched cells inherit their
-        directories byte-identical."""
-        prev_v = self.latest_version()
-        prev = self.manifest(prev_v) if prev_v is not None else None
-        if prev is None or not prev["deltas"]:
-            return prev_v or 0
-        from pyspark import StorageLevel
-
-        v = prev_v + 1
-        vdir = self.log.attempt_dir(v)
-        # resolved delta rows (newest wins) + the full tombstone union
-        later = None
-        parts, tombs = [], []
-        for d in reversed(prev["deltas"]):
-            dv = self._read([f"{d['dir']}/vectors"], CELL_DDL)
-            if later is not None:
-                dv = dv.join(F.broadcast(later), "vec_id", "left_anti")
-            parts.append(dv)
-            t = self._read([f"{d['dir']}/tombstones"], IDS_DDL)
-            tombs.append(t)
-            later = t if later is None else later.unionByName(t).distinct()
-        fresh = (reduce(DataFrame.unionByName, parts)
-                 .persist(StorageLevel.MEMORY_AND_DISK))
-        all_tombs = (reduce(DataFrame.unionByName, tombs).distinct()
-                     .persist(StorageLevel.MEMORY_AND_DISK))
-        try:
-            man = self._fold_into_cells(prev, fresh, all_tombs, vdir)
-            man["deltas"] = []
-            return self.log.publish(v, prev_v, man)
-        finally:
-            fresh.unpersist()
-            all_tombs.unpersist()
-
-    def _fold_into_cells(self, prev: dict, fresh: DataFrame,
-                         tombstones: DataFrame, vdir: str) -> dict:
+    def _fold(self, prev: dict, tombstones: DataFrame,
+              tables: dict[str, DataFrame], vdir: str) -> dict:
         """Rewrite only the touched cells (fresh rows' cells ∪ cells
         holding tombstoned residents); inherit the rest unchanged."""
+        fresh = tables["vectors"]
         fresh_cells = {int(r["cell"]) for r in
                        fresh.select("cell").distinct().collect()}
         # which resident cells hold a tombstoned vector: point lookup on
         # the base, pruned to nothing when the base is empty
-        base_all = self._read(list(prev["cells"].values()), CELL_DDL)
         hit_cells = {int(r["cell"]) for r in
-                     base_all.join(F.broadcast(tombstones), "vec_id")
+                     self._read_base(prev, "cells")
+                     .join(F.broadcast(tombstones), "vec_id")
                      .select("cell").distinct().collect()}
         touched = sorted(fresh_cells | hit_cells)
-        t_set = set(touched)
-        old_kept = (self._read(
-            [p for k, p in prev["cells"].items() if int(k) in t_set],
-            CELL_DDL)
-            .join(F.broadcast(tombstones), "vec_id", "left_anti"))
+        old_kept = self._drop(self._read_base(prev, "cells", touched),
+                              tombstones)
         # partition on a DUPLICATE of cell: partitionBy strips its column
         # from the data files, and manifest dirs are read individually
         # (no shared basePath across versions), so ``cell`` must survive
@@ -345,13 +199,7 @@ class IvfVectorStore:
          .repartition("pcell")
          .write.mode("overwrite").partitionBy("pcell")
          .parquet(f"{vdir}/cells"))
-        man = {"cells": dict(prev["cells"])}
-        for c in touched:
-            man["cells"].pop(str(c), None)
-            d = f"{vdir}/cells/pcell={c}"
-            if os.path.isdir(d):
-                man["cells"][str(c)] = d
-        return man
+        return self._inherit(prev, vdir, {"cells": ("pcell", touched)})
 
     def retrain(self, dest_root: str, k_cells: int | None = None,
                 seed: int = 7, iters: int = 8, sample_n: int = 10_000,
@@ -393,20 +241,6 @@ class IvfVectorStore:
             return new
         finally:
             cur.unpersist()
-
-    def vacuum(self, keep_last: int = 2,
-               grace_s: float = 3600.0) -> list[str]:
-        """Drop data dirs unreachable from the newest ``keep_last``
-        manifests (clamped >= 1) and the older manifests themselves —
-        BucketedIndexStore.vacuum's reachability rule, with the same
-        ``grace_s`` window sparing a younger unreferenced dir that may be
-        an in-flight writer's attempt."""
-        def referenced(v):
-            m = self.manifest(v)
-            return (list(m["cells"].values())
-                    + [d["dir"] for d in m["deltas"]])
-
-        return self.log.vacuum(referenced, keep_last, grace_s)
 
     # -- search --------------------------------------------------------------
 

@@ -176,9 +176,7 @@ class StreamingIngestor:
         idx = self.index()
         if idx is None:
             return 0
-        docs_df = (idx.documents if hasattr(idx, "documents")
-                   else idx.documents_df())  # SegmentIndex
-        indexed = (docs_df.select("doc_id")
+        indexed = (idx.documents_df().select("doc_id")
                    .join(self.url_ids.mapping(), "doc_id"))
         gone = (indexed.join(live, "url", "left_anti")
                 .select("doc_id", F.lit("").alias("text")))

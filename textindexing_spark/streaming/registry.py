@@ -104,13 +104,11 @@ class _SourceIngestor(StreamingIngestor):
         idx = self.index()
         if idx is None:
             return 0
-        docs_df = (idx.documents if hasattr(idx, "documents")
-                   else idx.documents_df())
         # join the index's CURRENT documents (not the append-only id
         # mapping, whose rows outlive deletion — using it here would
         # re-detect every vanished url forever and commit a redundant
         # tombstone version on each reconcile tick)
-        indexed = (docs_df.select("doc_id")
+        indexed = (idx.documents_df().select("doc_id")
                    .join(self.url_ids.mapping(), "doc_id")
                    .where(F.col("url").startswith(self.identity_prefix)))
         gone = (indexed.join(live, "url", "left_anti")
@@ -209,10 +207,9 @@ class IngestorSet:
                           .select("doc_id", F.lit("").alias("text")))
             idx = ing.index()
             if idx is not None:
-                docs_df = (idx.documents if hasattr(idx, "documents")
-                           else idx.documents_df())
                 tombstones = tombstones.join(
-                    docs_df.select("doc_id"), "doc_id", "left_semi")
+                    idx.documents_df().select("doc_id"), "doc_id",
+                    "left_semi")
                 if tombstones.limit(1).count():
                     ing.store.commit_merge(tombstones)
             self._sources.pop(key, None)
@@ -257,10 +254,8 @@ class IngestorSet:
         idx = ing.index()
         if idx is None:
             return tombstones
-        docs_df = (idx.documents if hasattr(idx, "documents")
-                   else idx.documents_df())
-        return tombstones.join(docs_df.select("doc_id"), "doc_id",
-                               "left_semi")
+        return tombstones.join(idx.documents_df().select("doc_id"),
+                               "doc_id", "left_semi")
 
     def reconcile(self, source_dir: str) -> None:
         """Registry-aware delete detection: tombstone documents whose url
