@@ -1056,6 +1056,49 @@ def test_quarantine_records_every_failed_row(spark, tmp_path):
         == {"fine", "words"}
 
 
+def test_ingest_metrics_exact_counts(spark, tmp_path):
+    """Every IngestMetrics counter of one batch holding null urls, a url
+    sent twice, an empty-text delete and a row the transform drops:
+    found counts every row, failed the null urls, indexed the deduped,
+    kept, non-empty docs."""
+    import datetime as dt
+
+    from textindexing_spark.streaming.ingest import (
+        StreamingSegmentIngestor)
+
+    t0, t1 = dt.datetime(2024, 1, 1), dt.datetime(2024, 1, 2)
+    ing = StreamingSegmentIngestor(
+        spark, str(tmp_path / "midx"), n_shards=2,
+        transform=lambda df: df.where(F.col("url") != "u_drop"))
+    ing.process_batch(spark.createDataFrame(
+        [("u_del", t0, None, "doomed page", "en"),
+         ("u_old", t0, None, "stays here", "en")], PAGES_SCHEMA))
+    assert (ing.metrics.docs_found, ing.metrics.docs_failed,
+            ing.metrics.docs_indexed) == (2, 0, 2)
+    ing.process_batch(spark.createDataFrame(
+        [(None, t0, None, "broken one", "en"),
+         (None, t1, None, "broken two", "en"),
+         ("u_twice", t0, None, "older text", "en"),
+         ("u_twice", t1, None, "newer text", "en"),
+         ("u_del", t1, None, "", "en"),
+         ("u_drop", t1, None, "filtered out", "en"),
+         ("u_new", t1, None, "fresh page", "en")], PAGES_SCHEMA))
+    m = ing.metrics
+    assert (m.batches, m.docs_found, m.docs_failed, m.docs_indexed) \
+        == (2, 9, 2, 4)
+    assert m.versions == [1, 2]
+    idx = ing.index()
+    assert idx.n_docs == 3  # u_old, u_twice, u_new
+    assert idx.search_bm25("newer").count() == 1
+    for gone in ("older", "doomed", "filtered", "broken"):
+        assert idx.search_bm25(gone).count() == 0, gone
+    # a recrawl-only batch: no url is new to the id table
+    ing.process_batch(spark.createDataFrame(
+        [("u_old", t1, None, "stays again", "en")], PAGES_SCHEMA))
+    assert (m.batches, m.docs_found, m.docs_failed, m.docs_indexed) \
+        == (3, 10, 2, 5)
+
+
 def test_dedup_last_wins_deterministic_on_ts_ties(spark):
     """Same-second recrawls: the surviving row must be deterministic
     (content-hash tie-break) — warc_ts alone lets each action over the

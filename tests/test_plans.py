@@ -229,7 +229,8 @@ def test_reshard_one_exchange_per_direction(spark, tmp_path):
     from textindexing_spark.operators.bm25 import (FUSED_SCHEMA,
                                                    SegmentIndex,
                                                    _coalesce_shard_factory,
-                                                   _split_shard_factory)
+                                                   _split_shard_factory,
+                                                   by_shard_task)
     from pyspark.sql import functions as F
 
     built.save(str(tmp_path / "seg"))
@@ -238,13 +239,13 @@ def test_reshard_one_exchange_per_direction(spark, tmp_path):
     # materializes eagerly via _index_from_fused's stats collect, so
     # inspect the same dataflow it builds)
 
-    grow = (base._as_fused().groupby("shard")
+    grow = (by_shard_task(base._as_fused(), base.n_shards)
             .applyInPandas(_split_shard_factory(base.cfg, 8),
                            FUSED_SCHEMA))
-    shrink = (base._as_fused()
-              .withColumn("shard",
-                          F.pmod(F.col("shard"), F.lit(2)).cast("int"))
-              .groupby("shard")
+    shrink = (by_shard_task(
+                  base._as_fused().withColumn(
+                      "shard", F.pmod(F.col("shard"), F.lit(2)).cast("int")),
+                  2)
               .applyInPandas(_coalesce_shard_factory(base.cfg),
                              FUSED_SCHEMA))
     for p in (_plan(grow), _plan(shrink)):

@@ -50,6 +50,37 @@ def test_spark_hash_long_matches_spark(spark):
     ours = codec.spark_hash_long(vals)
     for v, h in zip(vals.tolist(), ours.tolist()):
         assert got[v] == h, v
+    # placement keys: keys[t] lands in partition t under F.hash on BIGINT
+    for n in (1, 2, 3, 4, 8, 64):
+        keys = codec.placement_keys(n)
+        kdf = spark.createDataFrame([(int(k),) for k in keys], "k bigint")
+        parts = [r["p"] for r in kdf.select(
+            F.pmod(F.hash("k"), F.lit(n)).alias("p")).collect()]
+        assert parts == list(range(n)), n
+        assert (keys >= 0).all()
+
+
+@pytest.mark.parametrize("n", [4, 8])
+def test_upsert_merges_one_shard_per_task(spark, corpus, n):
+    """The upsert cogroup runs one shard per task: shard s is merged in
+    partition s of the merged frame (grouping by the int shard column
+    hashes 4 shards into 2 tasks)."""
+    docs = spark.createDataFrame(corpus[:120], "doc_id bigint, text string")
+    base = build_segments_from_docs(spark, docs, IndexConfig(block_size=16),
+                                    n_shards=n)
+    delta = spark.createDataFrame(
+        [(i, "fresh words") for i in range(0, 120, 7)]
+        + [(1000 + i, "new doc") for i in range(12)],
+        "doc_id bigint, text string")
+    merged = base.upsert(delta)
+    placed = (merged._fused.select(F.spark_partition_id().alias("p"),
+                                   "shard").distinct().collect())
+    by_part = {}
+    for r in placed:
+        by_part.setdefault(r["p"], set()).add(r["shard"])
+    assert by_part == {s: {s} for s in range(n)}
+    merged.unpersist()
+    base.unpersist()
 
 
 def test_reshard_is_rank_and_score_identical(base):

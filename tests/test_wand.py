@@ -307,6 +307,38 @@ def test_segment_roundtrip_save_load(spark, seg, tmp_path):
     assert a == b
 
 
+def test_segment_load_runs_no_job(spark, seg, tmp_path):
+    """SegmentIndex.load pins its three tables' schemas: no Spark job
+    runs (a schema-less parquet read runs one inference job per
+    table). A term_stats table written without the ``shards`` column
+    still loads and queries, with rare-term pruning off."""
+    import copy
+    import shutil
+
+    from textindexing_spark.operators.bm25 import SegmentIndex
+
+    path = str(tmp_path / "pinned")
+    copy.copy(seg).save(path)  # save() rebinds the saver's tables
+    got = []
+    assert _jobs_run(spark, lambda: got.append(
+        SegmentIndex.load(spark, path, seg.cfg))) == 0
+    want = [(r.doc_id, round(r.score, 9)) for r in
+            seg.search_bm25("word1 word7", 10).collect()]
+    assert [(r.doc_id, round(r.score, 9)) for r in
+            got[0].search_bm25("word1 word7", 10).collect()] == want
+
+    old = str(tmp_path / "legacy")
+    shutil.copytree(path, old, ignore=shutil.ignore_patterns("term_stats"))
+    (spark.read.parquet(f"{path}/term_stats").drop("shards")
+     .write.parquet(f"{old}/term_stats"))
+    legacy = SegmentIndex.load(spark, old, seg.cfg)
+    assert [(r.doc_id, round(r.score, 9)) for r in
+            legacy.search_bm25("word1 word7", 10).collect()] == want
+    rare = got[0].term_stats.orderBy("df").first()["term"]
+    assert got[0].explain_shards(rare)["candidate_shards"] is not None
+    assert legacy.explain_shards(rare)["candidate_shards"] is None
+
+
 def test_index_metadata_on_file_uri(spark, tmp_path, monkeypatch):
     """Both segment tiers read and write their metadata through the
     Hadoop FileSystem of the path's scheme: a file:/// URI round-trips

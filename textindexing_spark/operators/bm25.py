@@ -12,6 +12,11 @@ explicit dataflow:
   tiny distributed top-k reduce (orderBy+limit = TakeOrderedAndProject
   over <= S*k rows). One shard kernel writes every segment row: both
   build fronts (raw docs, counted tokens), upsert and reshard.
+- the shard-rewrite kernels (upsert merge, reshard split/coalesce) run
+  one shard per task: ``by_shard_task`` keys shard s with the BIGINT
+  that Spark's HashPartitioning sends to partition s
+  (``codec.placement_keys``), where grouping the int shard itself
+  would put 3 of 4 shards in one task.
 - per posting block (block_size docs) we store skip metadata:
   (last_doc, byte offsets, n, max_tf, max_score) where max_score is the
   block's true max BM25 partial tf*(k1+1)/(tf+k1*(1-b+b*dl/avgdl)) —
@@ -72,6 +77,21 @@ FUSED_SCHEMA = T.StructType(SEGMENT_SCHEMA.fields + [
     # through _merge_shard_factory without decoding)
     T.StructField("sum_dl", T.LongType()),
 ])
+
+# a saved index's tables, read with their schemas pinned: a schema-less
+# parquet read runs a one-task inference job per table. A term_stats
+# table written before the ``shards`` column reads it as NULL, which
+# turns rare-term pruning off.
+_TABLES = {
+    "segments": SEGMENT_SCHEMA,
+    "shard_docs": "shard int, doc_ids binary, doc_lens binary, n int, "
+                  "sum_dl bigint",
+    "term_stats": "term string, df bigint, shards array<int>",
+}
+
+
+def _read_table(spark, path: str, table: str) -> DataFrame:
+    return spark.read.schema(_TABLES[table]).parquet(f"{path}/{table}")
 
 
 def _bm25_partial(tf, dl, k1: float, b: float, avgdl: float):
@@ -290,13 +310,13 @@ class SegmentIndex:
         # tables (term_stats comes from segments) never re-run the build
         self.segments.repartition("shard").sortWithinPartitions(
             "shard", "term").write.mode("overwrite").parquet(f"{path}/segments")
-        self.segments = self.spark.read.parquet(f"{path}/segments")
+        self.segments = _read_table(self.spark, path, "segments")
         self.shard_docs.write.mode("overwrite").parquet(f"{path}/shard_docs")
-        self.shard_docs = self.spark.read.parquet(f"{path}/shard_docs")
+        self.shard_docs = _read_table(self.spark, path, "shard_docs")
         self.term_stats = _term_stats_from_segments(self.segments,
                                                     self.n_shards)
         self.term_stats.write.mode("overwrite").parquet(f"{path}/term_stats")
-        self.term_stats = self.spark.read.parquet(f"{path}/term_stats")
+        self.term_stats = _read_table(self.spark, path, "term_stats")
         fs_write_text(self.spark, f"{path}/_meta.json", json.dumps(
             {"n_docs": self.n_docs, "avgdl": self.avgdl,
              "n_shards": self.n_shards}))
@@ -310,9 +330,7 @@ class SegmentIndex:
 
         meta = json.loads(fs_read_text(spark, f"{path}/_meta.json"))
         return cls(spark,
-                   spark.read.parquet(f"{path}/segments"),
-                   spark.read.parquet(f"{path}/shard_docs"),
-                   spark.read.parquet(f"{path}/term_stats"),
+                   *(_read_table(spark, path, t) for t in _TABLES),
                    meta["n_docs"], meta["avgdl"], cfg or IndexConfig(),
                    n_shards=meta.get("n_shards"))
 
@@ -467,7 +485,11 @@ class SegmentIndex:
         cogroup rewrites ONLY the shards that received delta docs — every
         untouched shard passes through without even decoding. Doc-sharding
         makes replacement shard-local: all of a doc's postings live in
-        exactly one shard."""
+        exactly one shard. Both cogroup sides go through
+        ``by_shard_task``: shard s merges in task s, so the merge stage
+        costs one shard's work per core (S tasks, one exchange per side).
+        A touched shard decodes its resident lists in one pass and
+        re-encodes only the lists the batch touches."""
         from pyspark import StorageLevel
 
         if not self.n_shards:
@@ -480,8 +502,9 @@ class SegmentIndex:
                                              id_col, text_col,
                                              include_empty_docs=True),
                               FUSED_SCHEMA))
-        merged = (self._as_fused().groupby("shard")
-                  .cogroup(delta.groupby("shard"))
+        n = self.n_shards
+        merged = (by_shard_task(self._as_fused(), n)
+                  .cogroup(by_shard_task(delta, n))
                   .applyInPandas(_merge_shard_factory(self.cfg),
                                  FUSED_SCHEMA)
                   .persist(StorageLevel.MEMORY_AND_DISK))
@@ -516,7 +539,10 @@ class SegmentIndex:
 
         Execution: ONE applyInPandas task per OUTPUT-side group decodes
         the affected postings once and re-encodes them under the new
-        sharding. In the grow direction the child shard is computed with
+        sharding. Groups are placed by ``by_shard_task``: one parent
+        per task when growing (old-count tasks), one child per task
+        when shrinking (new-count tasks). In the grow direction the
+        child shard is computed with
         the numpy twin of Spark's murmur3 (codec.spark_hash_long), i.e.
         exactly where ``repartition(n_shards, doc_id)`` will route the
         doc — so subsequent upsert deltas keep landing on the shard that
@@ -547,16 +573,16 @@ class SegmentIndex:
         if n_shards == self.n_shards:
             return self
         if n_shards > self.n_shards and n_shards % self.n_shards == 0:
-            fused = (self._as_fused().groupby("shard")
+            fused = (by_shard_task(self._as_fused(), self.n_shards)
                      .applyInPandas(
                          _split_shard_factory(self.cfg, n_shards),
                          FUSED_SCHEMA))
         elif n_shards > 0 and self.n_shards % n_shards == 0:
-            fused = (self._as_fused()
-                     .withColumn("shard",
-                                 F.pmod(F.col("shard"),
-                                        F.lit(int(n_shards))).cast("int"))
-                     .groupby("shard")
+            fused = (by_shard_task(
+                         self._as_fused().withColumn(
+                             "shard", F.pmod(F.col("shard"),
+                                             F.lit(int(n_shards)))
+                             .cast("int")), n_shards)
                      .applyInPandas(
                          _coalesce_shard_factory(self.cfg),
                          FUSED_SCHEMA))
@@ -1074,6 +1100,7 @@ class _FusedRows:
     def __init__(self, block_size: int):
         self.block_size = block_size
         self.cols = {c: [] for c in _FUSED_COLS}
+        self.verbatim = []
 
     def _append(self, *vals) -> None:
         for c, v in zip(_FUSED_COLS, vals):
@@ -1085,11 +1112,10 @@ class _FusedRows:
         self._append(int(shard), term, int(doc.size), gb, tb, blocks,
                      None, None, None)
 
-    def passthrough(self, shard, row) -> None:
-        """Re-emit an encoded posting row verbatim (no decode)."""
-        self._append(int(shard), row["term"], int(row["n_docs"]),
-                     row["gaps"], row["tfs"], row["blocks"],
-                     None, None, None)
+    def passthrough(self, rows) -> None:
+        """Re-emit encoded fused rows verbatim (no decode)."""
+        if len(rows):
+            self.verbatim.append(rows[_FUSED_COLS])
 
     def summary(self, shard, ids, lens) -> None:
         """The shard's summary row (term NULL): packed doc table + sum."""
@@ -1100,7 +1126,10 @@ class _FusedRows:
     def frame(self):
         import pandas as pd
 
-        return pd.DataFrame(self.cols)
+        built = pd.DataFrame(self.cols)
+        if not self.verbatim:
+            return built
+        return pd.concat(self.verbatim + [built], ignore_index=True)
 
 
 def _unpack(blob):
@@ -1108,10 +1137,25 @@ def _unpack(blob):
     return codec.varbyte_decode(np.frombuffer(blob, dtype=np.uint8))
 
 
-def _unpack_postings(row):
-    """An encoded posting row -> (doc ids, tfs)."""
-    return codec.decode_postings(bytes(row["gaps"]), bytes(row["tfs"]),
-                                 list(row["blocks"]))
+def _unpack_lists(rows):
+    """Every posting list of ``rows`` decoded in one pass -> (doc ids,
+    tfs, cut): row i's postings are ``[cut[i]:cut[i + 1]]``. One
+    varbyte_decode runs over the concatenated gaps blobs and one over
+    the tfs blobs (per-call numpy overhead, not bytes, sets the cost of
+    decoding thousands of short lists one by one); each list's first
+    gap is doc0 + 1, so a cumsum restarted at every row gives the ids."""
+    n = rows["n_docs"].to_numpy(np.int64)
+    cut = np.zeros(n.size + 1, dtype=np.int64)
+    np.cumsum(n, out=cut[1:])
+    total = int(cut[-1])
+    gaps = codec.varbyte_decode(
+        np.frombuffer(b"".join(rows["gaps"]), dtype=np.uint8), total)
+    tfs = codec.varbyte_decode(
+        np.frombuffer(b"".join(rows["tfs"]), dtype=np.uint8), total)
+    run = np.zeros(total + 1, dtype=np.int64)
+    np.cumsum(gaps, out=run[1:])
+    doc = run[1:] - np.repeat(run[cut[:-1]], n) - 1
+    return doc, tfs, cut
 
 
 class _ShardBuffer:
@@ -1180,6 +1224,26 @@ def _by_shard(pdf, id_col: str, n_shards: int):
     if (sh == first).all():     # the common single-shard case
         return [(first, pdf)]
     return [(int(s), sub) for s, sub in pdf.groupby(sh, sort=False)]
+
+
+_TASK = "_task"
+
+
+def by_shard_task(frame: DataFrame, n: int):
+    """``frame`` grouped for a shard-rewrite kernel, one shard per task:
+    shard s goes to partition pmod(s, n). Grouping by the int ``shard``
+    column itself hashes it (murmur3) into the partitions, and 4 shards
+    land in 2 of 4 tasks. So a BIGINT ``_task`` column holds
+    ``codec.placement_keys(n)[pmod(shard, n)]``, the frame is
+    ``repartition(n, _task)``-ed and grouped by ``_task``: the group's
+    exchange is that repartition. Every group holds one shard when
+    shards are below ``n``; kernels read it from the ``shard`` column
+    and get ``_task`` as an extra input column."""
+    keys = F.array(*[F.lit(int(k)) for k in codec.placement_keys(n)])
+    task = F.element_at(keys.cast("array<bigint>"),
+                        F.pmod(F.col("shard"), F.lit(n)) + 1)
+    return (frame.withColumn(_TASK, task)
+            .repartition(n, _TASK).groupby(_TASK))
 
 
 def _write_shards(bufs: dict, block_size: int):
@@ -1280,7 +1344,11 @@ def _merge_shard_factory(cfg: IndexConfig):
     Merge (IIndex.cs:116-119): a delta doc REPLACES its postings entirely;
     a delta doc with doc_len 0 (empty token set) is DELETED; terms whose
     posting lists empty out disappear (no empty lists, IIndex.cs:67-69).
-    Untouched shards pass through without decoding."""
+    Untouched shards pass through without decoding. In a touched shard
+    every resident list decodes in one pass (``_unpack_lists``) and one
+    ``isin`` against the delta ids marks the lists holding a replaced or
+    deleted doc; lists neither marked nor in the delta pass through
+    verbatim, the rest re-encode."""
     block_size = cfg.block_size
 
     def merge(left, right):
@@ -1304,54 +1372,40 @@ def _merge_shard_factory(cfg: IndexConfig):
         order = np.argsort(ids)
         ids, lens = ids[order], lens[order]
 
-        lterms = left[left["term"].notna()] if not left.empty else left
+        lterms = left[left["term"].notna()]
         rterms = right[right["term"].notna()]
-        rmap = {r["term"]: r for r in rterms.to_dict("records")}
+        doc_l, tf_l, cut_l = _unpack_lists(lterms)
+        doc_r, tf_r, cut_r = _unpack_lists(rterms)
+        rpos = {t: j for j, t in enumerate(rterms["term"])}
+        # lists holding a replaced/deleted doc, or receiving delta docs
+        gone = np.isin(doc_l, d_ids_r)
+        n_gone = np.zeros(gone.size + 1, dtype=np.int64)
+        np.cumsum(gone, out=n_gone[1:])
+        redo = ((n_gone[cut_l[1:]] > n_gone[cut_l[:-1]])
+                | lterms["term"].isin(list(rpos)).to_numpy())
         out = _FusedRows(block_size)
+        out.passthrough(lterms[~redo])
 
         def emit(term, doc, tf):
             out.postings(shard, term, doc, tf,
                          lens[np.searchsorted(ids, doc)])
 
-        # skip-decode pre-check: a resident term whose max doc id sits
-        # BELOW every delta doc id cannot contain any replaced/deleted
-        # doc — pass it through without even decoding (blocks[-1].last_doc
-        # is already in the metadata). In the dominant ingest shape (new
-        # docs get fresh, higher dense ids; only re-crawls carry old ids)
-        # this skips almost every resident term of a hot shard.
-        d_min = int(d_ids_r[0]) if d_ids_r.size else None
-        seen = set()
-        if not left.empty:
-            for lrow in lterms.to_dict("records"):
-                term = lrow["term"]
-                seen.add(term)
-                rrow = rmap.get(term)
-                if rrow is None and (
-                        d_min is None or
-                        int(lrow["blocks"][-1]["last_doc"]) < d_min):
-                    # no delta id can be in this list
-                    out.passthrough(shard, lrow)
-                    continue
-                doc_l, tf_l = _unpack_postings(lrow)
-                m = ~np.isin(doc_l, d_ids_r)  # drop replaced/deleted docs
-                if rrow is None and m.all():
-                    # posting list untouched by this delta: pass the
-                    # encoded bytes through verbatim (no re-encode)
-                    out.passthrough(shard, lrow)
-                    continue
-                doc_l, tf_l = doc_l[m], tf_l[m]
-                if rrow is not None:
-                    doc_r, tf_r = _unpack_postings(rrow)
-                    doc_l = np.concatenate([doc_l, doc_r])
-                    tf_l = np.concatenate([tf_l, tf_r])
-                    o = np.argsort(doc_l)
-                    doc_l, tf_l = doc_l[o], tf_l[o]
-                if doc_l.size:
-                    emit(term, doc_l, tf_l)
-        for term, rrow in rmap.items():
-            if term in seen:
-                continue
-            emit(term, *_unpack_postings(rrow))
+        lnames = lterms["term"].to_numpy()
+        for i in np.flatnonzero(redo):
+            s, e = cut_l[i], cut_l[i + 1]
+            live = ~gone[s:e]
+            doc, tf = doc_l[s:e][live], tf_l[s:e][live]
+            j = rpos.pop(lnames[i], None)
+            if j is not None:
+                doc = np.concatenate([doc, doc_r[cut_r[j]:cut_r[j + 1]]])
+                tf = np.concatenate([tf, tf_r[cut_r[j]:cut_r[j + 1]]])
+                o = np.argsort(doc)
+                doc, tf = doc[o], tf[o]
+            if doc.size:
+                emit(lnames[i], doc, tf)
+        for term, j in rpos.items():  # terms new to this shard
+            emit(term, doc_r[cut_r[j]:cut_r[j + 1]],
+                 tf_r[cut_r[j]:cut_r[j + 1]])
         out.summary(shard, ids, lens)
         return out.frame()
 
@@ -1373,13 +1427,15 @@ def _split_shard_factory(cfg: IndexConfig, new_n: int):
         child = np.mod(
             codec.spark_hash_long(d_ids).astype(np.int64), new_n)
         out = _FusedRows(block_size)
-        for r in pdf[pdf["term"].notna()].to_dict("records"):
-            doc, tf = _unpack_postings(r)
+        terms = pdf[pdf["term"].notna()]
+        doc_all, tf_all, cut = _unpack_lists(terms)
+        for i, term in enumerate(terms["term"]):
+            doc, tf = doc_all[cut[i]:cut[i + 1]], tf_all[cut[i]:cut[i + 1]]
             pos = np.searchsorted(d_ids, doc)
             dl, ns = d_lens[pos], child[pos]
             for sh in np.unique(ns):
                 m = ns == sh
-                out.postings(sh, r["term"], doc[m], tf[m], dl[m])
+                out.postings(sh, term, doc[m], tf[m], dl[m])
         for sh in np.unique(child):
             m = child == sh
             out.summary(sh, d_ids[m], d_lens[m])
@@ -1405,11 +1461,11 @@ def _coalesce_shard_factory(cfg: IndexConfig):
         o = np.argsort(d_ids)
         d_ids, d_lens = d_ids[o], d_lens[o]
         out = _FusedRows(block_size)
-        for term, grp in pdf[pdf["term"].notna()].groupby("term",
-                                                          sort=False):
-            parts = [_unpack_postings(r) for r in grp.to_dict("records")]
-            doc = np.concatenate([p[0] for p in parts])
-            tf = np.concatenate([p[1] for p in parts])
+        terms = pdf[pdf["term"].notna()]
+        doc_all, tf_all, cut = _unpack_lists(terms)
+        for term, rows in terms.groupby("term", sort=False).indices.items():
+            doc = np.concatenate([doc_all[cut[i]:cut[i + 1]] for i in rows])
+            tf = np.concatenate([tf_all[cut[i]:cut[i + 1]] for i in rows])
             po = np.argsort(doc)
             doc, tf = doc[po], tf[po]
             out.postings(shard, term, doc, tf,

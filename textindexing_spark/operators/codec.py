@@ -207,3 +207,24 @@ def spark_hash_long(vals: np.ndarray) -> np.ndarray:
     h1 = h1 * np.uint32(0xC2B2AE35)
     h1 ^= h1 >> np.uint32(16)
     return h1.view(np.int32)
+
+
+def placement_keys(n: int) -> np.ndarray:
+    """The inverse of HashPartitioning over ``n`` partitions, for a
+    domain of ``n`` values: int64 ``keys`` where ``keys[t]`` is the
+    smallest BIGINT k >= 0 with pmod(spark_hash_long(k), n) == t.
+    ``repartition(n, key)`` on a BIGINT column holding ``keys[t]`` puts
+    the row in partition t, so a shard-keyed stage can give every shard
+    its own task (hashing the shard number itself collides: 4 shards
+    land in 2 of 4 partitions). The key must stay BIGINT; Spark hashes
+    an INT with a different function."""
+    found = np.full(n, -1, dtype=np.int64)
+    lo, width = 0, max(64, 8 * n)
+    while (found < 0).any():
+        cand = np.arange(lo, lo + width, dtype=np.int64)
+        part = np.mod(spark_hash_long(cand).astype(np.int64), n)
+        hit, first = np.unique(part, return_index=True)  # first per part
+        fill = found[hit] < 0
+        found[hit[fill]] = cand[first[fill]]
+        lo += width
+    return found

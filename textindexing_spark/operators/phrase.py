@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from textindexing_spark.config import IndexConfig
 from textindexing_spark.functions.tokenize import tokenize_series
+from textindexing_spark.operators.bm25 import by_shard_task
 
 POSITIONAL_SCHEMA = "doc_id bigint, term string, positions array<int>"
 
@@ -302,6 +303,9 @@ def _pos_rows() -> dict:
             "plens_blob": [], "pos_blob": []}
 
 
+_POS_COLS = list(_pos_rows())
+
+
 def _append_pos_term(out: dict, shard, term, doc_ids, plens, flat, np):
     """The one writer of positional segment rows: encode one (shard,
     term) posting list (``_encode_term_arrays``) and append it to
@@ -446,14 +450,14 @@ class PositionalSegmentIndex:
         pos = pos.withColumn(
             "shard", F.pmod(F.col("doc_id"), F.lit(n_shards)).cast("int"))
 
-        def encode(key, pdf):
+        def encode(pdf):
             import numpy as np
             import pandas as pd
 
             return pd.DataFrame(
-                _encode_pos_shard(int(key[0]), pdf, np))
+                _encode_pos_shard(int(pdf["shard"].iloc[0]), pdf, np))
 
-        seg = (pos.groupBy("shard")
+        seg = (by_shard_task(pos, n_shards)
                .applyInPandas(encode, POS_SEGMENT_SCHEMA))
         return cls(spark, seg, cfg, n_shards=n_shards)
 
@@ -480,7 +484,8 @@ class PositionalSegmentIndex:
         meta = f"{path}/_pos_meta.json"
         n_shards = (json.loads(fs_read_text(spark, meta)).get("n_shards")
                     if fs_exists(spark, meta) else None)
-        return cls(spark, spark.read.parquet(path), cfg,
+        return cls(spark,
+                   spark.read.schema(POS_SEGMENT_SCHEMA).parquet(path), cfg,
                    n_shards=n_shards)
 
     def upsert(self, docs: DataFrame, id_col: str = "doc_id",
@@ -510,14 +515,18 @@ class PositionalSegmentIndex:
                              F.pmod(F.col("doc_id"),
                                     F.lit(self.n_shards)).cast("int")))
 
-        def merge(key, seg_pdf, delta_pdf):
+        def merge(seg_pdf, delta_pdf):
             import numpy as np
             import pandas as pd
 
-            return _merge_pos_shard(key, seg_pdf, delta_pdf, np, pd)
+            shard = int(delta_pdf["shard"].iloc[0]) if len(delta_pdf) \
+                else None
+            return _merge_pos_shard((shard,), seg_pdf[_POS_COLS],
+                                    delta_pdf, np, pd)
 
-        merged = (self.segments.groupby("shard")
-                  .cogroup(delta.groupby("shard"))
+        n = self.n_shards
+        merged = (by_shard_task(self.segments, n)
+                  .cogroup(by_shard_task(delta, n))
                   .applyInPandas(merge, POS_SEGMENT_SCHEMA))
         return PositionalSegmentIndex(self.spark, merged, self.cfg,
                                       n_shards=self.n_shards)
@@ -544,7 +553,7 @@ class PositionalSegmentIndex:
         if n_shards > self.n_shards and n_shards % self.n_shards == 0:
             new_n = n_shards
 
-            def split(key, pdf):
+            def split(pdf):
                 import numpy as np
                 import pandas as pd
 
@@ -568,25 +577,26 @@ class PositionalSegmentIndex:
                                          sub_flat, np)
                 return pd.DataFrame(out)
 
-            seg = (self.segments.groupby("shard")
+            seg = (by_shard_task(self.segments, self.n_shards)
                    .applyInPandas(split, POS_SEGMENT_SCHEMA))
         elif n_shards > 0 and self.n_shards % n_shards == 0:
-            def coalesce(key, pdf):
+            def coalesce(pdf):
                 import numpy as np
                 import pandas as pd
 
                 out = _pos_rows()
+                shard = int(pdf["shard"].iloc[0])
                 for term, dec in _decode_shard_terms(pdf, np).items():
                     doc_ids, plens, _starts, flat = dec
-                    _append_pos_term(out, key[0], term, doc_ids, plens,
+                    _append_pos_term(out, shard, term, doc_ids, plens,
                                      flat, np)
                 return pd.DataFrame(out)
 
-            seg = (self.segments
-                   .withColumn("shard",
-                               F.pmod(F.col("shard"),
-                                      F.lit(int(n_shards))).cast("int"))
-                   .groupby("shard")
+            seg = (by_shard_task(
+                       self.segments.withColumn(
+                           "shard", F.pmod(F.col("shard"),
+                                           F.lit(int(n_shards)))
+                           .cast("int")), n_shards)
                    .applyInPandas(coalesce, POS_SEGMENT_SCHEMA))
         else:
             raise ValueError(

@@ -125,9 +125,20 @@ class StreamingIngestor:
     # -- batch core (shared by streaming + manual batch ingest) -----------
 
     def process_batch(self, batch: DataFrame, epoch_id: int = 0) -> int:
-        """Upsert one micro-batch into the index; returns new version."""
+        """Upsert one micro-batch into the index; returns new version.
+
+        The deduplicated rows are pinned (persisted) for the call: id
+        assignment, the merge and the indexed count read one evaluation
+        of the dedup window instead of re-running it. The counts are two
+        aggregates, four jobs: found + failed over the batch, indexed
+        over the pinned rows. The raw batch is not pinned: a persisted
+        frame's first action adds a cache-fill job, and the batch is
+        only read twice (the first aggregate and the pinning scan)."""
+        from pyspark import StorageLevel
+
         self.metrics.batches += 1
-        n_found = batch.count()
+        n_found, n_bad = batch.agg(
+            F.count("*"), F.count_if(F.col("url").isNull())).first()
         self.metrics.docs_found += n_found
         if n_found == 0:
             return self._version()
@@ -137,25 +148,32 @@ class StreamingIngestor:
         # NULL urls into ONE partition and keeps one row, which would
         # silently discard every other failed row in the batch instead
         # of recording it
-        bad = batch.where(F.col("url").isNull())
-        n_bad = bad.count()
         if n_bad:
             self.metrics.docs_failed += n_bad
-            (bad.withColumn("error", F.lit("null url"))
+            (batch.where(F.col("url").isNull())
+                .withColumn("error", F.lit("null url"))
                 .write.mode("append").parquet(self.quarantine_path))
         good = dedup_last_wins(batch.where(F.col("url").isNotNull()))
         if self.transform is not None:
             good = self.transform(good)
-        docs = (self.url_ids.assign(good)
-                .select("doc_id", F.coalesce("text", F.lit("")).alias("text")))
-        v = self._merge_docs(docs)
-        if self.compact_every and \
-                self.metrics.batches % self.compact_every == 0 and \
-                hasattr(self.store, "compact"):
-            v = self.store.compact()
-        # indexed = docs that actually entered the index: empty-text rows
-        # are tombstones (deletes), not indexed documents
-        self.metrics.docs_indexed += docs.where(F.length("text") > 0).count()
+        good = good.persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            docs = (self.url_ids.assign(good)
+                    .select("doc_id",
+                            F.coalesce("text", F.lit("")).alias("text")))
+            v = self._merge_docs(docs)
+            if self.compact_every and \
+                    self.metrics.batches % self.compact_every == 0 and \
+                    hasattr(self.store, "compact"):
+                v = self.store.compact()
+            # indexed = docs that actually entered the index: empty-text
+            # rows are tombstones (deletes), not indexed documents.
+            # assign() gives each row one id, so the pinned rows count
+            # the same docs
+            self.metrics.docs_indexed += good.agg(F.count_if(
+                F.coalesce("text", F.lit("")) != "")).first()[0]
+        finally:
+            good.unpersist()
         self.metrics.versions.append(v)
         return v
 
