@@ -278,3 +278,34 @@ def test_upsert_one_cogroup_no_python_udf(spark, tmp_path):
     tree = p.split("\n\n")[0].split("== Initial Plan ==")[0]
     assert tree.count("FlatMapCoGroupsInPandas") == 1, p
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p, p
+
+
+PYTHON_NODES = ("FlatMapCoGroupsInPandas", "MapInPandas", "ArrowEvalPython",
+                "BatchEvalPython")
+
+
+def test_prepared_bm25_scores_in_catalyst(spark):
+    """A prepared SegmentIndex scores from its cached posting frame: the
+    plans above the cache hold no Python node, single or batched, and a
+    single query has no Exchange (the cache's partitioning serves the
+    per-doc aggregate) and runs exactly one job."""
+    from textindexing_spark.operators.bm25 import build_segments_from_docs
+    from tests.test_wand import _jobs_run
+
+    docs = spark.createDataFrame(
+        [(i, f"w{i % 5} w{i % 3} common") for i in range(40)],
+        "doc_id bigint, text string")
+    seg = build_segments_from_docs(spark, docs, IndexConfig(block_size=16),
+                                   n_shards=4)
+    seg.prepare_for_queries(query_groups=2)
+    single = seg.search_bm25("w1 w2", 5)
+    many = seg.search_bm25_many({"a": "w1 w2", "b": "common w0"}, 5,
+                                after={"b": (0.5, 3)})
+    for df in (single, many):
+        # the cached frame's own build plan prints below its relation
+        top = _plan(df).split("InMemoryRelation")[0]
+        assert "InMemoryTableScan" in top, top
+        for node in PYTHON_NODES:
+            assert node not in top, (node, top)
+    assert "Exchange" not in _plan(single).split("InMemoryRelation")[0]
+    assert _jobs_run(spark, single.collect) == 1

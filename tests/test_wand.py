@@ -592,6 +592,103 @@ def test_rare_term_shard_pruning(spark, corpus, tmp_path):
         seg2.search_bm25("word1 zzrareterm", 10).collect()]
 
 
+@pytest.fixture(scope="module")
+def snapshots(spark, corpus):
+    """Two cold snapshots: a 4-shard index with one rare term, and what
+    an upsert with deletes, a recrawl and new docs leaves of it."""
+    from textindexing_spark.operators.bm25 import build_segments_from_docs
+
+    cfg = IndexConfig(block_size=16)
+    rows = list(corpus[:200]) + [(9001, "zzrareterm word1")]
+    schema = "doc_id bigint, text string"
+    base = build_segments_from_docs(
+        spark, spark.createDataFrame(rows, schema), cfg, n_shards=4)
+    upd = base.upsert(spark.createDataFrame(
+        [(0, ""), (1, ""), (2, "word1 word7 word7 fresh"),
+         (9002, "zzrareterm word7")], schema))
+    return {"base": base, "upserted": upd}
+
+
+# (query, pages compared): a head-term query, a rare-term query that
+# prunes shards and one with an absent term
+PAGED = [("word1 word7", 3), ("zzrareterm", 2),
+         ("zzabsent word2 word3", 3)]
+
+
+def _pages(search, q, k, n):
+    out, after = [], None
+    for _ in range(n):
+        rows = search(q, k, after=after).collect()
+        out.append([(r.doc_id, round(r.score, 9)) for r in rows])
+        if not rows:
+            break
+        after = rows[-1]
+    return out
+
+
+def _by_query(rows):
+    out = {}
+    for r in rows:
+        out.setdefault(r.query_id, []).append((r.doc_id, round(r.score, 9)))
+    return out
+
+
+def _batch_pages(seg, texts, k):
+    """Page 1 of a batch, then page 2 through per-query cursors (one
+    query left without a cursor, so it returns page 1 again)."""
+    page1 = seg.search_bm25_many(texts, k).collect()
+    last = {}
+    for r in page1:
+        last[r.query_id] = r
+    cursors = {q: last[q] for q in list(last)[:-1]}
+    page2 = seg.search_bm25_many(texts, k, after=cursors).collect()
+    return _by_query(page1), _by_query(page2)
+
+
+BATCH_INT = {0: "word1 word7", 7: "zzrareterm", 9: "word2 word3 word11",
+             12: "zzabsent"}
+BATCH_STR = {"a": "word0 word4", "b": "zzabsent word9", "c": "word1"}
+
+
+@pytest.fixture(scope="module")
+def cold_answers(snapshots):
+    """Each snapshot's unprepared (block-max WAND) answers, computed once
+    for every query_groups case."""
+    return {name: {"paged": {q: _pages(seg.search_bm25, q, 4, n)
+                             for q, n in PAGED},
+                   "int": _batch_pages(seg, BATCH_INT, 3),
+                   "str": _batch_pages(seg, BATCH_STR, 3)}
+            for name, seg in snapshots.items()}
+
+
+@pytest.mark.parametrize("groups", [None, 2, 4])
+def test_prepared_matches_cold_wand(snapshots, cold_answers, groups):
+    """A prepared session (exhaustive Catalyst scoring over the decoded
+    posting cache) is rank-identical to block-max WAND on the same cold
+    snapshot: keyset pages 1-3, batches with int and str ids and
+    per-query cursors, absent terms, a shard-pruning rare-term query,
+    and an index prepared after an upsert with deletes."""
+    import copy
+
+    for name, cold in snapshots.items():
+        want = cold_answers[name]
+        hot = copy.copy(cold).prepare_for_queries(query_groups=groups)
+        assert hot._candidate_shards(["zzrareterm"]) is not None
+        assert len(hot._candidate_shards(["zzrareterm"])) < 4
+        for q, n in PAGED:
+            assert _pages(hot.search_bm25, q, 4, n) == want["paged"][q], (
+                name, q)
+        assert _batch_pages(hot, BATCH_INT, 3) == want["int"], name
+        assert _batch_pages(hot, BATCH_STR, 3) == want["str"], name
+        typed = hot.search_bm25_many(BATCH_INT, 3)
+        assert dict(typed.dtypes)["query_id"] == "bigint"
+        assert _jobs_run(hot.spark, lambda: hot.search_bm25(
+            "zzabsent qqnothing", 5).collect()) == 0
+        assert _jobs_run(hot.spark, lambda: hot.search_bm25_many(
+            ["zzabsent", "qqnothing"], 5).collect()) == 0
+        hot._postings.unpersist()
+
+
 def test_segment_store_expire(spark, corpus, tmp_path):
     """expire() drops old self-contained segment versions; the kept
     latest stays fully queryable."""

@@ -1,17 +1,29 @@
-"""BM25 top-k over compressed index segments with block-max WAND pruning.
+"""BM25 top-k over compressed, document-sharded index segments.
 
 This is the engine's scale path for ranked retrieval (SURVEY.md section
-7.2 M4/M5) — the part Catalyst has no primitive for, implemented as
-explicit dataflow:
+7.2 M4/M5). A query is answered one of two ways:
+
+- a **prepared serving session** (``prepare_for_queries``) decodes the
+  index ONCE into a cached Catalyst posting frame (shard, term, doc_id,
+  w, _qg), where w is the posting's whole BM25 contribution
+  idf(df) * partial(tf, dl), fixed for a snapshot. A query is then a
+  term filter, a hash aggregate per doc and a TakeOrderedAndProject —
+  exhaustive scoring with no Python stage and no exchange.
+- a **cold read** (a loaded or freshly built index) runs block-max WAND
+  over the varbyte blobs in one Python task per shard.
+
+Layout and the cold path:
 
 - the index is **document-sharded**: shard = pmod(murmur3(doc_id), S),
   the routing of ``repartition(S, doc_id)``. Every shard holds the
   varbyte-compressed postings of every term for its docs plus those
   docs' lengths — so a query evaluates shard-locally with NO join and
-  NO shuffle of postings: one mapInPandas-style task per shard, then a
-  tiny distributed top-k reduce (orderBy+limit = TakeOrderedAndProject
+  NO shuffle of postings: one cogroup task per shard, then a tiny
+  distributed top-k reduce (orderBy+limit = TakeOrderedAndProject
   over <= S*k rows). One shard kernel writes every segment row: both
-  build fronts (raw docs, counted tokens), upsert and reshard.
+  build fronts (raw docs, counted tokens), upsert and reshard, each
+  encoding a task's posting lists in one batched pass
+  (``codec.encode_lists``).
 - the shard-rewrite kernels (upsert merge, reshard split/coalesce) run
   one shard per task: ``by_shard_task`` keys shard s with the BIGINT
   that Spark's HashPartitioning sends to partition s
@@ -29,8 +41,8 @@ explicit dataflow:
   non-pivot terms.
 
 Correctness contract: identical top-k doc ids and scores (to float
-addition-order noise) as the pure-Catalyst ``Index.search_bm25`` — tested
-in tests/test_wand.py.
+addition-order noise) across the prepared path, the cold WAND path and
+the pure-Catalyst ``Index.search_bm25`` — tested in tests/test_wand.py.
 """
 
 from __future__ import annotations
@@ -98,55 +110,12 @@ def _bm25_partial(tf, dl, k1: float, b: float, avgdl: float):
     return (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * dl / avgdl))
 
 
-def _decoded_doc_table(token: str, shard: int, ids_blob, lens_blob):
-    """Executor-local LRU of decoded shard doc tables, keyed by (index
-    instance token, shard). Python workers are reused across tasks
-    (spark.python.worker.reuse), so a serving session decodes each
-    shard's packed (doc_ids, doc_lens) blobs ONCE instead of per query.
-    The token is minted per SegmentIndex instance and instances are
-    immutable snapshots (upsert returns a new index), so entries can
-    never go stale.
-
-    The LRU is bounded by BYTES, not entry count: a streaming serving
-    session queries a new index version per micro-batch, so dead
-    versions' entries accrete in long-lived workers — with large
-    shards, an entry-count cap would let the cache grow to many GB
-    before evicting anything. Budget via SPARK_GRAFT_DOC_CACHE_MB
-    (default 512 MB per worker)."""
-    key = (token, int(shard))
-    hit = _DOC_TABLE_CACHE.get(key)
-    if hit is None:
-        hit = (_unpack(ids_blob), _unpack(lens_blob))
-        _DOC_TABLE_CACHE[key] = hit
-        global _DOC_TABLE_CACHE_BYTES
-        _DOC_TABLE_CACHE_BYTES += hit[0].nbytes + hit[1].nbytes
-        while (_DOC_TABLE_CACHE_BYTES > _DOC_TABLE_CACHE_MAX_BYTES
-               and len(_DOC_TABLE_CACHE) > 1):
-            _, old = _DOC_TABLE_CACHE.popitem(last=False)
-            _DOC_TABLE_CACHE_BYTES -= old[0].nbytes + old[1].nbytes
-    else:
-        _DOC_TABLE_CACHE.move_to_end(key)
-    return hit
-
-
-import os as _os  # noqa: E402
-from collections import OrderedDict  # noqa: E402
-
-_DOC_TABLE_CACHE: OrderedDict = OrderedDict()
-_DOC_TABLE_CACHE_BYTES = 0
-_DOC_TABLE_CACHE_MAX_BYTES = int(_os.environ.get(
-    "SPARK_GRAFT_DOC_CACHE_MB", "512")) * 1024 * 1024
-
-
 class SegmentIndex:
     """Compressed, document-sharded inverted index for ranked retrieval."""
 
     def __init__(self, spark, segments: DataFrame, shard_docs: DataFrame,
                  term_stats: DataFrame, n_docs: int, avgdl: float,
                  cfg: IndexConfig, n_shards: int | None = None):
-        import uuid
-
-        self._serve_token = uuid.uuid4().hex
         self.spark = spark
         self.segments = segments
         self.shard_docs = shard_docs
@@ -164,67 +133,70 @@ class SegmentIndex:
         self.term_stats = self.term_stats.cache()
         return self
 
-    _query_groups: int | None = None
+    _postings = None  # prepared serving session's cached posting frame
+    _groups = 0       # its partition count G
 
     def prepare_for_queries(self,
                             query_groups: int | None = None,
                             prefetch_stats: int | None = 100_000
                             ) -> "SegmentIndex":
-        """Pin the query-SERVING layout: both cogroup sides repartitioned
-        on the query grouping key and cached (materialized now), so every
-        query job starts from in-memory clustered data instead of
-        re-scanning and re-shuffling parquet — measured ~40% per-query
-        p50 cut at 64 shards. ``query_groups`` additionally coalesces
-        shards into G tasks per query (each task runs WAND over several
-        shards): at small k the per-task scheduling + Python round-trip
-        dominates latency, so an interactive session wants G ≈ cores,
-        while shard count stays sized for build/upsert parallelism.
-        Call once on a long-lived query session (the CLI/server mode);
-        batch/one-shot jobs don't need it.
+        """Pin the query-SERVING layout: decode the index ONCE into a
+        cached Catalyst posting frame (shard, term, doc_id, w, _qg) that
+        every later ``search_bm25`` / ``search_bm25_many`` on this
+        instance scores from, with no Python stage. ``w`` is the
+        posting's whole BM25 contribution idf(df) * partial(tf, dl),
+        fixed for a snapshot, so a query is a term filter, a per-doc sum
+        and a top-k (exhaustive scoring: with the postings in memory,
+        that beats WAND's per-document Python loop).
+
+        The frame has ``query_groups`` partitions (G; default
+        ``n_shards``), partition t holding the shards s with
+        pmod(s, G) = t, sorted by (term, doc_id) inside. A query's
+        per-doc aggregate groups by (_qg, doc_id), which that hash
+        partitioning already satisfies: no exchange, one job, the sum
+        run in one task in cache order (a keyset cursor's next page
+        recomputes bit-identical scores). At small k per-task
+        scheduling dominates latency, so an interactive session wants
+        G ≈ cores, while the shard count stays sized for build/upsert
+        parallelism. Call once on a long-lived query session (the
+        CLI/server mode); batch/one-shot jobs don't need it.
+
+        Memory: the cache holds one decoded row per posting (an int,
+        the term string, a long, a double and a long before Spark's
+        in-memory columnar compression) in place of the varbyte blobs,
+        so it grows with the posting count rather than the compressed
+        bytes and needs executor storage memory to match (what does not
+        fit spills to local disk). That is the price of scoring without
+        a decode per query. The segment tables themselves are not
+        cached.
 
         ``prefetch_stats`` warms the driver-side term-df cache with the
         top-N terms by df (the hot dictionary — a few MB at N=100k):
         a first-time query over prefetched terms skips its stats-lookup
-        job, going straight to the WAND cogroup. When the WHOLE
+        job, going straight to the scoring job. When the WHOLE
         dictionary fits the budget, the stats job disappears for every
         query, including absent-term ones (a miss then proves df=0)."""
-        self._query_groups = query_groups
-        if query_groups:
-            # materialize the grouping key as a COLUMN before caching
-            # and repartition on that column: the per-query cogroup
-            # groups by the very attribute the cache is partitioned on,
-            # so the zero-shuffle property holds BY CONSTRUCTION.
-            # (Measured: Catalyst's alias-aware output-partitioning
-            # match elided the exchange for the old re-derived-pmod
-            # form too — 0 ENSURE_REQUIREMENTS exchanges either way —
-            # but that elision depends on expression canonicalization;
-            # keying the cache on a real column makes the contract
-            # robust to plan changes rather than optimizer-dependent.)
-            key = F.pmod(F.col("shard"), F.lit(query_groups)).cast("int")
-            self._serve_seg = (self.segments.withColumn("_qg", key)
-                               .repartition(query_groups, F.col("_qg"))
-                               .cache())
-            self._serve_docs = (self.shard_docs.withColumn("_qg", key)
-                                .repartition(query_groups, F.col("_qg"))
-                                .cache())
-            # plain views share the serving cache (projection over the
-            # InMemoryRelation), so save()/upsert() etc. stay cache-backed
-            self.segments = self._serve_seg.drop("_qg")
-            self.shard_docs = self._serve_docs.drop("_qg")
-            self._serve_seg.count()
-            self._serve_docs.count()
-        else:
-            # per-shard grouping: repartition by the shard attribute
-            # itself — the cogroup's groupby("shard") matches it
-            # directly, so this layout is already exchange-free
-            n = self.n_shards or 64
-            self.segments = (self.segments
-                             .repartition(n, F.col("shard")).cache())
-            self.shard_docs = (self.shard_docs
-                               .repartition(n, F.col("shard")).cache())
-            self.segments.count()
-            self.shard_docs.count()
+        g = int(query_groups or self.n_shards or 64)
         self.term_stats = self.term_stats.cache()
+        k1, b, avgdl = self.cfg.bm25.k1, self.cfg.bm25.b, self.avgdl
+        df = F.col("df")
+        idf = F.log(1.0 + (F.lit(self.n_docs) - df + 0.5) / (df + 0.5))
+        w = idf * _bm25_partial(F.col("tf").cast("double"),
+                                F.col("dl").cast("double"), k1, b, avgdl)
+        decoded = (by_shard_task(self._as_fused(), self.n_shards or g)
+                   .applyInPandas(_decode_postings, "shard int, term "
+                                  "string, doc_id bigint, tf bigint, "
+                                  "dl bigint"))
+        self._postings = (
+            decoded.join(F.broadcast(self.term_stats.select("term", "df")),
+                         "term")
+            .select("shard", "term", "doc_id", w.alias("w"),
+                    _task_key(g).alias("_qg"))
+            .repartition(g, "_qg")
+            .sortWithinPartitions("term", "doc_id")
+            .cache())
+        self._postings.count()
+        self._groups = g
         if prefetch_stats:
             if self._df_cache is None:
                 self._df_cache = {}
@@ -248,52 +220,11 @@ class SegmentIndex:
             self._stats_complete = len(rows) < int(prefetch_stats)
         return self
 
-    _serve_seg = None
-    _serve_docs = None
     _stats_complete = False
-
-    def _serving_frames(self) -> tuple[DataFrame, DataFrame]:
-        """(segments, shard_docs) for the WAND cogroup: the
-        ``_qg``-keyed cached frames in a serving session, else the plain
-        tables."""
-        if self._query_groups and self._serve_seg is not None:
-            return self._serve_seg, self._serve_docs
-        return self.segments, self.shard_docs
-
-    def _prune_shards(self, seg_q: DataFrame, docs_side: DataFrame,
-                      terms) -> tuple[DataFrame, DataFrame]:
-        """Rare-term shard pruning: restrict BOTH cogroup sides to the
-        shards containing >= 1 query term. On a parquet-backed index the
-        In-filter pushes into both scans (only candidate shards' posting
-        and doc-table rows are read or shuffled); on a prepared serving
-        session it additionally filters the ``_qg`` partition column so
-        the in-memory scan skips whole cached batches. Exact by
-        construction — a doc can only score in a shard holding one of
-        its terms (see _candidate_shards). No-op (None) for queries
-        containing a term present in every shard."""
-        cand = self._candidate_shards(terms)
-        if cand is None:
-            return seg_q, docs_side
-        seg_q = seg_q.where(F.col("shard").isin(cand))
-        docs_side = docs_side.where(F.col("shard").isin(cand))
-        if self._query_groups:
-            groups = sorted({s % self._query_groups for s in cand})
-            seg_q = seg_q.where(F.col("_qg").isin(groups))
-            docs_side = docs_side.where(F.col("_qg").isin(groups))
-        return seg_q, docs_side
-
-    def _cogroup_by_query_key(self, seg_q: DataFrame,
-                              docs_side: DataFrame):
-        """Group both WAND sides by the query key: per shard, or the
-        pre-partitioned ``_qg`` column when a serving session coalesced
-        tasks (zero-shuffle — see prepare_for_queries)."""
-        if self._query_groups:
-            return seg_q.groupby("_qg").cogroup(docs_side.groupby("_qg"))
-        return seg_q.groupby("shard").cogroup(docs_side.groupby("shard"))
 
     def unpersist(self) -> None:
         for df in (self.segments, self.shard_docs, self.term_stats,
-                   self._serve_seg, self._serve_docs, self._fused):
+                   self._postings, self._fused):
             if df is not None:
                 try:
                     df.unpersist()
@@ -682,115 +613,174 @@ class SegmentIndex:
     def idf(self, df_t: int) -> float:
         return math.log(1.0 + (self.n_docs - df_t + 0.5) / (df_t + 0.5))
 
-    def _wand_per_shard(self, queries: dict, id_type: str, k: int,
-                        prune: bool, cursors: dict) -> DataFrame | None:
-        """The WAND kernel under ``search_bm25`` (a batch of one) and
-        ``search_bm25_many``: one cogroup pass where each task decodes
-        its shards' doc tables once and runs block-max WAND for every
-        query of ``queries`` ({query_id: text}) against them. Returns
-        the per-shard top-k (query_id, doc_id, score) rows for the
-        caller's global reduce, or None — before any job — when no
-        query has a term in the index. ``cursors``: {query_id:
-        (score, doc_id)} keyset cursors (see ``_wand_shard``)."""
-        from textindexing_spark._pkg import ensure_shipped
+    def _candidates(self, queries: dict, id_type: str, k: int,
+                    prune: bool, cursors: dict) -> DataFrame | None:
+        """The scoring pass under ``search_bm25`` (a batch of one) and
+        ``search_bm25_many``: (query_id, doc_id, score) candidate rows
+        for the caller's global top-k reduce, every row ranked after its
+        query's keyset cursor (``cursors``: {query_id: (score,
+        doc_id)}). A prepared session scores from its posting cache
+        (``_prepared_scores``), any other index runs block-max WAND per
+        shard (``_wand_per_shard``). None — before any job — when no
+        query has a term in the index."""
         from textindexing_spark.functions.tokenize import tokenize_text
 
-        ensure_shipped(self.spark)
         qterms = {qid: sorted(set(tokenize_text(
                       text, self.cfg.tokenizer, self.cfg.case_insensitive)))
                   for qid, text in queries.items()}
-        all_terms = sorted({t for ts in qterms.values() for t in ts})
-        stats = self._term_dfs(all_terms)
-        idfs_all = {t: self.idf(df_t) for t, df_t in stats.items()}
-        per_query = {qid: {t: idfs_all[t] for t in ts if t in idfs_all}
-                     for qid, ts in qterms.items()}
-        per_query = {qid: d for qid, d in per_query.items() if d}
-        if not per_query:
+        stats = self._term_dfs(sorted({t for ts in qterms.values()
+                                       for t in ts}))
+        qterms = {qid: [t for t in ts if t in stats]
+                  for qid, ts in qterms.items()}
+        qterms = {qid: ts for qid, ts in qterms.items() if ts}
+        if not qterms:
             return None
+        cursors = {q: c for q, c in cursors.items() if c is not None}
+        if self._postings is not None:
+            return self._prepared_scores(qterms, id_type, cursors)
+        return self._wand_per_shard(qterms, stats, id_type, k, prune,
+                                    cursors)
+
+    def _prepared_scores(self, qterms: dict, id_type: str,
+                         cursors: dict) -> DataFrame:
+        """Exhaustive BM25 over the cached posting frame: filter the
+        query terms (and the candidate shards, which also skips whole
+        cached partitions through ``_qg``), sum ``w`` per (_qg, doc_id)
+        — the frame's own partitioning, so no exchange — and keep the
+        rows after each query's cursor. A batch maps every term to the
+        ids of the queries holding it with ONE literal map and explodes
+        it before the sum; a single query needs no map."""
+        terms = sorted({t for ts in qterms.values() for t in ts})
+        frame = self._postings.where(F.col("term").isin(terms))
+        cand = self._candidate_shards(terms)
+        if cand is not None:
+            keys = codec.placement_keys(self._groups)
+            frame = frame.where(
+                F.col("shard").isin(cand)
+                & F.col("_qg").isin(sorted({int(keys[s % self._groups])
+                                            for s in cand})))
+        if len(qterms) == 1:
+            qid = F.lit(next(iter(qterms))).cast(id_type)
+            keys = ["_qg", "doc_id"]
+        else:
+            by_term: dict = {}
+            for q, ts in qterms.items():
+                for t in ts:
+                    by_term.setdefault(t, []).append(q)
+            qmap = F.create_map(*[c for t, qs in by_term.items() for c in (
+                F.lit(t), F.array(*map(F.lit, qs)).cast(
+                    f"array<{id_type}>"))])
+            frame = frame.withColumn("query_id",
+                                     F.explode(qmap[F.col("term")]))
+            qid = F.col("query_id")
+            keys = ["query_id", "_qg", "doc_id"]
+        scored = (frame.groupBy(*keys).agg(F.sum("w").alias("score"))
+                  .select(qid.alias("query_id"), "doc_id", "score"))
+        if cursors:
+            score, doc = F.col("score"), F.col("doc_id")
+            keep = ~F.col("query_id").isin(list(cursors))
+            for q, (s, d) in cursors.items():
+                keep = keep | ((F.col("query_id") == F.lit(q))
+                               & ((score < F.lit(s))
+                                  | ((score == F.lit(s))
+                                     & (doc > F.lit(d)))))
+            scored = scored.where(keep)
+        return scored
+
+    def _wand_per_shard(self, qterms: dict, stats: dict, id_type: str,
+                        k: int, prune: bool, cursors: dict) -> DataFrame:
+        """The cold-read WAND kernel: one cogroup task per shard decodes
+        the shard's doc table and runs block-max WAND for every query of
+        ``qterms`` ({query_id: [terms with df > 0]}) against it,
+        returning the shard's top-k per query after its cursor (see
+        ``_wand_shard``)."""
+        from textindexing_spark._pkg import ensure_shipped
+
+        ensure_shipped(self.spark)
+        idfs_all = {t: self.idf(df_t) for t, df_t in stats.items()}
+        per_query = {qid: {t: idfs_all[t] for t in ts}
+                     for qid, ts in qterms.items()}
         k1, b, avgdl = self.cfg.bm25.k1, self.cfg.bm25.b, self.avgdl
-        token = self._serve_token
         id_dtype = "int64" if id_type == "bigint" else "object"
 
-        def group_topk(seg, docs):
+        def shard_topk(seg, docs):
             import pandas as pd
 
             out = {"query_id": [], "doc_id": [], "score": []}
             if not seg.empty and not docs.empty:
-                # the task may hold SEVERAL shards (serving sessions
-                # coalesce tasks); WAND runs shard-locally within it
-                for s, sub_shard in seg.groupby("shard"):
-                    drow = docs[docs["shard"] == s]
-                    if drow.empty:
+                dl_ids = _unpack(docs["doc_ids"].iloc[0])
+                dl_vals = _unpack(docs["doc_lens"].iloc[0])
+                for qid, idfs in per_query.items():
+                    sub = seg[seg["term"].isin(idfs)]
+                    if sub.empty:
                         continue
-                    dl_ids, dl_vals = _decoded_doc_table(
-                        token, s, drow["doc_ids"].iloc[0],
-                        drow["doc_lens"].iloc[0])
-                    for qid, idfs in per_query.items():
-                        sub = sub_shard[sub_shard["term"].isin(idfs)]
-                        if sub.empty:
-                            continue
-                        for d, sc in _wand_shard(sub, dl_ids, dl_vals,
-                                                 idfs, k, k1, b, avgdl,
-                                                 prune,
-                                                 cursors.get(qid)):
-                            out["query_id"].append(qid)
-                            out["doc_id"].append(d)
-                            out["score"].append(sc)
+                    for d, sc in _wand_shard(sub, dl_ids, dl_vals, idfs,
+                                             k, k1, b, avgdl, prune,
+                                             cursors.get(qid)):
+                        out["query_id"].append(qid)
+                        out["doc_id"].append(d)
+                        out["score"].append(sc)
             return pd.DataFrame(
                 {"query_id": pd.Series(out["query_id"], dtype=id_dtype),
                  "doc_id": pd.Series(out["doc_id"], dtype="int64"),
                  "score": pd.Series(out["score"], dtype="float64")})
 
-        seg_base, docs_base = self._serving_frames()
-        seg_q = seg_base.where(F.col("term").isin(list(idfs_all)))
+        seg_q = self.segments.where(F.col("term").isin(list(idfs_all)))
         # rebind the docs side with fresh expression ids (Alias) — both
         # sides can derive from one fused frame, and cogrouping a frame
         # with itself trips the ambiguous-self-join check
-        docs_side = docs_base.select(
-            *[F.col(c).alias(c) for c in docs_base.columns])
-        # batch-level pruning: the union over EVERY query's terms (the
-        # per-query term filter inside the task narrows further)
-        seg_q, docs_side = self._prune_shards(seg_q, docs_side,
-                                              list(idfs_all))
-        return (self._cogroup_by_query_key(seg_q, docs_side)
-                .applyInPandas(group_topk, f"query_id {id_type}, "
+        docs_side = self.shard_docs.select(
+            *[F.col(c).alias(c) for c in self.shard_docs.columns])
+        # rare-term shard pruning over the union of every query's terms:
+        # the In-filter pushes into both parquet scans, so only the
+        # candidate shards' rows are read or shuffled (exact: a doc can
+        # only score in a shard holding one of its terms)
+        cand = self._candidate_shards(list(idfs_all))
+        if cand is not None:
+            seg_q = seg_q.where(F.col("shard").isin(cand))
+            docs_side = docs_side.where(F.col("shard").isin(cand))
+        return (seg_q.groupby("shard").cogroup(docs_side.groupby("shard"))
+                .applyInPandas(shard_topk, f"query_id {id_type}, "
                                "doc_id bigint, score double"))
 
     def search_bm25(self, query_text: str, k: int | None = None,
                     prune: bool = True,
                     after: tuple[float, int] | None = None) -> DataFrame:
-        """Block-max-WAND top-k: per-shard pruned evaluation + global
-        top-k reduce. Returns (doc_id, score) ordered score desc, doc_id.
+        """BM25 top-k: returns (doc_id, score) ordered score desc,
+        doc_id. A prepared session (``prepare_for_queries``) scores
+        exhaustively in Catalyst from its posting cache, in one job with
+        no Python stage; a cold index runs block-max WAND per shard
+        (``prune=False`` turns the block-max skips off; exact either
+        way). Both end in the same global orderBy+limit.
 
         ``after=(score, doc_id)``: keyset pagination — return the top-k
         ranked strictly after the cursor (pass the previous page's last
         row VERBATIM: raw double score, not a rounded display value).
-        Deep paging stays O(k) rows per page per shard — never the
-        offset-style k·page_number — because eligibility is enforced
-        inside the shard-local WAND heap."""
+        The cursor filters each shard's (or each doc's) candidates
+        BEFORE the top-k cut, so deep paging stays O(k) rows per page
+        per shard — never the offset-style k·page_number."""
         k = k or self.cfg.default_k
-        per_shard = self._wand_per_shard({0: query_text}, "bigint", k,
-                                         prune, {0: _cursor(after)})
-        if per_shard is None:
-            return self.spark.createDataFrame(
-                [], "doc_id bigint, score double")
+        cands = self._candidates({0: query_text}, "bigint", k, prune,
+                                 {0: _cursor(after)})
+        if cands is None:
+            return _no_rows(self.spark, "doc_id bigint, score double")
         # a batch of one keeps the cheap global reduce: orderBy+limit
         # plans as TakeOrderedAndProject in the same job (the batch
         # window reduce would add jobs)
-        return (per_shard.select("doc_id", "score")
+        return (cands.select("doc_id", "score")
                 .orderBy(F.col("score").desc(), F.col("doc_id").asc())
                 .limit(k))
 
     def search_bm25_many(self, queries, k: int | None = None,
                          prune: bool = True,
                          after: dict | None = None) -> DataFrame:
-        """Batched block-max WAND: evaluate a whole QUERY SET in ONE
-        Spark job. Per-query jobs pay the full shard-task scheduling
-        cost for a handful of result rows (the round-1 query-side
-        scaling bottleneck: qps efficiency 0.61 < 0.8); batching
-        amortizes it — one cogroup pass decodes each shard's doc table
-        once and runs WAND for every query against it, then a single
-        windowed top-k per query reduces <= |Q|*k*S rows.
+        """BM25 top-k for a whole QUERY SET in one scoring pass: per-query
+        jobs would pay the full scheduling cost for a handful of result
+        rows; a batch pays it once, then a single windowed top-k per
+        query reduces the candidates. A prepared session scores every
+        query from its posting cache in Catalyst (no Python stage); a
+        cold index runs block-max WAND for every query in one cogroup
+        task per shard, decoding each shard's doc table once.
 
         ``queries``: list of query strings (each its own query_id) or a
         {query_id: query_text} dict (``query_set``). Returns (query_id,
@@ -798,21 +788,20 @@ class SegmentIndex:
         query identical to ``search_bm25``.
 
         ``after``: optional {query_id: (score, doc_id)} keyset cursors —
-        per-query pagination inside the same single batched job (queries
-        without a cursor return page 1)."""
+        per-query pagination inside the same batch (queries without a
+        cursor return page 1)."""
         from pyspark.sql import Window as W
 
         k = k or self.cfg.default_k
         queries, id_type = query_set(queries)
         cursors = {qid: _cursor(c) for qid, c in (after or {}).items()}
-        per_shard = self._wand_per_shard(queries, id_type, k, prune,
-                                         cursors)
-        if per_shard is None:
-            return self.spark.createDataFrame(
-                [], f"query_id {id_type}, doc_id bigint, score double")
+        cands = self._candidates(queries, id_type, k, prune, cursors)
+        if cands is None:
+            return _no_rows(self.spark,
+                            f"query_id {id_type}, doc_id bigint, score double")
         w = W.partitionBy("query_id").orderBy(
             F.col("score").desc(), F.col("doc_id").asc())
-        return (per_shard.withColumn("_rn", F.row_number().over(w))
+        return (cands.withColumn("_rn", F.row_number().over(w))
                 .where(F.col("_rn") <= k).drop("_rn")
                 .orderBy("query_id", F.col("score").desc(),
                          F.col("doc_id").asc()))
@@ -884,6 +873,13 @@ class _TermIter:
         self.pos += 1
         if self.pos >= len(self.docs):
             self._load(self.bi + 1)
+
+
+def _no_rows(spark, schema: str) -> DataFrame:
+    """An empty result that collects without a job: ``limit(0)`` folds
+    to an empty local relation (a bare ``createDataFrame([])`` scans a
+    parallelized RDD)."""
+    return spark.createDataFrame([], schema).limit(0)
 
 
 def _cursor(after):
@@ -1106,11 +1102,21 @@ class _FusedRows:
         for c, v in zip(_FUSED_COLS, vals):
             self.cols[c].append(v)
 
-    def postings(self, shard, term, doc, tf, dl) -> None:
-        """Encode one term's posting list (doc ids ascending)."""
-        gb, tb, blocks = codec.encode_postings(doc, tf, self.block_size, dl)
-        self._append(int(shard), term, int(doc.size), gb, tb, blocks,
-                     None, None, None)
+    def postings(self, shard, terms, doc, tf, dl, cut) -> None:
+        """Encode posting lists in one batched pass: list i is term
+        ``terms[i]`` with the postings ``[cut[i]:cut[i + 1]]`` of
+        ``doc``/``tf``/``dl`` (doc ids ascending within a list);
+        ``shard`` is one shard for all lists or one per list."""
+        gaps, tfs, blocks = codec.encode_lists(doc, tf, cut,
+                                               self.block_size, dl)
+        n = len(gaps)
+        for c, vals in (("shard", np.broadcast_to(shard, n).tolist()),
+                        ("term", list(terms)),
+                        ("n_docs", np.diff(cut).tolist()),
+                        ("gaps", gaps), ("tfs", tfs), ("blocks", blocks),
+                        ("doc_ids", [None] * n), ("doc_lens", [None] * n),
+                        ("sum_dl", [None] * n)):
+            self.cols[c].extend(vals)
 
     def passthrough(self, rows) -> None:
         """Re-emit encoded fused rows verbatim (no decode)."""
@@ -1158,6 +1164,29 @@ def _unpack_lists(rows):
     return doc, tfs, cut
 
 
+def _decode_postings(pdf):
+    """applyInPandas fn over fused rows (one shard per group, though any
+    set of whole shards works): every posting as (shard, term, doc_id,
+    tf, dl) — the input of the prepared serving cache. A doc lives in
+    exactly one shard, so one doc table sorted across the group's
+    summary rows gives every posting's length."""
+    import pandas as pd
+
+    docs = pdf[pdf["term"].isna()]
+    terms = pdf[pdf["term"].notna()]
+    ids = np.concatenate([_unpack(b) for b in docs["doc_ids"]])
+    lens = np.concatenate([_unpack(b) for b in docs["doc_lens"]])
+    o = np.argsort(ids)
+    ids, lens = ids[o], lens[o]
+    doc, tf, cut = _unpack_lists(terms)
+    n = np.diff(cut)
+    return pd.DataFrame({
+        "shard": np.repeat(terms["shard"].to_numpy(np.int32), n),
+        "term": np.repeat(terms["term"].to_numpy(), n),
+        "doc_id": doc, "tf": tf,
+        "dl": lens[np.searchsorted(ids, doc)]})
+
+
 class _ShardBuffer:
     """One doc shard's rows as a build task reads them: (doc, len)
     entries, and (doc, term code, tf) triples over one shard-local
@@ -1193,20 +1222,21 @@ class _ShardBuffer:
         first = np.flatnonzero(np.r_[True, ids[1:] != ids[:-1]])
         d_ids, d_lens = ids[first], np.add.reduceat(lens, first)
         if self.p_doc:
-            terms = np.array(list(self.vocab), dtype=object)
-            doc = np.concatenate(self.p_doc)
-            code = np.concatenate(self.p_code)
-            tf = np.concatenate(self.p_tf)
-            order = np.lexsort((doc, code))
-            doc, code, tf = doc[order], code[order], tf[order]
-            dl = d_lens[np.searchsorted(d_ids, doc)]
-            cut = np.append(np.flatnonzero(np.r_[True,
-                                                 code[1:] != code[:-1]]),
-                            code.size)
-            for s, e in zip(cut[:-1], cut[1:]):
-                out.postings(shard, terms[code[s]], doc[s:e], tf[s:e],
-                             dl[s:e])
+            _emit_by_code(out, shard,
+                          np.array(list(self.vocab), dtype=object),
+                          np.concatenate(self.p_code),
+                          np.concatenate(self.p_doc),
+                          np.concatenate(self.p_tf), d_ids, d_lens)
         out.summary(shard, d_ids, d_lens)
+
+
+def _runs(key: np.ndarray) -> np.ndarray:
+    """Cut points of the runs of equal values in ``key`` (with 0 and
+    key.size at the ends): run i is ``[cut[i]:cut[i + 1]]``."""
+    if not key.size:
+        return np.zeros(1, dtype=np.int64)
+    return np.append(np.flatnonzero(np.r_[True, key[1:] != key[:-1]]),
+                     key.size)
 
 
 def _by_shard(pdf, id_col: str, n_shards: int):
@@ -1239,11 +1269,16 @@ def by_shard_task(frame: DataFrame, n: int):
     exchange is that repartition. Every group holds one shard when
     shards are below ``n``; kernels read it from the ``shard`` column
     and get ``_task`` as an extra input column."""
-    keys = F.array(*[F.lit(int(k)) for k in codec.placement_keys(n)])
-    task = F.element_at(keys.cast("array<bigint>"),
-                        F.pmod(F.col("shard"), F.lit(n)) + 1)
-    return (frame.withColumn(_TASK, task)
+    return (frame.withColumn(_TASK, _task_key(n))
             .repartition(n, _TASK).groupby(_TASK))
+
+
+def _task_key(n: int):
+    """The BIGINT column that ``repartition(n, it)`` sends to partition
+    pmod(shard, n): ``codec.placement_keys(n)[pmod(shard, n)]``."""
+    keys = F.array(*[F.lit(int(k)) for k in codec.placement_keys(n)])
+    return F.element_at(keys.cast("array<bigint>"),
+                        F.pmod(F.col("shard"), F.lit(n)) + 1)
 
 
 def _write_shards(bufs: dict, block_size: int):
@@ -1338,6 +1373,18 @@ def _token_encoder(cfg: IndexConfig, n_shards: int):
     return encode_partition
 
 
+def _emit_by_code(out: _FusedRows, shard: int, names, pcode, doc, tf,
+                  ids, lens) -> None:
+    """Encode one shard's postings keyed by term code (``names[code]``
+    is the term): one (code, doc) sort, one batched encode, each
+    posting's dl looked up in the shard's sorted doc table."""
+    o = np.lexsort((doc, pcode))
+    doc, tf, pcode = doc[o], tf[o], pcode[o]
+    cut = _runs(pcode)
+    out.postings(shard, names[pcode[cut[:-1]]], doc, tf,
+                 lens[np.searchsorted(ids, doc)], cut)
+
+
 def _merge_shard_factory(cfg: IndexConfig):
     """cogroup applyInPandas fn: (existing fused rows, delta fused rows)
     of ONE shard -> merged fused rows. Upsert semantics ≙ the reference's
@@ -1352,6 +1399,8 @@ def _merge_shard_factory(cfg: IndexConfig):
     block_size = cfg.block_size
 
     def merge(left, right):
+        import pandas as pd
+
         if right.empty:
             return left[_FUSED_COLS]  # shard untouched by this batch
         shard = int(right["shard"].iloc[0])
@@ -1376,36 +1425,29 @@ def _merge_shard_factory(cfg: IndexConfig):
         rterms = right[right["term"].notna()]
         doc_l, tf_l, cut_l = _unpack_lists(lterms)
         doc_r, tf_r, cut_r = _unpack_lists(rterms)
-        rpos = {t: j for j, t in enumerate(rterms["term"])}
         # lists holding a replaced/deleted doc, or receiving delta docs
         gone = np.isin(doc_l, d_ids_r)
         n_gone = np.zeros(gone.size + 1, dtype=np.int64)
         np.cumsum(gone, out=n_gone[1:])
         redo = ((n_gone[cut_l[1:]] > n_gone[cut_l[:-1]])
-                | lterms["term"].isin(list(rpos)).to_numpy())
+                | lterms["term"].isin(rterms["term"]).to_numpy())
         out = _FusedRows(block_size)
         out.passthrough(lterms[~redo])
-
-        def emit(term, doc, tf):
-            out.postings(shard, term, doc, tf,
-                         lens[np.searchsorted(ids, doc)])
-
-        lnames = lterms["term"].to_numpy()
-        for i in np.flatnonzero(redo):
-            s, e = cut_l[i], cut_l[i + 1]
-            live = ~gone[s:e]
-            doc, tf = doc_l[s:e][live], tf_l[s:e][live]
-            j = rpos.pop(lnames[i], None)
-            if j is not None:
-                doc = np.concatenate([doc, doc_r[cut_r[j]:cut_r[j + 1]]])
-                tf = np.concatenate([tf, tf_r[cut_r[j]:cut_r[j + 1]]])
-                o = np.argsort(doc)
-                doc, tf = doc[o], tf[o]
-            if doc.size:
-                emit(lnames[i], doc, tf)
-        for term, j in rpos.items():  # terms new to this shard
-            emit(term, doc_r[cut_r[j]:cut_r[j + 1]],
-                 tf_r[cut_r[j]:cut_r[j + 1]])
+        # the re-encoded lists: every redone resident list minus its
+        # gone docs, plus the delta lists, keyed by one term code (redone
+        # lists first, then terms new to this shard) and sorted by
+        # (code, doc) — a doc is never on both sides
+        code, names = pd.factorize(np.concatenate(
+            [lterms["term"].to_numpy()[redo], rterms["term"].to_numpy()]))
+        n_l, n_redo = np.diff(cut_l), int(redo.sum())
+        lcode = np.full(redo.size, -1, dtype=np.int64)
+        lcode[redo] = code[:n_redo]
+        live = np.repeat(redo, n_l) & ~gone
+        doc = np.concatenate([doc_l[live], doc_r])
+        tf = np.concatenate([tf_l[live], tf_r])
+        pcode = np.concatenate([np.repeat(lcode, n_l)[live],
+                                np.repeat(code[n_redo:], np.diff(cut_r))])
+        _emit_by_code(out, shard, names, pcode, doc, tf, ids, lens)
         out.summary(shard, ids, lens)
         return out.frame()
 
@@ -1428,14 +1470,18 @@ def _split_shard_factory(cfg: IndexConfig, new_n: int):
             codec.spark_hash_long(d_ids).astype(np.int64), new_n)
         out = _FusedRows(block_size)
         terms = pdf[pdf["term"].notna()]
-        doc_all, tf_all, cut = _unpack_lists(terms)
-        for i, term in enumerate(terms["term"]):
-            doc, tf = doc_all[cut[i]:cut[i + 1]], tf_all[cut[i]:cut[i + 1]]
-            pos = np.searchsorted(d_ids, doc)
-            dl, ns = d_lens[pos], child[pos]
-            for sh in np.unique(ns):
-                m = ns == sh
-                out.postings(sh, term, doc[m], tf[m], dl[m])
+        doc, tf, cut = _unpack_lists(terms)
+        pos = np.searchsorted(d_ids, doc)
+        # list i's postings go to their children in child order; a
+        # stable sort on (list, child) keeps each piece doc-sorted
+        key = (np.repeat(np.arange(len(terms)), np.diff(cut)) * new_n
+               + child[pos])
+        o = np.argsort(key, kind="stable")
+        key = key[o]
+        cut = _runs(key)
+        out.postings(key[cut[:-1]] % new_n,
+                     terms["term"].to_numpy()[key[cut[:-1]] // new_n],
+                     doc[o], tf[o], d_lens[pos][o], cut)
         for sh in np.unique(child):
             m = child == sh
             out.summary(sh, d_ids[m], d_lens[m])
@@ -1454,6 +1500,8 @@ def _coalesce_shard_factory(cfg: IndexConfig):
     block_size = cfg.block_size
 
     def coalesce(pdf):
+        import pandas as pd
+
         shard = int(pdf["shard"].iloc[0])
         summaries = pdf[pdf["term"].isna()]
         d_ids = np.concatenate([_unpack(b) for b in summaries["doc_ids"]])
@@ -1462,14 +1510,11 @@ def _coalesce_shard_factory(cfg: IndexConfig):
         d_ids, d_lens = d_ids[o], d_lens[o]
         out = _FusedRows(block_size)
         terms = pdf[pdf["term"].notna()]
-        doc_all, tf_all, cut = _unpack_lists(terms)
-        for term, rows in terms.groupby("term", sort=False).indices.items():
-            doc = np.concatenate([doc_all[cut[i]:cut[i + 1]] for i in rows])
-            tf = np.concatenate([tf_all[cut[i]:cut[i + 1]] for i in rows])
-            po = np.argsort(doc)
-            doc, tf = doc[po], tf[po]
-            out.postings(shard, term, doc, tf,
-                         d_lens[np.searchsorted(d_ids, doc)])
+        doc, tf, cut = _unpack_lists(terms)
+        # parents hold disjoint docs: one (term, doc) sort merges them
+        code, names = pd.factorize(terms["term"].to_numpy())
+        pcode = np.repeat(code, np.diff(cut))
+        _emit_by_code(out, shard, names, pcode, doc, tf, d_ids, d_lens)
         out.summary(shard, d_ids, d_lens)
         return out.frame()
 

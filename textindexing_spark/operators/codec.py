@@ -29,15 +29,20 @@ BLOCK_SIZE = 128
 
 # --- varbyte core ------------------------------------------------------------
 
+def _varbyte_sizes(vals: np.ndarray) -> np.ndarray:
+    """Bytes each uint64 value takes: 1 + floor((bit_length - 1) / 7)."""
+    nbytes = np.ones(vals.shape, dtype=np.int64)
+    for k in range(1, 10):
+        nbytes += vals >= np.uint64(1) << np.uint64(7 * k)
+    return nbytes
+
+
 def varbyte_encode(vals: np.ndarray) -> np.ndarray:
     """Encode an int64 array (all values >= 0) to a uint8 varbyte stream."""
     vals = np.asarray(vals, dtype=np.uint64)
     if vals.size == 0:
         return np.empty(0, dtype=np.uint8)
-    # bytes needed per value: 1 + floor(bit_length-1 / 7)
-    nbytes = np.ones(vals.shape, dtype=np.int64)
-    for k in range(1, 10):
-        nbytes += vals >= np.uint64(1) << np.uint64(7 * k)
+    nbytes = _varbyte_sizes(vals)
     ends = np.cumsum(nbytes)
     total = int(ends[-1])
     out = np.zeros(total, dtype=np.uint8)
@@ -97,46 +102,75 @@ def encode_postings(doc_ids: np.ndarray, tfs: np.ndarray,
     Returns (gaps_blob: bytes, tfs_blob: bytes, blocks: list[dict]).
     """
     doc_ids = np.asarray(doc_ids, dtype=np.int64)
+    cut = np.array([0, doc_ids.size], dtype=np.int64)
+    gaps, tfs, blocks = encode_lists(doc_ids, tfs, cut, block_size,
+                                     doc_lens)
+    return gaps[0], tfs[0], blocks[0]
+
+
+_BLOCK_KEYS = ("last_doc", "gap_off", "tf_off", "n", "max_tf", "min_dl")
+
+
+def encode_lists(doc_ids: np.ndarray, tfs: np.ndarray, cut: np.ndarray,
+                 block_size: int = BLOCK_SIZE,
+                 doc_lens: np.ndarray | None = None):
+    """Encode many posting lists in one pass: list i is
+    ``doc_ids[cut[i]:cut[i + 1]]`` (strictly increasing) with its tfs and
+    doc lengths. Returns ([gaps_blob], [tfs_blob], [blocks]), one entry
+    per list, each byte-identical to ``encode_postings`` of that list
+    alone. One varbyte_encode runs over every list's gaps and one over
+    every tf (per-call numpy setup, not bytes, dominates thousands of
+    short lists); blobs and block offsets are slices of the two streams
+    at cumulative byte offsets.
+
+    A block's first gap is relative to the previous block's last doc, so
+    a list's gaps are its plain diffs with the first one ``doc0 + 1``.
+    Both are array ops, which wrap mod 2^64 silently and exactly for ids
+    near the int64 extremes (a numpy scalar op would warn, or raise
+    under np.seterr(over='raise')); the wrapped gap is what decode's
+    cumsum undoes."""
+    doc_ids = np.asarray(doc_ids, dtype=np.int64)
     tfs = np.asarray(tfs, dtype=np.int64)
-    n = doc_ids.size
-    blocks = []
-    gap_parts = []
-    tf_parts = []
-    gap_off = 0
-    tf_off = 0
-    prev_last = -1
-    for s in range(0, n, block_size):
-        e = min(s + block_size, n)
-        gaps = np.empty(e - s, dtype=np.int64)
-        # first-block gap in exact Python-int modular arithmetic: ids
-        # near the int64 extremes (hash-derived ids, which the salting
-        # path anticipates) make `doc_ids[s] - prev_last` exceed int64,
-        # and a numpy SCALAR subtract warns (or raises under
-        # np.seterr(over='raise')) even though mod-2^64 wraparound is
-        # exactly what encode/decode rely on. Array diffs below wrap
-        # silently and exactly in C — only the scalar needed care.
-        first = (int(doc_ids[s]) - prev_last) % (1 << 64)
-        gaps[0] = first - (1 << 64) if first >= 1 << 63 else first
-        gaps[1:] = np.diff(doc_ids[s:e])
-        gb = varbyte_encode(gaps)
-        tb = varbyte_encode(tfs[s:e])
-        blocks.append({
-            "last_doc": int(doc_ids[e - 1]),
-            "gap_off": gap_off,
-            "tf_off": tf_off,
-            "n": e - s,
-            "max_tf": int(tfs[s:e].max()),
-            "min_dl": int(doc_lens[s:e].min()) if doc_lens is not None
-                      else 1,
-        })
-        gap_parts.append(gb)
-        tf_parts.append(tb)
-        gap_off += gb.size
-        tf_off += tb.size
-        prev_last = int(doc_ids[e - 1])
-    gaps_blob = np.concatenate(gap_parts).tobytes() if gap_parts else b""
-    tfs_blob = np.concatenate(tf_parts).tobytes() if tf_parts else b""
-    return gaps_blob, tfs_blob, blocks
+    cut = np.asarray(cut, dtype=np.int64)
+    n = np.diff(cut)
+    if doc_ids.size == 0:
+        return [b""] * n.size, [b""] * n.size, [[] for _ in n]
+    gaps = np.empty_like(doc_ids)
+    gaps[1:] = np.diff(doc_ids)
+    starts = cut[:-1][n > 0]
+    gaps[starts] = doc_ids[starts] + 1
+    gap_bytes, gap_end = _encode_stream(gaps)
+    tf_bytes, tf_end = _encode_stream(tfs)
+    # blocks: list i holds ceil(n_i / block_size) of them, tiling the
+    # concatenated postings in order
+    nb = -(-n // block_size)
+    owner = np.repeat(np.arange(n.size), nb)
+    first = np.cumsum(nb) - nb
+    b_start = cut[owner] + (np.arange(owner.size) - first[owner]) * block_size
+    b_end = np.minimum(b_start + block_size, cut[owner + 1])
+    min_dl = (np.minimum.reduceat(np.asarray(doc_lens, dtype=np.int64),
+                                  b_start) if doc_lens is not None
+              else np.ones(owner.size, dtype=np.int64))
+    cols = zip(doc_ids[b_end - 1].tolist(),
+               (gap_end[b_start] - gap_end[cut[owner]]).tolist(),
+               (tf_end[b_start] - tf_end[cut[owner]]).tolist(),
+               (b_end - b_start).tolist(),
+               np.maximum.reduceat(tfs, b_start).tolist(),
+               min_dl.tolist())
+    blocks = [dict(zip(_BLOCK_KEYS, c)) for c in cols]
+    bcut = np.append(first, owner.size).tolist()
+    gcut, tcut = gap_end[cut].tolist(), tf_end[cut].tolist()
+    return ([gap_bytes[gcut[i]:gcut[i + 1]] for i in range(n.size)],
+            [tf_bytes[tcut[i]:tcut[i + 1]] for i in range(n.size)],
+            [blocks[bcut[i]:bcut[i + 1]] for i in range(n.size)])
+
+
+def _encode_stream(vals: np.ndarray) -> tuple[bytes, np.ndarray]:
+    """varbyte bytes of ``vals`` plus the byte offset where each value
+    starts (one extra entry: the stream length)."""
+    ends = np.zeros(vals.size + 1, dtype=np.int64)
+    np.cumsum(_varbyte_sizes(vals.astype(np.uint64)), out=ends[1:])
+    return varbyte_encode(vals).tobytes(), ends
 
 
 def decode_postings(gaps_blob: bytes, tfs_blob: bytes, blocks) -> tuple:
